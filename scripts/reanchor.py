@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Control-gated bench re-anchor (round-19 verdict #3, promoting the
-hand-run reanchor_r19.sh protocol into one parameterized command).
+"""Control-gated bench re-anchor (round-19 verdict #3): the round-19
+control protocol as one parameterized command.
 
 The host shows multi-minute ambient I/O bursts that inflate spill/scan-heavy
 rows 3-5x (the r18/r19 record: s26 618->137 s, t19 180->48 s between

@@ -1,6 +1,8 @@
 package graft.sink
 
-import graft.config.SinkConfig
+import graft.config.{SinkConfig, StreamsConfig}
+import java.util.concurrent.{Callable, ExecutionException, Future, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.duration._
 
 /** The Kinesis/Firehose-shaped delivery machinery — the Spark twin of the
@@ -35,7 +37,13 @@ import scala.concurrent.duration._
   *
   * Scale: one client per executor partition ([[KinesisShapedSink.write]]) —
   * the driver never sees a record; throughput scales with partition count and
-  * the per-call cap matches the service contract.
+  * the per-call cap matches the service contract. Within one [[publish]]
+  * call the chunks run concurrently, at most [[MaxInflightCalls]] service
+  * calls at once, so one chunk's backoff does not hold back the others.
+  * Each chunk keeps its own sequential put → retry → backoff loop; no order
+  * between chunks is kept. With one chunk per call (`batch_size` 500) that
+  * loop runs alone on the caller's thread. The [[Putter]] and the
+  * [[Sleeper]] may be called from several threads at once.
   */
 object BatchPut {
 
@@ -56,12 +64,24 @@ object BatchPut {
   /** Injectable clock so specs can assert backoff without sleeping. */
   type Sleeper = FiniteDuration => Unit
 
-  /** Daemon pool bounding each service call at the config's client-op
-    * timeout. Cached threads die after 60 s idle, so a quiet executor holds
-    * none; one pool per JVM is shared by all partitions' writers. */
-  private lazy val timeoutPool = java.util.concurrent.Executors.newCachedThreadPool(
+  /** Service calls one writer keeps in flight. Both callers
+    * ([[KinesisShapedSink.write]] and the DSv2 writer) hand [[publish]] at
+    * most `MaxBatchSize` (500) records, which the default `batch_size` (50)
+    * splits into `MaxBatchSize / DefaultBatchSize` = 10 chunks: the default
+    * configuration puts all of its chunks in flight at once, while a smaller
+    * `batch_size` queues its extra chunks behind these 10 calls rather than
+    * multiplying the connections a writer opens. Records in flight stay
+    * ≤ 500 per writer either way. */
+  val MaxInflightCalls: Int = StreamsConfig.MaxBatchSize / StreamsConfig.DefaultBatchSize
+
+  /** Daemon pool running the chunk loops of [[publish]] and bounding each
+    * service call at the config's client-op timeout. Cached threads die
+    * after 60 s idle, so a quiet executor holds none; one pool per JVM is
+    * shared by all partitions' writers, and being unbounded it cannot
+    * deadlock a chunk loop waiting on its own put. */
+  private lazy val pool = java.util.concurrent.Executors.newCachedThreadPool(
     (r: Runnable) => {
-      val t = new Thread(r, "graft-put-timeout"); t.setDaemon(true); t
+      val t = new Thread(r, "graft-put"); t.setDaemon(true); t
     })
 
   /** Run one service call under `timeout` — the reference's 90 s client-op
@@ -73,8 +93,7 @@ object BatchPut {
     * blocking the Spark task forever. */
   private[sink] def putWithTimeout(putter: Putter, recs: Seq[Record],
       timeout: FiniteDuration): Seq[PutResult] = {
-    import java.util.concurrent.{Callable, ExecutionException, TimeUnit, TimeoutException}
-    val task = timeoutPool.submit(new Callable[Seq[PutResult]] {
+    val task = pool.submit(new Callable[Seq[PutResult]] {
       def call(): Seq[PutResult] = putter.put(recs)
     })
     try task.get(timeout.toMillis, TimeUnit.MILLISECONDS)
@@ -110,31 +129,63 @@ object BatchPut {
 
   /** Publish one logical batch: chunk to `cfg.batchSize`, then per chunk loop
     * put → failed subset → exponential backoff → re-put, until clean or
-    * `maxRetries` exhausted (then drop the stragglers). */
+    * `maxRetries` exhausted (then drop the stragglers). Up to
+    * [[MaxInflightCalls]] chunk loops run at once: the caller's thread runs
+    * one, pool threads the rest, each taking the next unclaimed chunk when
+    * its current one is done. An interrupt (Spark killing the task) cancels
+    * every chunk loop — each cancels its own in-flight put — and propagates
+    * with the flag restored. */
   def publish(putter: Putter, cfg: SinkConfig, records: Seq[Record],
       sleep: Sleeper = d => Thread.sleep(d.toMillis)): PublishStats = {
-    var stats = PublishStats(batch = records.size)
-    records.grouped(cfg.batchSize).foreach { chunk =>
-      var pending = chunk.toIndexedSeq
-      var attempt = 0
-      var backoff = cfg.backoffInit
-      while (pending.nonEmpty && attempt <= cfg.maxRetries) {
-        if (attempt > 0) {
-          sleep(backoff)
-          backoff = (backoff * 2).min(cfg.backoffMax)
-          stats = stats.copy(retries = stats.retries + 1)
-        }
-        stats = stats.copy(calls = stats.calls + 1)
-        val failed = // hung or failed call ⇒ retry all (timeout = total-call failure)
-          try collectFailed(pending, putWithTimeout(putter, pending, cfg.timeout))
-          catch { case scala.util.control.NonFatal(_) => pending }
-        stats = stats.copy(acked = stats.acked + (pending.size - failed.size))
-        pending = failed
-        attempt += 1
+    val chunks = records.grouped(cfg.batchSize).toIndexedSeq
+    val next = new AtomicInteger
+    def drain(): PublishStats = {
+      var stats = PublishStats()
+      var i = next.getAndIncrement()
+      while (i < chunks.size) {
+        stats += publishChunk(putter, cfg, chunks(i).toIndexedSeq, sleep)
+        i = next.getAndIncrement()
       }
-      stats = stats.copy(dropped = stats.dropped + pending.size)
+      stats
     }
-    stats
+    val helpers: Seq[Future[PublishStats]] =
+      (1 until math.min(MaxInflightCalls, chunks.size)).map(_ =>
+        pool.submit(new Callable[PublishStats] { def call(): PublishStats = drain() }))
+    try {
+      val own = drain()
+      helpers.foldLeft(own.copy(batch = records.size)) { (acc, h) =>
+        try acc + h.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+    } catch {
+      case e: Throwable =>
+        helpers.foreach(_.cancel(true))
+        if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
+        throw e
+    }
+  }
+
+  /** One chunk's loop: put → failed subset → backoff → re-put. */
+  private def publishChunk(putter: Putter, cfg: SinkConfig, chunk: IndexedSeq[Record],
+      sleep: Sleeper): PublishStats = {
+    var stats = PublishStats()
+    var pending = chunk
+    var attempt = 0
+    var backoff = cfg.backoffInit
+    while (pending.nonEmpty && attempt <= cfg.maxRetries) {
+      if (attempt > 0) {
+        sleep(backoff)
+        backoff = (backoff * 2).min(cfg.backoffMax)
+        stats = stats.copy(retries = stats.retries + 1)
+      }
+      stats = stats.copy(calls = stats.calls + 1)
+      val failed = // hung or failed call ⇒ retry all (timeout = total-call failure)
+        try collectFailed(pending, putWithTimeout(putter, pending, cfg.timeout))
+        catch { case scala.util.control.NonFatal(_) => pending }
+      stats = stats.copy(acked = stats.acked + (pending.size - failed.size))
+      pending = failed
+      attempt += 1
+    }
+    stats.copy(dropped = pending.size)
   }
 }
 

@@ -9,7 +9,9 @@ package graft.sink
   * Every delivery-semantics behavior (chunking, per-record failure zip,
   * retry, backoff, at-least-once) lives OUTSIDE the seam in [[BatchPut]] and
   * is fully tested against stubs, so a production putter only maps one
-  * request/response pair:
+  * request/response pair. `put` is called from several threads at once (a
+  * writer keeps up to [[BatchPut.MaxInflightCalls]] calls in flight), which
+  * the AWS SDK clients, being thread-safe, already allow:
   *
   * {{{
   * // Kinesis Data Streams (PutRecords, streams/client.go:155-165):

@@ -107,9 +107,13 @@ object Pipeline {
     *
     * `partitionByKey = true` hash-repartitions on the partition key before
     * the sink — the engine-side analogue of Kinesis shard routing (SURVEY
-    * §2.4 K1): all records of a key flow through one task in arrival order,
-    * reproducing per-shard ordering. Costs a shuffle; leave off when the
-    * sink's own key-hashing (the real Kinesis) is the routing authority. */
+    * §2.4 K1): all records of a key flow through one task, hence one
+    * writer. It does not keep their order: the writer's chunks are in
+    * flight concurrently, and within a chunk a failed-subset retry already
+    * sends a record after ones queued behind it (PutRecords itself promises
+    * no order across the records of one call). Costs a shuffle; leave off
+    * when the sink's own key-hashing (the real Kinesis) is the routing
+    * authority. */
   def toKinesisShapedSink(records: DataFrame, cfg: StreamsConfig,
       newPutter: () => BatchPut.Putter, checkpointDir: String,
       trigger: FiniteDuration, partitionByKey: Boolean = false): DataStreamWriter[Row] =

@@ -3,6 +3,8 @@ package graft
 import graft.config.StreamsConfig
 import graft.sink.BatchPut
 import graft.sink.BatchPut._
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 import scala.concurrent.duration._
@@ -89,7 +91,12 @@ class BatchPutSpec extends AnyFunSuite {
     val small = cfg.copy(batchSize = 3)
     val stub = new Stub()
     BatchPut.publish(stub, small, recs(10), noSleep)
-    assert(stub.calls.map(_.size) == Seq(3, 3, 3, 1))
+    // chunks go out concurrently, so compare the calls as a multiset
+    def keys(calls: Seq[Seq[Record]]) = calls.map(_.map(_.key)).sortBy(_.head)
+    assert(keys(stub.calls) == keys(recs(10).grouped(3).toSeq))
+    val sent = stub.calls.flatten.map(_.key)
+    assert(sent.sorted == recs(10).map(_.key).sorted && sent.distinct.size == 10,
+      "every record is sent exactly once")
   }
 
   test("backoff: exponential 1s -> 60s cap, slept between retries only") {
@@ -122,7 +129,6 @@ class BatchPutSpec extends AnyFunSuite {
   }
 
   test("task interrupt while blocked on a put: in-flight call cancelled, flag restored") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
     val started = new CountDownLatch(1)
     val cancelled = new CountDownLatch(1)
     val hang = new Stub() {
@@ -161,6 +167,115 @@ class BatchPutSpec extends AnyFunSuite {
     val s = BatchPut.publish(flaky, c, recs(4), noSleep)
     assert(flaky.calls.size == 2 && flaky.calls(1).size == 4)
     assert(s.acked == 4 && s.dropped == 0 && s.retries == 1)
+  }
+
+  test("bounded concurrency: chunks run at once, never more than MaxInflightCalls") {
+    val inflight = new AtomicInteger
+    val inflightMax = new AtomicInteger
+    val arrived = new CountDownLatch(BatchPut.MaxInflightCalls)
+    val overflow = new CountDownLatch(BatchPut.MaxInflightCalls + 1)
+    val release = new CountDownLatch(1)
+    val gated = new Stub() {
+      override def put(records: Seq[Record]): Seq[PutResult] = {
+        record(records)
+        inflightMax.accumulateAndGet(inflight.incrementAndGet(), math.max(_, _))
+        arrived.countDown(); overflow.countDown()
+        try { release.await(10, TimeUnit.SECONDS); ok(records) }
+        finally inflight.decrementAndGet()
+      }
+    }
+    val chunks = 3 * BatchPut.MaxInflightCalls
+    @volatile var stats: PublishStats = null
+    val worker = new Thread(() =>
+      stats = BatchPut.publish(gated, cfg.copy(batchSize = 2), recs(2 * chunks), noSleep))
+    worker.start()
+    // every allowed call is blocked in put at the same moment ...
+    assert(arrived.await(5, TimeUnit.SECONDS), "calls must run concurrently")
+    // ... and, given time to, no further one joins them
+    assert(!overflow.await(200, TimeUnit.MILLISECONDS), "more calls in flight than the bound")
+    release.countDown()
+    worker.join(10000)
+    assert(!worker.isAlive)
+    assert(inflightMax.get == BatchPut.MaxInflightCalls)
+    assert(gated.calls.size == chunks)
+    assert(stats == PublishStats(batch = 2 * chunks, acked = 2 * chunks, calls = chunks))
+  }
+
+  test("no head-of-line wait: one chunk's backoff does not delay another's acceptance") {
+    // chunk k0-k1 is throttled on its first send; chunk k2-k3 is accepted
+    val otherAcked = new CountDownLatch(1)
+    val firstSend = new AtomicBoolean(true)
+    val stub = new Stub() {
+      override def put(records: Seq[Record]): Seq[PutResult] = {
+        record(records)
+        if (records.head.key == "k2") { otherAcked.countDown(); ok(records) }
+        else if (firstSend.getAndSet(false))
+          records.map(_ => PutResult(Some("ProvisionedThroughputExceededException")))
+        else ok(records)
+      }
+    }
+    // the backoff sleep records whether the other chunk got through while
+    // this one waits; sequential chunks would leave it waiting here
+    @volatile var ackedDuringBackoff = false
+    val sleeper: Sleeper = _ => ackedDuringBackoff = otherAcked.await(5, TimeUnit.SECONDS)
+    val s = BatchPut.publish(stub, cfg.copy(batchSize = 2), recs(4), sleeper)
+    assert(ackedDuringBackoff, "the accepted chunk must not wait behind the backing-off one")
+    assert(s == PublishStats(batch = 4, acked = 4, retries = 1, calls = 3))
+  }
+
+  test("task interrupt with several chunks in flight: every put cancelled, flag restored") {
+    val chunks = 3
+    val started = new CountDownLatch(chunks)
+    val cancelled = new CountDownLatch(chunks)
+    val hang = new Stub() {
+      override def put(records: Seq[Record]): Seq[PutResult] = {
+        record(records); started.countDown()
+        try { Thread.sleep(60000); ok(records) }
+        catch { case e: InterruptedException => cancelled.countDown(); throw e }
+      }
+    }
+    @volatile var caught: Throwable = null
+    @volatile var flagRestored = false
+    val worker = new Thread(() => {
+      try BatchPut.publish(hang, cfg.copy(batchSize = 2, timeout = 10.seconds),
+        recs(2 * chunks), noSleep)
+      catch {
+        case e: InterruptedException =>
+          caught = e; flagRestored = Thread.currentThread().isInterrupted
+      }
+    }, "graft-spec-worker")
+    worker.start()
+    assert(started.await(5, TimeUnit.SECONDS), "all chunks must be in flight")
+    worker.interrupt()
+    worker.join(5000)
+    assert(!worker.isAlive, "interrupted worker must exit promptly")
+    assert(caught != null, "InterruptedException must propagate, not be swallowed")
+    assert(flagRestored, "the interrupt flag must be restored before rethrow")
+    assert(cancelled.await(5, TimeUnit.SECONDS),
+      "every in-flight put must be cancelled, not left running on the pool")
+    assert(hang.calls.size == chunks, "no chunk is re-put after the interrupt")
+  }
+
+  test("hung chunk: it times out and retries while the other chunks ack") {
+    val once = new AtomicBoolean
+    val othersAcked = new CountDownLatch(3)
+    val stub = new Stub() {
+      override def put(records: Seq[Record]): Seq[PutResult] = {
+        record(records)
+        if (records.head.key != "k0") othersAcked.countDown()
+        else if (once.compareAndSet(false, true)) Thread.sleep(60000)
+        ok(records)
+      }
+    }
+    // the hung chunk's backoff records whether the other chunks got through
+    // without it; sequential chunks would still be queued behind it here
+    @volatile var ackedWithoutIt = false
+    val sleeper: Sleeper = _ => ackedWithoutIt = othersAcked.await(5, TimeUnit.SECONDS)
+    val s = BatchPut.publish(stub, cfg.copy(batchSize = 2, timeout = 50.millis),
+      recs(8), sleeper)
+    assert(ackedWithoutIt, "the other chunks must not wait behind the hung one")
+    assert(stub.calls.count(_.head.key == "k0") == 2, "the hung chunk is re-put once")
+    assert(s == PublishStats(batch = 8, acked = 8, retries = 1, calls = 5))
   }
 
   test("collectFailed zips by index against the records actually sent") {

@@ -4,7 +4,10 @@ import graft.config.StreamsConfig
 import graft.functions.XidGen
 import graft.sink.BatchPut
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Property-based delivery/key invariants (SURVEY §5 engine test plan #2):
   * hold for ALL inputs, not just the example matrix. Spark-free — these
@@ -20,26 +23,27 @@ object PropertySpec extends Properties("graft.delivery") {
 
   property("chunks <= batch_size and everything delivers") =
     forAll(Gen.choose(0, 2000), Gen.choose(1, 500)) { (n: Int, bs: Int) =>
-      var calls = List.empty[Int]
+      // chunks are put from several threads at once
+      val calls = new ConcurrentLinkedQueue[Int]
       val putter = new BatchPut.Putter {
         def put(rs: Seq[BatchPut.Record]): Seq[BatchPut.PutResult] = {
-          calls ::= rs.size; rs.map(_ => BatchPut.PutResult(None))
+          calls.add(rs.size); rs.map(_ => BatchPut.PutResult(None))
         }
       }
       val stats = BatchPut.publish(putter, cfg(bs), recs(n), sleep = _ => ())
       Prop.all(
-        calls.forall(_ <= bs),
-        calls.sum == n,
+        calls.asScala.forall(_ <= bs),
+        calls.asScala.sum == n,
         stats.acked == n && stats.dropped == 0)
     }
 
   property("retry terminates within max_retries; still-failing rest drops") =
     forAll(Gen.choose(1, 200), Gen.choose(0, 5), Gen.choose(0, 8)) {
       (n: Int, maxRetries: Int, failFirstK: Int) =>
-        var attempts = 0
+        val attempts = new AtomicInteger
         val putter = new BatchPut.Putter {
           def put(rs: Seq[BatchPut.Record]): Seq[BatchPut.PutResult] = {
-            attempts += 1
+            attempts.incrementAndGet()
             rs.map(r => BatchPut.PutResult(
               if (r.key.stripPrefix("k").toInt < failFirstK) Some("ERR") else None))
           }
@@ -49,7 +53,41 @@ object PropertySpec extends Properties("graft.delivery") {
         Prop.all(
           stats.dropped == failing,
           stats.acked == n - failing,
-          attempts <= (if (failing > 0) maxRetries + 1 else 1))
+          attempts.get <= (if (failing > 0) maxRetries + 1 else 1))
+    }
+
+  /** Deterministic service: record `key` fails on its `attempt`-th send
+    * when a hash of (salt, key, attempt) says so, and every send is logged
+    * as (key, attempt). Attempts are counted per key, so the outcome of a
+    * send depends only on the record's own history, never on which chunk
+    * the service happened to see first. */
+  private final class KeyedFailures(salt: Int, failPct: Int) extends BatchPut.Putter {
+    private val attempts = new ConcurrentHashMap[String, Integer]
+    val sends = new ConcurrentLinkedQueue[(String, Int)]
+    def put(rs: Seq[BatchPut.Record]): Seq[BatchPut.PutResult] = rs.map { r =>
+      val attempt: Int = attempts.merge(r.key, 1, (a: Integer, b: Integer) => a + b) - 1
+      sends.add((r.key, attempt))
+      val h = (salt, r.key, attempt).##
+      BatchPut.PutResult(if (Math.floorMod(h, 100) < failPct) Some("ERR") else None)
+    }
+    def sendLog: Seq[(String, Int)] = sends.asScala.toSeq.sorted
+  }
+
+  property("concurrent publish == fold of per-chunk sequential publishes") =
+    forAll(Gen.choose(0, 500), Gen.choose(1, 500), Gen.choose(0, 5),
+        Gen.choose(0, 100), Gen.choose(0, Int.MaxValue)) {
+      (n: Int, bs: Int, maxRetries: Int, failPct: Int, salt: Int) =>
+        val c = cfg(bs, maxRetries)
+        val concurrent = new KeyedFailures(salt, failPct)
+        val stats = BatchPut.publish(concurrent, c, recs(n), sleep = _ => ())
+        // one chunk per call: publish runs its loop on this thread alone
+        val sequential = new KeyedFailures(salt, failPct)
+        val folded = recs(n).grouped(bs).foldLeft(BatchPut.PublishStats()) { (acc, chunk) =>
+          acc + BatchPut.publish(sequential, c, chunk, sleep = _ => ())
+        }
+        Prop.all(
+          (stats == folded) :| s"stats $stats != $folded",
+          (concurrent.sendLog == sequential.sendLog) :| "send multisets differ")
     }
 
   property("backoff doubles from init, monotone, capped at max") =
