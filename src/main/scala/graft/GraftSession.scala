@@ -8,6 +8,17 @@ import org.apache.spark.sql.SparkSession
   * multi-executor cluster: AQE on (runtime re-plan, skew-join splitting,
   * partition coalescing), shuffle partitions sized to the local core count
   * rather than the 200 default, and UTC so event-time semantics are stable.
+  *
+  * Streaming checkpoints are written by
+  * [[graft.streaming.LocalCheckpointFileManager]] ([[CheckpointFileManagerConf]]).
+  * Without `libhadoop`, Hadoop's local filesystem forks one `chmod` and four
+  * `readlink` processes per checkpoint-log write; a `ship` micro-batch writes
+  * three logs (offsets, commits, file-source log), so its stream thread
+  * started 15 processes per micro-batch, and `walCommit` plus
+  * `commitOffsets` took about 70 ms of a 263 ms trigger (traced benchmark
+  * run on a 4-core host). The manager writes
+  * `file:` checkpoints with `java.nio` and starts none; checkpoints on any
+  * other scheme (S3, HDFS) take Spark's own code path unchanged.
   */
 object GraftSession {
   def builder(master: String = s"local[${defaultCpus}]"): SparkSession.Builder =
@@ -21,7 +32,14 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
+      .config(CheckpointFileManagerConf._1, CheckpointFileManagerConf._2)
       .config("spark.ui.enabled", "false")
+
+  /** Spark's own setting for the streaming checkpoint file manager, and this
+    * engine's value for it (see the object scaladoc). */
+  val CheckpointFileManagerConf: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName
 
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 

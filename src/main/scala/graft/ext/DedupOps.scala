@@ -909,8 +909,9 @@ object DedupOps {
     * equality condition skips null keys), so their vectors are nulled in
     * the input projection — a null VECTOR row neither drops nor is dropped
     * on either plan (see the in-code note for why this must not be a
-    * Filter). Requires an integral id (the engine's ids are longs) — the
-    * long-keyed ordering must match the join's `id_a < id_b`. */
+    * Filter). Requires an integral, non-null id (the engine's ids are longs)
+    * — the long-keyed ordering must match the join's `id_a < id_b`; a null
+    * id fails the query with an error that names the column. */
   def cosineDropIds(df: DataFrame, idCol: String, vecCol: String,
       blockCol: String, threshold: Double): DataFrame = {
     val idType = df.schema(idCol).dataType
@@ -931,7 +932,13 @@ object DedupOps {
     // aggregation at sf1.0). A multiply-referenced non-cheap expression in
     // a projection is NOT collapsed (CollapseProject's cost guard), so the
     // assignment stays evaluated once.
-    df.select(col(blockCol).as("__blk"), col(idCol).cast("long").as("__id"),
+    // A null id has no place in the `id_a < id_b` order, and the
+    // aggregator's primitive-long input encoder does not reject it (the
+    // query ran to completion), so fail here and name the column.
+    val id = when(col(idCol).isNull,
+        raise_error(lit(s"cosineDropIds: null id in column '$idCol'")))
+      .otherwise(col(idCol).cast("long"))
+    df.select(col(blockCol).as("__blk"), id.as("__id"),
         when(col(blockCol).isNotNull,
           transform(col(vecCol), x => x.cast("double"))).as("__v"))
       .groupBy(col("__blk"))

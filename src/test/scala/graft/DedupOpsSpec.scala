@@ -290,6 +290,15 @@ class DedupOpsSpec extends SparkSpec {
         Option(e.getMessage).toSeq ++ rootMessages(e.getCause))
     assert(rootMessages(thrown).exists(_.contains("DIVIDE_BY_ZERO")),
       s"aggregator must replay the ANSI zero-divisor failure, got $thrown")
+    // a null id fails loudly and names the column
+    val nullId = corpus.unionByName(
+      Seq((None: Option[Long], Some(Seq.fill(64)(0.5)), Some(3)))
+        .toDF("vec_id", "embedding", "label"))
+    val nullThrown = intercept[Exception] {
+      DedupOps.cosineDropIds(nullId, "vec_id", "embedding", "label", 0.35).collect()
+    }
+    assert(rootMessages(nullThrown).exists(_.contains("null id in column 'vec_id'")),
+      s"null id must name its column, got $nullThrown")
   }
 
   test("cosinePairsLsh (label ∧ band blocking) finds exactly the label-blocked pairs") {

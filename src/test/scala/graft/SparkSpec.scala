@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide session, small core count
-  * so the suite stays fast. */
+  * so the suite stays fast. Streaming checkpoints use the engine's
+  * checkpoint file manager, as in [[GraftSession.builder]], so every
+  * streaming spec runs on it. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,6 +16,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.CheckpointFileManagerConf._1, GraftSession.CheckpointFileManagerConf._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
