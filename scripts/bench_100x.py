@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """100x scale-up probe as a COMMITTED artifact (round-16 verdict #8).
 
-Runs graft.BenchOne from the packaged jar for a representative query set
+Runs graft.Bench from the packaged jar for a representative query set
 against a gen_sf 100x dataset (default target/sf10, reproducible via
 `python3 scripts/gen_sf.py /root/testdata/sf0.1 target/sf10 100`), takes the
 min of the reps per query, and writes one JSON artifact so the next round
@@ -9,11 +9,13 @@ can diff 100x numbers instead of re-deriving them from prose.
 
 Usage: bench_100x.py [sfDir] [outJson] [reps]
 
-Each query runs in its OWN JVM (BenchOne), sequentially — run alone, like
-Bench. `sbt -batch package` must have produced a current jar first.
+Each query runs in its OWN JVM (`graft.Bench <reps> <query>`),
+sequentially — run alone, like the full Bench. `sbt -batch package` must
+have produced a current jar first.
 """
 import glob
 import json
+import os
 import re
 import subprocess
 import sys
@@ -52,7 +54,7 @@ def app_jar():
             if not re.search(r"-(sources|javadoc|tests)\.jar$", j)]
     if not jars:
         raise SystemExit("bench_100x: no app jar — run `sbt -batch package`")
-    return max(jars, key=lambda j: __import__("os").path.getmtime(j))
+    return max(jars, key=os.path.getmtime)
 
 
 def main():
@@ -63,15 +65,16 @@ def main():
     add_opens = []
     for p in ADD_OPENS_PKGS:
         add_opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     results, failed = {}, []
     for q in QUERIES:
         cmd = ["java", *add_opens, "-Xmx100g",
                "-cp", f"{jar}:/opt/spark/jars/*",
-               "graft.BenchOne", q, sf_dir, str(reps)]
+               "graft.Bench", str(reps), q]
         print(f"[bench100x] {q} ...", flush=True)
-        proc = subprocess.run(cmd, capture_output=True, text=True)
+        proc = subprocess.run(cmd, capture_output=True, text=True, env=env)
         times = [float(m) for m in
-                 re.findall(r"\[benchone\] \S+ rep \d+: ([0-9.]+) s",
+                 re.findall(r"\[bench\] \S+ rep \d+: ([0-9.]+) s",
                             proc.stdout)]
         if times:
             results[q] = round(min(times), 3)
@@ -86,7 +89,7 @@ def main():
         "reps": reps,
         "queries": results,
         "failed": failed,
-        "note": "min of reps, one JVM per query via graft.BenchOne "
+        "note": "min of reps, one JVM per query via graft.Bench <reps> <query> "
                 "(count()-free noop drain), run alone; dataset is "
                 "gen_sf.py 100x of sf0.1",
     }

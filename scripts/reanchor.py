@@ -69,20 +69,23 @@ def find_jar():
     return max(cands, key=os.path.getmtime)
 
 
+REP_LINE = re.compile(r"\[bench\] \S+ rep \d+: ([0-9.]+) s")
+
+
 def bench_one(jar, query, dataset, reps):
     """min-of-reps wall seconds for one query, one JVM, noop drain."""
     cmd = (f"java {ADD_OPENS} -Xmx100g -cp '{jar}:/opt/spark/jars/*' "
-           f"graft.BenchOne {query} {dataset} {reps}")
+           f"graft.Bench {reps} {query}")
     out = subprocess.run(cmd, shell=True, cwd=REPO, capture_output=True,
-                         text=True)
-    times = [float(m) for m in re.findall(
-        r"\[benchone\] \S+ rep \d+: ([0-9.]+) s", out.stdout)]
+                         text=True,
+                         env=dict(os.environ, SPARK_GRAFT_SF_DIR=dataset))
+    times = [float(m) for m in REP_LINE.findall(out.stdout)]
     if len(times) != reps:
         sys.stderr.write(out.stdout[-3000:] + "\n" + out.stderr[-3000:] + "\n")
-        sys.exit(f"[reanchor] BenchOne {query} produced {len(times)}/{reps} "
+        sys.exit(f"[reanchor] Bench {query} produced {len(times)}/{reps} "
                  "rep lines - aborting")
     t = min(times)
-    log(f"BenchOne {query} ({dataset}, reps={reps}): min={t:.3f} s "
+    log(f"Bench {query} ({dataset}, reps={reps}): min={t:.3f} s "
         f"(reps {','.join(f'{x:.3f}' for x in times)})")
     return t
 
@@ -163,8 +166,10 @@ def main():
             f"java {ADD_OPENS} -Xmx100g -cp '{jar}:/opt/spark/jars/*' "
             "graft.Bench", shell=True, cwd=REPO, env=env,
             capture_output=True, text=True)
+        # the last line carrying the per-query map (the compact line); the
+        # short total line after it has no "queries"
         lines = [ln for ln in r.stdout.splitlines()
-                 if ln.startswith("{") and '"metric"' in ln]
+                 if ln.startswith("{") and '"queries"' in ln]
         if r.returncode != 0 or not lines:
             sys.stderr.write(r.stdout[-3000:] + "\n" + r.stderr[-2000:])
             sys.exit("[reanchor] full Bench failed; nothing written")

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """s26 shuffle-partitions x rank-plan sweep at the 100x scale-up (round-17
-verdict #2): runs graft.BenchOne for s26_knn_graph over the cross product
+verdict #2): runs graft.Bench for s26_knn_graph over the cross product
 SPARK_GRAFT_SHUFFLE in {32, 64, 128, 256} x SPARK_GRAFT_KNN_RANK in
 {window, heap}, one JVM per cell, and merges the table into BENCH_100x.json
 under "s26_sweep" so the winning default is a diffable artifact.
@@ -42,15 +42,16 @@ def main():
     for shuffle in ["32", "64", "128", "256"]:
         for plan in ["window", "heap"]:
             env = dict(os.environ,
+                       SPARK_GRAFT_SF_DIR=sf_dir,
                        SPARK_GRAFT_SHUFFLE=shuffle,
                        SPARK_GRAFT_KNN_RANK=plan)
             cmd = ["java", *add_opens, "-Xmx100g",
                    "-cp", f"{jar}:/opt/spark/jars/*",
-                   "graft.BenchOne", "s26_knn_graph", sf_dir, str(reps)]
+                   "graft.Bench", str(reps), "s26_knn_graph"]
             print(f"[sweep] shuffle={shuffle} plan={plan} ...", flush=True)
             proc = subprocess.run(cmd, capture_output=True, text=True, env=env)
             times = [float(m) for m in
-                     re.findall(r"\[benchone\] \S+ rep \d+: ([0-9.]+) s",
+                     re.findall(r"\[bench\] \S+ rep \d+: ([0-9.]+) s",
                                 proc.stdout)]
             key = f"shuffle{shuffle}_{plan}"
             if times:
@@ -69,7 +70,7 @@ def main():
         "dataset": sf_dir,
         "reps": reps,
         "seconds": table,
-        "note": "min of reps, one JVM per cell (graft.BenchOne), run alone; "
+        "note": "min of reps, one JVM per cell (graft.Bench <reps> s26_knn_graph), run alone; "
                 "SPARK_GRAFT_SHUFFLE x SPARK_GRAFT_KNN_RANK cross product",
     }
     with open(bench_json, "w") as f:

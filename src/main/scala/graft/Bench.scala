@@ -1,40 +1,47 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: one JSON line with per-query steady-state seconds.
+/** Benchmark main.
   *
-  * A first untimed pass over every query at sf0.001 warms the JVM (JIT,
-  * codegen compiler, parquet reader init) so the timed pass at the target
-  * scale factor measures the queries, not whichever one happened to run
-  * first. Queries run in sorted name order for determinism.
+  * With no arguments it is the driver's bench: one JSON line with
+  * per-query steady-state seconds for every query, the artifact, a compact
+  * copy of the line and a last short [[totalLine]]. With
+  * `<reps> <query>...` it times only those queries and prints each rep and
+  * the minimum per query, writing no artifact:
+  *
+  * {{{ SPARK_GRAFT_SF_DIR=target/sf1.0 sbt "runMain graft.Bench 3 s25_mmr_rerank q40_percentiles_hist" }}}
+  *
+  * Both modes read the sf dir from `SPARK_GRAFT_SF_DIR` and run the same
+  * steps over their query list. A first untimed pass at sf0.001 warms the
+  * JVM (JIT, codegen compiler, parquet reader init) so the timed pass at
+  * the target scale factor measures the queries, not whichever one
+  * happened to run first. The one-time layout/train/sigs builds are timed
+  * next, then interleaved sweeps. The full run takes queries in sorted name
+  * order for determinism; a subset run keeps the order given.
   */
 object Bench {
+  private val Usage = "usage: Bench [<reps> <query>...]"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        // SPARK_GRAFT_SHUFFLE sizes the shuffle for scale-up probes: at
-        // the 100x dataset the candidate transients of the banded
-        // operators want more, smaller sort spills than cores (the
-        // round-16 s26 spill diagnosis); default stays the core count
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // SPARK_GRAFT_KNN_RANK={window|heap} forces the knn-graph ranking
-      // plan for the partitions x plan sweep (round-17 verdict #2);
-      // unset = knnGraphAuto's estimate-driven switch
-      .config("spark.graft.knngraph.rankPlan",
-        sys.env.getOrElse("SPARK_GRAFT_KNN_RANK", "auto"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val subset = args.nonEmpty
+    val reps =
+      if (!subset) 3
+      else args(0).toIntOption.filter(_ > 0).getOrElse(sys.error(Usage))
+    val names =
+      if (!subset) SparkEntry.queries.keys.toSeq.sorted
+      else args.toSeq.drop(1)
+    require(names.nonEmpty, Usage)
+    // fail fast on a misspelled query name, before any Spark job: a bad
+    // name otherwise reports a failed row that is easy to mistake for a
+    // measurement
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
+        unknown.mkString(", "))
+    val spark = GraftSession.get()
     // Execution: write to the built-in `noop` sink, NOT .count() — a
-    // count-only plan lets Catalyst prune projections and sorts (the
-    // PlanDump scaladoc's point), under-measuring output-side work. The
+    // count-only plan lets Catalyst prune projections and sorts,
+    // under-measuring output-side work. The
     // noop writer computes every output row and drops it on the executor:
     // full query cost, no driver collect. (Methodology change in round 5 —
     // absolute numbers are slightly higher than earlier rounds' by design.)
@@ -48,89 +55,93 @@ object Bench {
         catch { case _: Throwable => () }
       }
     }
+    // A throwing query yields NaN — a fast failure must not benchmark as a
+    // good time. The first failure per query is kept for the subset report.
+    val firstErr = scala.collection.mutable.Map[String, Throwable]()
+    def once(name: String): Double = {
+      val t0 = System.nanoTime()
+      try { drain(name, sfDir); (System.nanoTime() - t0) / 1e9 }
+      catch { case t: Throwable =>
+        firstErr.getOrElseUpdate(name, t)
+        Double.NaN
+      }
+    }
+    // One-time builds, each timed as its first drain (which includes one
+    // query execution) so the sweeps below measure the steady state a
+    // deployment re-runs; a failed build reports -1.
+    def oneTime(section: Seq[String]): Seq[(String, Double)] =
+      section.filter(names.contains).map { n =>
+        val t = once(n)
+        n -> (if (t.isNaN) -1.0 else t)
+      }
     // Layout queries (q38 bucketed copies, q39 partitioned copy) write
     // their storage layout AT MOST ONCE per dir (content-addressed,
     // idempotent skip). Time that one-time build separately as layout_s —
     // the timed sweeps below then measure the JOIN/SCAN, not the write, so
     // the 2x gate and round-over-round comparisons compare query plans.
-    // (First build per dir includes one query execution; steady-state
-    // query cost is the sweeps' number.)
-    val layoutNames = Seq("q38_bucketed_join", "q39_partition_pruning")
-      .filter(names.contains)
-    val layout = layoutNames.map { n =>
-      val t0 = System.nanoTime()
-      try { drain(n, sfDir); n -> (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => n -> -1.0 }
-    }
-    // ANN model rows (s05/s08/s09): the trained quantizer is memoized per
-    // (query, dir) — training is deterministic, so results are identical
-    // hit or miss — and the FIRST drain per dir pays the Lloyd training.
-    // Time that one-time fit separately as train_s; the sweeps below then
-    // measure the steady-state search a deployment runs against a
-    // persisted model (the layout_s precedent: first build includes one
-    // query execution, steady-state is the sweeps' number).
-    // (s38: the IVF fusion leg's memoized coarse model + its one-time
-    // (cluster, vec_id)-sorted list-table build — the same first-drain
-    // one-time-cost shape.)
-    // (t27/t28: the BPE merge table is memoized per dir-content from round
-    // 20 — TextAnalysis.cachedMerges, same deterministic-model rule — so
-    // their first drain pays the tokenizer training; t27 sorts first and
-    // pays it for both.)
-    // (round 20 additions — same deterministic-model rule: t27/t28 the BPE
-    // merge memo, s03 the full-probe coarse model, d15/t29 the cachedFit
-    // kmeans models; d18 serves the s38 IVF-leg model, which s38's own
-    // entry below trains first.)
-    // (d18_semantic_dedup_auto added round 21 per the r20 ADVICE: its model
-    // IS s38's ivfLegModel, so with s38 in the list the memo is already hot
-    // and this entry measures a hit — but a bench variant running d18
-    // WITHOUT s38 must not silently pay the Lloyd fit inside its first
-    // sweep sample. Additions to trainNames are the explicitly-allowed
-    // harness change.)
-    val trainNames = Seq("s05_pq_rerank", "s08_ivfpq", "s09_ivfpq_residual",
+    val layout = oneTime(Seq("q38_bucketed_join", "q39_partition_pruning"))
+    // Memoized deterministic models (results are identical hit or miss),
+    // whose FIRST drain per dir pays the fit; train_s times that one-time
+    // fit, the sweeps measure the steady-state search a deployment runs
+    // against a persisted model:
+    //  - s05/s08/s09/s21/s22: the trained ANN quantizers;
+    //  - s38: the IVF fusion leg's coarse model + its one-time
+    //    (cluster, vec_id)-sorted list-table build; d18 serves that same
+    //    model, and is listed so a run of d18 WITHOUT s38 does not pay the
+    //    Lloyd fit inside its first sweep sample;
+    //  - t27/t28: the BPE merge table (TextAnalysis.cachedMerges); t27
+    //    sorts first and pays it for both;
+    //  - s03: the full-probe coarse model; d15/t29: the cachedFit kmeans
+    //    models; c06: the benchmark Bloom sketch.
+    val train = oneTime(Seq("s05_pq_rerank", "s08_ivfpq", "s09_ivfpq_residual",
       "s21_ivfpq_recall", "s22_ivfpq_residual_recall", "s38_rrf_ivf_recall",
       "t27_bpe_segment", "t28_bpe_fertility", "s03_ivf_fullprobe",
       "d15_semantic_dedup", "d18_semantic_dedup_auto", "t29_cluster_terms",
-      "c06_decontaminate_bloom")
-      .filter(names.contains)
-    val train = trainNames.map { n =>
-      val t0 = System.nanoTime()
-      try { drain(n, sfDir); n -> (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => n -> -1.0 }
-    }
+      "c06_decontaminate_bloom"))
     // Persisted signature/posting tables (simhash: d06/d07/d11/d16/c11;
     // minhash postings: d02/d09; minhash shingle hashes: d12; component
-    // labels: d07/c17/c19 — each built at most once per dir — the
-    // layout_s precedent): time the first consumer of each table
-    // separately as sigs_s so the sweeps measure the band-join/component
-    // plans a deployment re-runs against the stored tables. (First build
-    // includes one query execution.)
-    val sigNames = Seq("d06_simhash_hamming", "d02_minhash_lsh",
-      "d12_minhash_accuracy", "c17_soft_dedup_weights").filter(names.contains)
-    val sigs = sigNames.map { n =>
-      val t0 = System.nanoTime()
-      try { drain(n, sfDir); n -> (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => n -> -1.0 }
-    }
-    // min of three timed runs per query, taken across three INTERLEAVED
-    // full sweeps rather than back-to-back: ambient load on a shared box
-    // can multiply measurements several-fold for minutes at a time (the r03
+    // labels: d07/c17/c19 — each built at most once per dir): time the
+    // first consumer of each table separately as sigs_s so the sweeps
+    // measure the band-join/component plans a deployment re-runs against
+    // the stored tables.
+    val sigs = oneTime(Seq("d06_simhash_hamming", "d02_minhash_lsh",
+      "d12_minhash_accuracy", "c17_soft_dedup_weights"))
+    // min of `reps` timed runs per query, taken across INTERLEAVED full
+    // sweeps rather than back-to-back: ambient load on a shared box can
+    // multiply measurements several-fold for minutes at a time (the r03
     // driver run recorded unchanged queries 5-30x their r02 times), and
     // back-to-back repeats all land inside the same noise burst. Sweeping
-    // all queries then repeating spreads a query's three samples minutes
-    // apart, so the minimum approximates uncontended steady state even
-    // when one whole sweep is contended. A throwing query yields NaN — a
-    // fast failure must not benchmark as a good time.
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { drain(name, sfDir); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => Double.NaN }
+    // all queries then repeating spreads a query's samples minutes apart,
+    // so the minimum approximates uncontended steady state even when one
+    // whole sweep is contended.
+    val sweeps = (1 to reps).map { i =>
+      names.map { n =>
+        val t = once(n)
+        if (subset) println(s"[bench] $n rep $i: " +
+          (if (t.isNaN) "FAILED" else s"${d3(t)} s"))
+        n -> t
+      }.toMap
     }
-    val sweeps = (1 to 3).map(_ => names.map(n => n -> once(n)).toMap)
     // a query with NO successful sample reports -1 and is excluded from the
     // total (JSON has no NaN literal; -1 is the explicit failure marker)
     val sweepMins = names.map { n =>
       val ok = sweeps.map(_(n)).filterNot(_.isNaN)
       n -> (if (ok.isEmpty) -1.0 else ok.min)
+    }
+    if (subset) {
+      sweepMins.foreach { case (n, v) =>
+        println(s"[bench] $n min=${d3(v)} " +
+          s"all=${sweeps.map(sw => d3(sw(n))).mkString(",")}")
+      }
+      // a query with NO successful rep is an error, not a measurement
+      val failed = sweepMins.collect { case (n, v) if v < 0 => n }
+      failed.foreach { n =>
+        val t = firstErr(n)
+        println(s"[bench] $n FAILED every rep: ${t.getClass.getName}: ${t.getMessage}")
+      }
+      spark.stop()
+      if (failed.nonEmpty) sys.exit(1)
+      return
     }
     // Outlier AUTO-BRACKETING (round-13 NEXT #1, symmetrized round-16 per
     // ADVICE): ambient load on a shared box has produced >1.3x phantom
@@ -170,41 +181,49 @@ object Bench {
         val solo = (1 to 2).map(_ => once(n)).filterNot(_.isNaN)
         n -> (v, if (solo.isEmpty) v else solo.min)
     }.toMap
-    val results = sweepMins
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val ls = layout.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ts = train.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ss = sigs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val bs = bracketed.toSeq.sortBy(_._1).map { case (k, (sw, re)) =>
-      "\"" + k + "\":{\"sweep\":" + sw + ",\"rerun\":" + re + "}"
-    }.mkString("{", ",", "}")
+    val total = sweepMins.collect { case (_, v) if v >= 0 => v }.sum
+    def obj(kvs: Seq[(String, Any)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val bs = obj(bracketed.toSeq.sortBy(_._1).map { case (k, (sw, re)) =>
+      k -> ("{\"sweep\":" + sw + ",\"rerun\":" + re + "}") })
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"layout":$ls,"train":$ts,"sigs":$ss,"bracketed":$bs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(sweepMins)},"layout":${obj(layout)},"train":${obj(train)},"sigs":${obj(sigs)},"bracketed":$bs,"sf":"$sfDir"}"""
     println(line)
     // The driver's log window truncates long stdout tails (BENCH_r09 lost
     // the first ~28 queries of per-query history), so also persist the full
     // line as a machine-readable artifact that survives in the repo.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(artifact), line + "\n")
-    // Round 21 (r20 verdict "What's wrong #2"): the driver's tail capture is
-    // BYTE-truncated and clipped the head of the full-precision line every
-    // round since r17 (BENCH_r17..r20 all record parsed:null at rc=0 —
-    // 163 queries at 9-decimal floats is ~6 KB). Print a LAST, compact copy
-    // of the contract fields — 3-decimal seconds, same query set and total,
-    // no aux sections (those stay on the full line above and in the
-    // artifact) — so the final ~4.2 KB of stdout ends with one complete,
-    // parseable JSON line. Purely an additional output line: the timed
-    // methodology, the full-precision artifact, and the full line are
-    // unchanged (measurement-output fix, recorded in OPTIMIZATION_r21.md).
-    def d3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    val qs3 = results.map { case (k, v) => "\"" + k + "\":" + d3(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs3,"sf":"$sfDir"}""")
+    // The driver's tail capture is BYTE-truncated and clipped the head of
+    // the full-precision line (~6 KB for 163 queries at 9-decimal floats).
+    // Print a compact copy of the contract fields — 3-decimal seconds,
+    // same query set and total, no aux sections (those stay on the full
+    // line above and in the artifact) — and then the short [[totalLine]],
+    // so stdout ends with complete, parseable JSON at any capture size.
+    // Purely additional output lines: the timed methodology, the
+    // full-precision artifact and the full line are unchanged.
+    println(s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":${obj(sweepMins.map { case (k, v) => k -> d3(v) })},"sf":"$sfDir"}""")
+    println(totalLine(total, sfDir))
     spark.stop()
+  }
+
+  /** Three-decimal seconds; `Locale.ROOT` so no locale renders a decimal
+    * comma into the JSON. */
+  def d3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
+
+  val TotalLineMaxBytes = 200
+
+  /** The bench's last line, `{"metric":"total","value":…,"unit":"sec","sf":"…"}`,
+    * at most [[TotalLineMaxBytes]] bytes of UTF-8 so a byte-truncated log
+    * tail still ends with a whole, parseable line. A longer sf path keeps
+    * its trailing characters (the scale-factor directory name). */
+  def totalLine(total: Double, sfDir: String): String = {
+    def line(sf: String) =
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","sf":${Verify.jsonString(sf)}}"""
+    def fits(l: String) =
+      l.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= TotalLineMaxBytes
+    var sf = sfDir
+    while (sf.nonEmpty && !fits(line(sf))) sf = sf.drop(1)
+    line(sf)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling bench for the API-only operators — the ones CORRECTNESS covers by
@@ -14,26 +14,7 @@ import org.apache.spark.sql.functions._
 object BenchApi {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        // SPARK_GRAFT_SHUFFLE sizes the shuffle for scale-up probes: at
-        // the 100x dataset the candidate transients of the banded
-        // operators want more, smaller sort spills than cores (the
-        // round-16 s26 spill diagnosis); default stays the core count
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // SPARK_GRAFT_KNN_RANK={window|heap} forces the knn-graph ranking
-      // plan for the partitions x plan sweep (round-17 verdict #2);
-      // unset = knnGraphAuto's estimate-driven switch
-      .config("spark.graft.knngraph.rankPlan",
-        sys.env.getOrElse("SPARK_GRAFT_KNN_RANK", "auto"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
 
     def drainDf(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

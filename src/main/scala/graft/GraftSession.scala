@@ -2,12 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-oriented defaults.
+/** The engine's only session factory: every `main` (Bench, BenchApi,
+  * PlanDump, Verify), the test suite's shared session and the perfbench
+  * harness build from [[builder]], so they all run the session the engine
+  * ships — `GraftExtensions` registered and the checkpoint file manager
+  * below in place. A spec fails if `SparkSession.builder()` appears in the
+  * main sources anywhere else.
   *
   * Local testing runs `local[32]`; the config choices are made for a real
   * multi-executor cluster: AQE on (runtime re-plan, skew-join splitting,
   * partition coalescing), shuffle partitions sized to the local core count
   * rather than the 200 default, and UTC so event-time semantics are stable.
+  *
+  * [[get]] adds the two measurement overrides, each set only when its
+  * variable is present:
+  *  - `SPARK_GRAFT_SHUFFLE` → `spark.sql.shuffle.partitions`: at the 100x
+  *    dataset the candidate transients of the banded operators want more,
+  *    smaller sort spills than cores.
+  *  - `SPARK_GRAFT_KNN_RANK` (`window` or `heap`) →
+  *    `spark.graft.knngraph.rankPlan`: forces the knn-graph ranking plan
+  *    for partitions × plan sweeps; unset leaves `knnGraphAuto`'s
+  *    estimate-driven switch.
   *
   * Streaming checkpoints are written by
   * [[graft.streaming.LocalCheckpointFileManager]] ([[CheckpointFileManagerConf]]).
@@ -21,11 +36,12 @@ import org.apache.spark.sql.SparkSession
   * other scheme (S3, HDFS) take Spark's own code path unchanged.
   */
 object GraftSession {
-  def builder(master: String = s"local[${defaultCpus}]"): SparkSession.Builder =
+  /** `local[cpus]` with `cpus` shuffle partitions and the engine's confs. */
+  def builder(cpus: String = defaultCpus): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", defaultCpus)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -41,7 +57,19 @@ object GraftSession {
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[graft.streaming.LocalCheckpointFileManager].getName
 
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `SPARK_GRAFT_CPUS`, else 32. */
+  def defaultCpus: String = cpusOr("32")
+
+  private def cpusOr(fallback: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", fallback)
+
+  /** The confs the measurement overrides set, from the variables present in
+    * `env` (see the object scaladoc). */
+  private[graft] def measurementOverrides(
+      env: Map[String, String] = sys.env): Seq[(String, String)] =
+    Seq("SPARK_GRAFT_SHUFFLE" -> "spark.sql.shuffle.partitions",
+        "SPARK_GRAFT_KNN_RANK" -> "spark.graft.knngraph.rankPlan")
+      .flatMap { case (v, k) => env.get(v).map(k -> _) }
 
   /** Streaming state-store tuning for large stateful jobs (NEXT r1 #5).
     *
@@ -78,8 +106,12 @@ object GraftSession {
         "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> mb.toString))
         .getOrElse(Map.empty)
 
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
+  /** The session a `main` runs: [[builder]] at `SPARK_GRAFT_CPUS` cores
+    * (else `fallbackCpus`), plus the measurement overrides, log level WARN. */
+  def get(fallbackCpus: String = "32"): SparkSession = {
+    val spark = measurementOverrides()
+      .foldLeft(builder(cpusOr(fallbackCpus))) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

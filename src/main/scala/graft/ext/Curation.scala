@@ -211,15 +211,12 @@ object Curation {
     * independent (bitwise-OR composition), and the exact verification
     * join makes the result sketch-independent anyway — a deployment
     * maintains the eval-suite sketch once, the corpus probe is the
-    * per-run job. Eviction as in cachedMerges. */
+    * per-run job. Keyed and evicted by [[graft.Tables.memoByContent]]. */
   private val sketchCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[Byte])]()
   private def cachedC06Sketch(s: SparkSession, dir: String): (Long, Array[Byte]) = {
     import s.implicits._
-    val prefix = s"c06sketch:${graft.Tables.dirHash(dir)}:"
-    val key = prefix + graft.Tables.tableFingerprint(dir, "documents")
-    sketchCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    sketchCache.computeIfAbsent(key, _ =>
+    graft.Tables.memoByContent(sketchCache, "c06sketch", dir, "documents")(
       CurationOps.benchmarkSketch(
         docs(s, dir).filter($"doc_id" % 20 === 0), "doc_id", "text",
         n = ContamN))

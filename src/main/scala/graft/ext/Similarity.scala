@@ -1046,18 +1046,13 @@ object Similarity {
     * per content, the dedup/labeling pass is the per-run job. Results are
     * identical hit or miss (kmeansFit's id-sorted fold is bit-replayable);
     * Bench times the one-time fit in its `train` section. Keyed like every
-    * cachedModel entry: `tag:dir` + the embeddings content fingerprint. */
+    * cachedModel entry: tag, dir and the embeddings content fingerprint. */
   private[ext] def cachedFit(tag: String, dir: String)(
       fit: => Seq[Array[Double]]): Seq[Array[Double]] =
-    cachedModel(s"$tag:$dir")(fit)
-  private def cachedModel[T <: AnyRef](key: String)(train: => T): T = {
-    val full = key + ":" + embeddingsFingerprint(key)
-    // evict superseded entries for the same tag:dir — a long-lived JVM that
-    // regenerates data under the path otherwise accumulates one stale model
-    // per generation (round-13 ADVICE)
-    modelCache.keySet.removeIf(k => k.startsWith(key + ":") && k != full)
-    modelCache.computeIfAbsent(full, _ => train).asInstanceOf[T]
-  }
+    cachedModel(tag, dir)(fit)
+  private def cachedModel[T <: AnyRef](tag: String, dir: String)(train: => T): T =
+    Tables.memoByContent(modelCache, tag, dir, "embeddings")(train)
+      .asInstanceOf[T]
 
   /** MD5 over the trained model's raw IEEE-754 bits (coarse centroids,
     * sub-codebooks, residual flag) — the content address for persisted
@@ -1087,51 +1082,6 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Content fingerprint of the embeddings table under the dir embedded in
-    * `key` (name+length+mtime of every part file): a long-lived JVM (sbt
-    * session) that regenerates the data under an unchanged path gets a
-    * fresh model instead of a stale one that the DuckDB oracle — which
-    * always retrains from the current files — would mismatch. A stat walk,
-    * not a read; the per-JVM memo assumption otherwise stands. */
-  private def embeddingsFingerprint(key: String): String = {
-    val dir = key.dropWhile(_ != ':').drop(1)
-    val root = new java.io.File(dir, "embeddings.parquet")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).fold(Seq.empty[java.io.File])(
-          _.toSeq.sortBy(_.getName).flatMap(walk))
-      else Seq(f)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    walk(root).foreach { p =>
-      md.update(s"${p.getName}:${p.length}:${p.lastModified};"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // mtime granularity is 1 s on many filesystems — same-sized data
-      // regenerated under the path within one tick would collide on the
-      // stat triple alone. The parquet FOOTER (tail bytes: thrift-encoded
-      // row-group stats + schema) is content-dependent, so fold in the
-      // last 4 KiB of each part file (round-13 ADVICE #4). A 4 KiB tail
-      // read per part, not a data scan.
-      // snapshot the length ONCE (the stat line above may race a concurrent
-      // data regeneration) and tolerate the part file vanishing/shrinking
-      // between the walk and the read: fall back to the stat triple already
-      // folded in — the next call re-walks and sees the new generation.
-      val len = p.length
-      if (p.getName.endsWith(".parquet") && len > 0) {
-        try {
-          val raf = new java.io.RandomAccessFile(p, "r")
-          try {
-            val n = math.min(4096L, len).toInt
-            raf.seek(len - n)
-            val tail = new Array[Byte](n)
-            raf.readFully(tail)
-            md.update(tail)
-          } finally raf.close()
-        } catch { case _: java.io.IOException => () }
-      }
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   /** Content-addressed per-(tag, dir, MODEL) PERSISTED code table — the
     * [[graft.ext.Dedup.simhashSigTable]] / q38 layout discipline applied
     * to the ANN codes (round-13 NEXT #1): built AT MOST ONCE per
@@ -1140,7 +1090,7 @@ object Similarity {
     * encode projection per sweep — exactly what a deployment's steady
     * state does against its written index. Codes are a pure projection of
     * (model, data), so the store key folds in BOTH fingerprints: the data
-    * stat+footer hash ([[embeddingsFingerprint]]) AND the model's raw
+    * stat+footer hash ([[Tables.tableFingerprint]]) AND the model's raw
     * IEEE-754 bits ([[modelFingerprint]]) — a later JVM whose float
     * training came out bit-different misses the cache and re-encodes
     * instead of serving stale codes (round-13/14 ADVICE #1). The write is
@@ -1159,7 +1109,7 @@ object Similarity {
     // and a bench JVM on sf1 evict each other's live table mid-scan
     // (round-15 ADVICE #1, mirrors Tables.cachedDerived)
     val dh = graft.Tables.dirHash(dir)
-    val fp = embeddingsFingerprint(s"$tag:$dir") + "-" +
+    val fp = Tables.tableFingerprint(dir, "embeddings") + "-" +
       modelFingerprint(model)
     val root = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_ann_codes")
@@ -1173,11 +1123,11 @@ object Similarity {
       // atomic publish: rename the finished temp into place; losing the
       // race to a concurrent identical build is benign (same content)
       if (!tmp.renameTo(path) && !new java.io.File(path, "_SUCCESS").isFile) {
-        deleteRecursively(path); tmp.renameTo(path)
+        Tables.deleteRecursively(path); tmp.renameTo(path)
       }
-      if (tmp.isDirectory) deleteRecursively(tmp)
+      if (tmp.isDirectory) Tables.deleteRecursively(tmp)
       // evict superseded generations of this tag FOR THIS DIR (stale data
-      // OR stale model fingerprints) — mirror of the modelCache removeIf.
+      // OR stale model fingerprints) — mirror of Tables.memoByContent.
       // Legacy entries (`<tag>-<32hex>-<32hex>` pre-dirHash, or the
       // round-16 8-hex dir segment) are unreachable under the current
       // 16-hex naming — clean them up too.
@@ -1186,16 +1136,10 @@ object Similarity {
         val n = f.getName
         if ((n.startsWith(s"$tag-$dh-") && n != s"$tag-$dh-$fp") ||
             legacy.matches(n))
-          deleteRecursively(f)
+          Tables.deleteRecursively(f)
       }
     }
     s.read.parquet(path.getPath)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   // ---------------------------------------------------------------- s08
@@ -1217,7 +1161,7 @@ object Similarity {
     val e = Tables.loadSpread(s, dir, "embeddings")
       .filter($"vec_id" < 500).localCheckpoint(true)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel(s"s08:$dir")(
+    val model = cachedModel("s08", dir)(
       ivfPqTrain(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
         iters = 2))
     // serve the PERSISTED list-sorted code table (built once per
@@ -1248,7 +1192,7 @@ object Similarity {
     val e = Tables.loadSpread(s, dir, "embeddings")
       .filter($"vec_id" < 500).localCheckpoint(true)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel(s"s09:$dir")(
+    val model = cachedModel("s09", dir)(
       ivfPqTrain(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
         iters = 2, byResidual = true))
     val codes = cachedCodes(s, dir, "s09", model, listSorted = true)(
@@ -1276,7 +1220,7 @@ object Similarity {
     // centroids at all — every inverted list is probed, so the candidate
     // set is the whole corpus whatever the assignment (the property this
     // row exists to prove). Bench times the one-time fit in `train`.
-    val cents = cachedModel(s"s03:$dir")(
+    val cents = cachedModel("s03", dir)(
       trainCentroids(trainSample(unitVecs(e, "vec_id", "embedding", "id"),
         262144L), nlist = 8, iters = 2))
     ivfKnn(e, q, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 8,
@@ -1311,7 +1255,7 @@ object Similarity {
     val e = Tables.loadSpread(s, dir, "embeddings")
       .filter($"vec_id" < 500).localCheckpoint(true)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel(s"s05:$dir")(
+    val model = cachedModel("s05", dir)(
       pqTrain(e, "vec_id", "embedding", m = 8, ksub = 16, iters = 2))
     val codes = cachedCodes(s, dir, "s05", model, listSorted = false)(
       pqEncode(model, e, "vec_id", "embedding"))
@@ -1641,7 +1585,7 @@ object Similarity {
     val e = Tables.loadSpread(s, dir, "embeddings")
       .filter($"vec_id" < 500).localCheckpoint(true)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel(s"s21:$dir")(
+    val model = cachedModel("s21", dir)(
       ivfPqTrainDet(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
         iters = 2))
     val approx = ivfPqSearch(model, ivfPqEncode(model, e, "vec_id", "embedding"),
@@ -1675,7 +1619,7 @@ object Similarity {
     val e = Tables.loadSpread(s, dir, "embeddings")
       .filter($"vec_id" < 500).localCheckpoint(true)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel(s"s22:$dir")(
+    val model = cachedModel("s22", dir)(
       ivfPqTrainDet(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
         iters = 2, byResidual = true))
     val approx = ivfPqSearch(model, ivfPqEncode(model, e, "vec_id", "embedding"),
@@ -2222,7 +2166,7 @@ object Similarity {
     * [[LshTuning.ivfModelRecall]] and whose cost is one assignment scan +
     * a candidate-fraction ranking instead of the full graph build
     * (measured at the 100× probe: the graph leg prices at ~109 s of
-    * build; the IVF leg at the s38 BenchOne time). Pure driver-side math
+    * build; the IVF leg at the s38 single-query bench time). Pure driver-side math
     * over the corpus count — the [[LshTuning.probeBudget]] discipline
     * applied to LEG CHOICE. */
   private[graft] def fusionLegPlan(n: Long,
@@ -2407,10 +2351,8 @@ object Similarity {
     * double replays in the s38 DuckDB twin. Memoized per dir-content. */
   private[graft] def ivfLegModel(s: SparkSession, dir: String,
       nlist: Int): Seq[Array[Double]] = {
-    // key carries NO nlist segment: cachedModel parses the dir as
-    // everything after the first ':' (a third segment would break the
-    // content fingerprint), and nlist is itself a function of the dir's
-    // content — a regenerated corpus refingerprints and retrains at its
+    // key carries NO nlist segment: nlist is itself a function of the
+    // dir's content — a regenerated corpus refingerprints and retrains at its
     // own nlist, so one dir never has two live models. The require makes
     // that premise LOAD-BEARING: a caller-chosen nlist would silently
     // receive a model memoized at a different k.
@@ -2418,7 +2360,7 @@ object Similarity {
         Tables.cachedCount(s, dir, "embeddings")),
       s"ivfLegModel: nlist=$nlist must be the derived semanticDedupNlist " +
         "for this dir (the memo is keyed per dir-content, not per nlist)")
-    cachedModel(s"s38:$dir") {
+    cachedModel("s38", dir) {
       val uv = unitVecs(Tables.loadSpread(s, dir, "embeddings"),
         "vec_id", "embedding", "vec_id")
       kmeansFit(uv.filter(col("vec_id") < math.max(256, nlist)),

@@ -660,16 +660,13 @@ object TextAnalysis {
     * lands in the `train` section, the sweeps measure segmentation.
     * t14's own OUTPUT is the merge table, so t14 keeps training inline —
     * this memo only feeds the operators that CONSUME the tokenizer.
-    * Superseded generations evict like cachedModel/cachedCount. */
+    * Keyed and evicted by [[Tables.memoByContent]]. */
   private val mergesCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
   private[graft] def cachedMerges(s: SparkSession, dir: String,
       nMerges: Int): Seq[(String, String)] = {
     import s.implicits._
-    val prefix = s"bpe$nMerges:${Tables.dirHash(dir)}:"
-    val key = prefix + Tables.tableFingerprint(dir, "documents")
-    mergesCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    mergesCache.computeIfAbsent(key, _ =>
+    Tables.memoByContent(mergesCache, s"bpe$nMerges", dir, "documents")(
       bpeTrain(docs(s, dir), "text", nMerges)
         .orderBy($"rank").select($"left", $"right")
         .as[(String, String)].collect().toSeq)
