@@ -19,23 +19,12 @@ object BenchApi {
     def drainDf(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // deleteOnExit is insufficient for non-empty directories; every bench
-    // iteration gets a fresh dir and deletes it recursively in a finally,
-    // so repeated sweeps cannot accumulate vocabulary-sized parquet state
-    // under /tmp (round-10 ADVICE)
+    // every bench iteration gets a fresh dir and deletes it recursively in
+    // a finally, so repeated sweeps cannot accumulate vocabulary-sized
+    // parquet state under /tmp (round-10 ADVICE)
     def withTempDir(prefix: String)(body: String => Unit): Unit = {
-      val d = java.nio.file.Files.createTempDirectory(prefix)
-      try body(d.toString)
-      finally {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        // Files.walk holds directory handles until closed — close it, or
-        // repeated bench iterations leak one per sweep (round-11 ADVICE)
-        val st = Files.walk(d)
-        try st.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally st.close()
-      }
+      val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+      try body(d.toString) finally Tables.deleteRecursively(d)
     }
 
     // one-time trained ANN models per dir — the materialized-model

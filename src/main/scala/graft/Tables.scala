@@ -55,10 +55,6 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Register every table as a temp view for `spark.sql` surfaces. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** Content fingerprint of `<dir>/<table>.parquet`: name+length+mtime of
     * every part file PLUS the last 4 KiB of each part (the thrift-encoded
     * parquet footer — row-group stats + schema, content-dependent), so a

@@ -11,9 +11,9 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     // m03's oracle SQL embeds the chunk-fixture directory; the driver replays
     // that SQL in DuckDB AFTER this JVM exits, and a jar-classpath run would
-    // otherwise resolve the fixtures to a deleteOnExit temp dir — a path that
-    // is gone by replay time, where DuckDB's read_blob returns 0 rows
-    // SILENTLY (round-11 verdict #1). Copy the fixtures to a SIBLING of
+    // otherwise resolve the fixtures to a copy under java.io.tmpdir — a path
+    // outside outDir's lifetime, where DuckDB's read_blob returns 0 rows
+    // SILENTLY once it is gone (round-11 verdict #1). Copy the fixtures to a SIBLING of
     // outDir (round-12 verdict #1): the driver's checker enumerates every
     // subdirectory of outDir as a query result, so fixtures INSIDE it showed
     // up as a junk non-parquet "chunkfix" error row. The sibling shares

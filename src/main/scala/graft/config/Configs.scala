@@ -18,6 +18,8 @@ sealed trait SinkConfig {
   def timeout: FiniteDuration
   def backoffInit: FiniteDuration
   def backoffMax: FiniteDuration
+  /** The reference's Validate(): `Left(reason)` is its `outputs.Fail`. */
+  def validate: Either[String, SinkConfig]
 }
 
 /** Kinesis-Streams-shaped sink config (streams/config.go:8-17).
@@ -97,13 +99,9 @@ final case class FirehoseConfig(
     backoffInit: FiniteDuration = 1.second,
     backoffMax: FiniteDuration = 60.seconds) extends SinkConfig {
 
-  /** firehose/config.go:37-51. */
+  /** firehose/config.go:37-51: the streams rules, with no partition key. */
   def validate: Either[String, FirehoseConfig] =
-    if (region.isEmpty) Left("region is not defined")
-    else if (streamName.isEmpty) Left("stream_name is not defined")
-    else if (batchSize > StreamsConfig.MaxBatchSize || batchSize < 1)
-      Left(s"invalid batch size: $batchSize (must be in [1, ${StreamsConfig.MaxBatchSize}])")
-    else Right(this)
+    StreamsConfig(region, streamName, batchSize = batchSize).validate.map(_ => this)
 }
 
 object FirehoseConfig {
@@ -114,19 +112,10 @@ object FirehoseConfig {
 
   def fromOptions(options: Map[String, String],
       tolerate: String => Boolean = _ => false): Either[String, FirehoseConfig] =
-    for {
-      _ <- Configs.noUnknownKeys(options, knownKeys, tolerate)
-      bs <- Configs.intOpt(options, "batch_size", StreamsConfig.DefaultBatchSize)
-      mr <- Configs.intOpt(options, "max_retries", 3)
-      to <- Configs.durationOpt(options, "timeout", 90.seconds)
-      bi <- Configs.durationOpt(options, "backoff.init", 1.second)
-      bm <- Configs.durationOpt(options, "backoff.max", 60.seconds)
-      cfg <- FirehoseConfig(
-        region = options.getOrElse("region", ""),
-        streamName = options.getOrElse("stream_name", ""),
-        batchSize = bs, maxRetries = mr, timeout = to,
-        backoffInit = bi, backoffMax = bm).validate
-    } yield cfg
+    Configs.noUnknownKeys(options, knownKeys, tolerate)
+      .flatMap(_ => StreamsConfig.fromOptions(options, tolerate))
+      .map(s => FirehoseConfig(s.region, s.streamName, s.batchSize, s.maxRetries,
+        s.timeout, s.backoffInit, s.backoffMax))
 }
 
 private[config] object Configs {

@@ -570,34 +570,49 @@ object Multimodal {
     * round-10 verdict #5): `-Dgraft.chunkfix.dir`, the classpath — the
     * fixtures are MAIN resources, so sbt runs see them as files under
     * `target/.../classes` from ANY working directory, and a bare main jar
-    * extracts them to a temp dir — then the repo-relative path against the
-    * working directory as a last resort. The oracle SQL below is built from
+    * extracts them once to a content-addressed dir — then the repo-relative
+    * path against the working directory as a last resort. The oracle SQL below is built from
     * the SAME resolved path, so both engines read one directory wherever
     * the repo is checked out. */
 
   /** Resolve a classpath resource to a real filesystem path: directly for
-    * exploded-classes runs (file: protocol), by one-time extraction to a
-    * temp file for jar-packaged runs. `names` are the entries to extract
-    * when `base` is a directory-like resource. */
+    * exploded-classes runs (file: protocol), by extraction with
+    * [[extractFixtures]] for jar-packaged runs. `names` are the entries to
+    * extract when `base` is a directory-like resource. */
   private def materializeResource(base: String, names: Seq[String]): Option[String] =
     Option(getClass.getResource(base)).flatMap { u =>
       u.getProtocol match {
         case "file" => Some(new java.io.File(u.toURI).getAbsolutePath)
         case "jar" =>
-          val dir = java.nio.file.Files.createTempDirectory("graft_fix")
-          dir.toFile.deleteOnExit()
-          names.foreach { n =>
-            val in = getClass.getResourceAsStream(s"$base/$n")
-            if (in != null) try {
-              val f = dir.resolve(n)
-              java.nio.file.Files.copy(in, f)
-              f.toFile.deleteOnExit()
-            } finally in.close()
+          val entries = names.flatMap { n =>
+            Option(getClass.getResourceAsStream(s"$base/$n"))
+              .map(in => try n -> in.readAllBytes() finally in.close())
           }
-          Some(dir.toString)
+          Some(extractFixtures(
+            java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), entries).toString)
         case _ => None
       }
     }
+
+  /** Copy fixture files into `root/graft_fix_<hash of every name and byte>`:
+    * every JVM gets the same directory, reused across runs, so plan text
+    * naming it is stable. The copy is built in a temp directory and renamed
+    * into place atomically; a racing JVM's finished copy wins. */
+  private[graft] def extractFixtures(root: java.nio.file.Path,
+      entries: Seq[(String, Array[Byte])]): java.nio.file.Path = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    entries.foreach { case (n, b) => md.update(s"$n/${b.length}/".getBytes("UTF-8")); md.update(b) }
+    val dir = root.resolve("graft_fix_" + md.digest().take(12).map("%02x".format(_)).mkString)
+    if (!Files.isDirectory(dir)) {
+      val tmp = Files.createTempDirectory(root, s"${dir.getFileName}.tmp")
+      entries.foreach { case (n, b) => Files.write(tmp.resolve(n), b) }
+      try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.io.IOException if Files.isDirectory(dir) =>
+        entries.foreach(e => Files.delete(tmp.resolve(e._1))); Files.delete(tmp) }
+    }
+    dir
+  }
 
   private[graft] val chunkFixtureDir: String =
     sys.props.get("graft.chunkfix.dir")

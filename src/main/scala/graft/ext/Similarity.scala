@@ -692,16 +692,7 @@ object Similarity {
         bySub(s).sortBy(_._2).map(_._3).toIndexedSeq)
       PqModel(m, cbs.head.head.size, cbs)
     }
-    /** Load a [[PqModel.save]]d model — doubles round-trip parquet
-      * bit-exactly. */
-    def load(spark: SparkSession, path: String): PqModel =
-      fromDF(spark.read.parquet(path))
   }
-
-  /** Persist a trained PQ model as a parquet table (the deployment unit a
-    * 100 TB pipeline trains once and every search job loads). */
-  def savePqModel(model: PqModel, spark: SparkSession, path: String): Unit =
-    model.toDF(spark).write.mode("overwrite").parquet(path)
 
   /** Train the `m` per-subspace PQ codebooks (L2 mode — raw means, not
     * re-normalized) on the deterministic md5 sample of the corpus (see

@@ -35,11 +35,12 @@ import scala.concurrent.duration._
   * `kinesisStreamsClient` interface (streams/client.go:27-29), which is what
   * the ported delivery-semantics test matrix stubs (BatchPutSpec).
   *
-  * Scale: one client per executor partition ([[KinesisShapedSink.write]]) —
-  * the driver never sees a record; throughput scales with partition count and
-  * the per-call cap matches the service contract. Within one [[publish]]
-  * call the chunks run concurrently, at most [[MaxInflightCalls]] service
-  * calls at once, so one chunk's backoff does not hold back the others.
+  * Scale: one client per executor partition (the `graft-streams` writer,
+  * [[GraftStreamsProvider]]) — the driver never sees a record; throughput
+  * scales with partition count and the per-call cap matches the service
+  * contract. Within one [[publish]] call the chunks run concurrently, at
+  * most [[MaxInflightCalls]] service calls at once, so one chunk's backoff
+  * does not hold back the others.
   * Each chunk keeps its own sequential put → retry → backoff loop; no order
   * between chunks is kept. With one chunk per call (`batch_size` 500) that
   * loop runs alone on the caller's thread. The [[Putter]] and the
@@ -64,11 +65,11 @@ object BatchPut {
   /** Injectable clock so specs can assert backoff without sleeping. */
   type Sleeper = FiniteDuration => Unit
 
-  /** Service calls one writer keeps in flight. Both callers
-    * ([[KinesisShapedSink.write]] and the DSv2 writer) hand [[publish]] at
-    * most `MaxBatchSize` (500) records, which the default `batch_size` (50)
-    * splits into `MaxBatchSize / DefaultBatchSize` = 10 chunks: the default
-    * configuration puts all of its chunks in flight at once, while a smaller
+  /** Service calls one writer keeps in flight. The `graft-streams` writer
+    * hands [[publish]] at most `MaxBatchSize` (500) records, which the
+    * default `batch_size` (50) splits into `MaxBatchSize / DefaultBatchSize`
+    * = 10 chunks: the default configuration puts all of its chunks in flight
+    * at once, while a smaller
     * `batch_size` queues its extra chunks behind these 10 calls rather than
     * multiplying the connections a writer opens. Records in flight stay
     * ≤ 500 per writer either way. */
@@ -115,6 +116,18 @@ object BatchPut {
     def +(o: PublishStats): PublishStats = PublishStats(
       batch + o.batch, acked + o.acked, dropped + o.dropped,
       retries + o.retries, calls + o.calls)
+
+    /** These counters as sink progress metrics (`records` is [[batch]]). */
+    def metrics: Map[String, String] = Map("records" -> batch, "acked" -> acked,
+      "retries" -> retries, "dropped" -> dropped, "calls" -> calls).map(e => e._1 -> s"${e._2}")
+  }
+
+  object PublishStats {
+    /** Inverse of [[PublishStats.metrics]]; an absent entry reads 0. */
+    def fromMetrics(m: java.util.Map[String, String]): PublishStats = {
+      def n(k: String): Long = Option(m.get(k)).fold(0L)(_.toLong)
+      PublishStats(n("records"), n("acked"), n("dropped"), n("retries"), n("calls"))
+    }
   }
 
   /** Zip service results to sent records by index; `errorCode` present and
@@ -186,30 +199,5 @@ object BatchPut {
       attempt += 1
     }
     stats.copy(dropped = pending.size)
-  }
-}
-
-/** foreachBatch/foreachPartition wiring: the executor-side writer (O1/O2).
-  * `newPutter` is a serializable factory so each partition builds its own
-  * service client (no driver round-trip, no shared connection). */
-object KinesisShapedSink extends Serializable {
-  import BatchPut._
-
-  /** Write a (data: string, partition_key: string) DataFrame through the
-    * delivery machinery, one client per partition. Returns nothing — stats
-    * surface through `observe()`/listeners in the streaming wiring. */
-  def write(df: org.apache.spark.sql.DataFrame, cfg: SinkConfig,
-      newPutter: () => Putter): Unit = {
-    val hasKey = df.columns.contains("partition_key")
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      val putter = newPutter()
-      rows.grouped(graft.config.StreamsConfig.MaxBatchSize).foreach { group =>
-        val recs = group.map { r =>
-          Record(r.getAs[String]("data").getBytes("UTF-8"),
-            if (hasKey) r.getAs[String]("partition_key") else "")
-        }
-        BatchPut.publish(putter, cfg, recs)
-      }
-    }
   }
 }

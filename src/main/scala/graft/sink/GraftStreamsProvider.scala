@@ -1,11 +1,17 @@
 package graft.sink
 
+import java.nio.ByteBuffer
 import java.util
+import java.util.concurrent.atomic.AtomicReference
 
-import graft.config.StreamsConfig
+import graft.config.{SinkConfig, StreamsConfig}
+import org.apache.spark.SparkConf
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.streaming.ReportsSinkMetrics
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -16,7 +22,8 @@ import scala.jdk.CollectionConverters._
 
 /** DataSource V2 registration of the Kinesis-shaped sink (SURVEY §2.5 O3 —
   * the Spark twin of the reference's plugin registration,
-  * s12v/awsbeats plugins/kinesis/main.go:10-13):
+  * s12v/awsbeats plugins/kinesis/main.go:10-13), and the only delivery path:
+  * `Pipeline.toKinesisShapedSink` and `toFirehoseShapedSink` write through it.
   *
   * {{{
   *   records.writeStream.format("graft-streams")
@@ -27,82 +34,104 @@ import scala.jdk.CollectionConverters._
   *
   * The short name resolves through the standard `DataSourceRegister`
   * service-loader file. Input schema: `data STRING` (NDJSON payload) plus an
-  * optional `partition_key STRING`. Each task partition builds its own
-  * putter (one service client per executor core — no driver round-trip) and
-  * routes rows through [[BatchPut.publish]], so the DSv2 path and the
-  * `foreachBatch` path share the identical delivery semantics (chunking,
-  * failed-subset retry, backoff, at-least-once).
+  * optional `partition_key STRING` (absent ⇒ key `""`, the firehose shape).
+  * Each task builds its own putter (one service client per executor core —
+  * no driver round-trip) and routes its rows through [[BatchPut.publish]].
   *
   * The putter is configured by class name (`putter.class`, a no-arg
   * constructor implementing [[BatchPut.Putter]]) because DSv2 options are
   * string-only — the same seam the tests stub, and where a real AWS SDK
-  * client factory plugs in.
+  * client factory plugs in. The config is validated in `start()`/`save()`
+  * (≈ outputs.Fail). Each micro-batch's summed [[BatchPut.PublishStats]]
+  * appear in `StreamingQueryProgress.sink.metrics`.
   */
 class GraftStreamsProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-streams"
   override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftStreamsProvider.recordSchema
+    StructType.fromDDL("data STRING, partition_key STRING")
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new GraftStreamsTable(schema)
+      properties: util.Map[String, String]): Table = {
+    val (cfg, newPutter) =
+      GraftStreamsProvider.sinkFrom(new CaseInsensitiveStringMap(properties).asScala.toMap)
+    new GraftStreamsTable(schema, cfg, newPutter)
+  }
 }
 
 object GraftStreamsProvider {
-  val recordSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("data", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("partition_key", org.apache.spark.sql.types.StringType)))
+  /** Internal: carries `Pipeline`'s typed config and putter factory,
+    * Java-serialized, in place of the config keys and `putter.class`. */
+  private val Handoff = "putter.handoff"
 
   /** Options Spark itself injects on the DSv2 write path — not config, not
     * typos; everything else unknown is rejected by the shared front end. */
   private val infraKeys = Set("checkpointlocation", "path", "queryname")
 
-  /** DSv2 options → validated config via the shared untyped front end
-    * ([[StreamsConfig.fromOptions]]) — one unpack path for both routes.
-    * `putter.*` keys belong to this provider (the client-factory seam);
-    * anything else unrecognized fails at plan time like a typo'd YAML key. */
-  private[sink] def configFrom(options: Map[String, String]): StreamsConfig =
-    StreamsConfig.fromOptions(options,
-        tolerate = k => k.startsWith("putter.") || infraKeys(k))
-      .fold(err => throw new IllegalArgumentException(err), identity)
+  /** The validated config and the executor-side putter factory. DSv2
+    * options go through the shared untyped front end
+    * ([[StreamsConfig.fromOptions]]); `putter.*` keys belong to this
+    * provider, anything else unrecognized fails like a typo'd YAML key. */
+  private def sinkFrom(options: Map[String, String]): (SinkConfig, () => BatchPut.Putter) = {
+    def fail(err: String) = throw new IllegalArgumentException(err)
+    options.get(Handoff) match {
+      case Some(h) =>
+        val (cfg, newPutter) = serializer.deserialize[(SinkConfig, () => BatchPut.Putter)](
+          ByteBuffer.wrap(util.Base64.getDecoder.decode(h)))
+        (cfg.validate.fold(fail, identity), newPutter)
+      case None =>
+        val cfg = StreamsConfig.fromOptions(options,
+          tolerate = k => k.startsWith("putter.") || infraKeys(k)).fold(fail, identity)
+        val putterClass = options.getOrElse("putter.class", fail("putter.class option is required"))
+        (cfg, () => newPutter(putterClass))
+    }
+  }
 
-  private[sink] def newPutter(className: String): BatchPut.Putter =
+  /** The internal option that hands a typed config and a serializable
+    * putter factory to this provider (used by `Pipeline`). */
+  private[graft] def handoff(cfg: SinkConfig,
+      newPutter: () => BatchPut.Putter): Map[String, String] =
+    Map(Handoff -> util.Base64.getEncoder.encodeToString(
+      JavaUtils.bufferToArray(serializer.serialize((cfg, newPutter)))))
+
+  /** Spark's Java serializer resolves classes through the context class
+    * loader, so factories defined by the caller's classes deserialize. */
+  private def serializer = new JavaSerializer(new SparkConf(false)).newInstance()
+
+  private def newPutter(className: String): BatchPut.Putter =
     Class.forName(className).getDeclaredConstructor()
       .newInstance().asInstanceOf[BatchPut.Putter]
 }
 
-private class GraftStreamsTable(schema0: StructType) extends Table with SupportsWrite {
+private class GraftStreamsTable(schema0: StructType, cfg: SinkConfig,
+    newPutter: () => BatchPut.Putter)
+  extends Table with SupportsWrite with ReportsSinkMetrics {
   override def name(): String = "graft-streams"
+  override def toString: String = name()
   override def schema(): StructType = schema0
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.STREAMING_WRITE, TableCapability.BATCH_WRITE)
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val options = info.options.asScala.toMap
-    val cfg = GraftStreamsProvider.configFrom(options) // validate at plan time (≈ outputs.Fail)
-    val putterClass = options.getOrElse("putter.class",
-      throw new IllegalArgumentException("putter.class option is required"))
-    val dataIdx = info.schema().fieldIndex("data")
-    val keyIdx = if (info.schema().fieldNames.contains("partition_key"))
-      info.schema().fieldIndex("partition_key") else -1
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toStreaming: StreamingWrite =
-          new GraftStreamingWrite(cfg, putterClass, dataIdx, keyIdx)
-        override def toBatch: BatchWrite =
-          new GraftBatchWrite(cfg, putterClass, dataIdx, keyIdx)
-      }
-    }
-  }
+  /** Delivery outcomes committed since the last progress report, which
+    * reads them once: each micro-batch reports its own. */
+  private val delivered = new AtomicReference(BatchPut.PublishStats())
+  override def metrics(): util.Map[String, String] =
+    delivered.getAndSet(BatchPut.PublishStats()).metrics.asJava
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new GraftWrite(new GraftWriterFactory(cfg, newPutter, info.schema().fieldIndex("data"),
+      info.schema().fieldNames.indexOf("partition_key")),
+      s => delivered.accumulateAndGet(s, _ + _))
 }
 
-/** Task-side writer: accumulates the partition's rows into ≤batch-size
-  * chunks and publishes on commit — mirroring `Publish(batch)`'s unit of
-  * work. Epoch/commit metadata gives at-least-once on replay (E3). */
-private class GraftDataWriter(cfg: StreamsConfig, putterClass: String,
+/** Task-side writer: accumulates the partition's rows into ≤500-record
+  * groups and publishes each — mirroring `Publish(batch)`'s unit of work —
+  * then commits the task's summed outcomes. Epoch/commit metadata gives
+  * at-least-once on replay (E3). `keyIdx` -1: every key is `""`. */
+private class GraftDataWriter(cfg: SinkConfig, newPutter: () => BatchPut.Putter,
     dataIdx: Int, keyIdx: Int) extends DataWriter[InternalRow] {
-  private val putter = GraftStreamsProvider.newPutter(putterClass)
+  private val putter = newPutter()
   private val buf = scala.collection.mutable.ArrayBuffer.empty[BatchPut.Record]
+  private var stats = BatchPut.PublishStats()
 
   override def write(row: InternalRow): Unit = {
     val data = row.getUTF8String(dataIdx).getBytes
@@ -112,36 +141,40 @@ private class GraftDataWriter(cfg: StreamsConfig, putterClass: String,
     if (buf.length >= StreamsConfig.MaxBatchSize) flush()
   }
   private def flush(): Unit = {
-    if (buf.nonEmpty) { BatchPut.publish(putter, cfg, buf.toSeq); buf.clear() }
+    if (buf.nonEmpty) { stats += BatchPut.publish(putter, cfg, buf.toSeq); buf.clear() }
   }
-  override def commit(): WriterCommitMessage = { flush(); GraftCommit }
+  override def commit(): WriterCommitMessage = { flush(); GraftCommit(stats) }
   override def abort(): Unit = buf.clear()
   override def close(): Unit = ()
 }
 
-private case object GraftCommit extends WriterCommitMessage
+private final case class GraftCommit(stats: BatchPut.PublishStats) extends WriterCommitMessage
 
-private class GraftWriterFactory(cfg: StreamsConfig, putterClass: String,
+private class GraftWriterFactory(cfg: SinkConfig, newPutter: () => BatchPut.Putter,
     dataIdx: Int, keyIdx: Int)
   extends StreamingDataWriterFactory with DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(cfg, putterClass, dataIdx, keyIdx)
+    createWriter(partitionId, taskId)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(cfg, putterClass, dataIdx, keyIdx)
+    new GraftDataWriter(cfg, newPutter, dataIdx, keyIdx)
 }
 
-private class GraftStreamingWrite(cfg: StreamsConfig, putterClass: String,
-    dataIdx: Int, keyIdx: Int) extends StreamingWrite {
+/** Both write routes. A streaming epoch's commit sums its tasks' outcomes
+  * into `report`; a batch write delivers the same way but ignores them
+  * (it has no progress to carry them). */
+private class GraftWrite(factory: GraftWriterFactory, report: BatchPut.PublishStats => Unit)
+  extends WriteBuilder with Write with StreamingWrite with BatchWrite {
+  override def build(): Write = this
+  override def toStreaming: StreamingWrite = this
+  override def toBatch: BatchWrite = this
+  override def useCommitCoordinator(): Boolean = true // both traits' default
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftWriterFactory(cfg, putterClass, dataIdx, keyIdx)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
+    factory
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    report(messages.iterator.collect { case GraftCommit(s) => s }
+      .foldLeft(BatchPut.PublishStats())(_ + _))
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private class GraftBatchWrite(cfg: StreamsConfig, putterClass: String,
-    dataIdx: Int, keyIdx: Int) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(cfg, putterClass, dataIdx, keyIdx)
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }

@@ -34,11 +34,12 @@ package graft.sink
   * // entries carry only data, responses come from resp.requestResponses().
   * }}}
   *
-  * Wiring: `() => new KinesisPutter(cfg.region, cfg.streamName)` into
-  * [[KinesisShapedSink.write]] / `Pipeline.toKinesisShapedSink`, or
-  * `putter.class=com.example.KinesisPutter` for the DSv2
-  * `format("graft-streams")` path (needs the no-arg-constructor variant
-  * reading region/stream from system properties or a config file).
+  * Wiring: one delivery path, the `graft-streams` writer, configured either
+  * with a serializable factory — `() => new KinesisPutter(cfg.region,
+  * cfg.streamName)` into `Pipeline.toKinesisShapedSink` — or with
+  * `putter.class=com.example.KinesisPutter` on `format("graft-streams")`
+  * (needs the no-arg-constructor variant reading region/stream from system
+  * properties or a config file).
   *
   * Credentials/timeout: the SDK default chain handles credentials on a real
   * cluster (instance profile / IRSA); set the client's apiCallTimeout to

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sink.BatchPut.PublishStats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -16,9 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * quirk (metrics only reported when dropped > 0, client.go:88-95) is
   * deliberately NOT copied — every batch reports.
   *
-  * Acked/retried/dropped-at-service counts live sink-side in
-  * [[graft.sink.BatchPut.PublishStats]]; this layer covers the encode/key
-  * stage (F1/F2 drops).
+  * This layer counts the encode/key stage (F1/F2 drops); [[PublishListener]]
+  * forwards the sink's service-side [[graft.sink.BatchPut.PublishStats]]
+  * alongside.
   */
 object Observability {
 
@@ -33,14 +34,18 @@ object Observability {
       coalesce(sum(when(col("partition_key").isNull, 1L).otherwise(0L)), lit(0L))
         .as("n_dropped"))
 
-  /** One micro-batch's counters: acked = events − dropped (observer M1
-    * contract: NewBatch(n) / Dropped(d) / Acked(n−d)). */
-  final case class BatchMetrics(batchId: Long, nEvents: Long, nDropped: Long) {
-    def nAcked: Long = nEvents - nDropped
+  /** One micro-batch's counters: the encode side (`nEvents` in, `nDropped`
+    * with no partition key) and the sink's `delivery` (observer M1 contract:
+    * NewBatch(n) / Dropped(d) / Acked(delivery.acked)). */
+  final case class BatchMetrics(batchId: Long, nEvents: Long, nDropped: Long,
+      delivery: PublishStats = PublishStats()) {
+    /** Events handed to the sink: events − key drops, not service acks. */
+    def nKeyed: Long = nEvents - nDropped
   }
 
   /** Streaming listener that forwards the observed M1 counters per
-    * micro-batch. Register with `spark.streams.addListener`. */
+    * micro-batch, with the sink's delivery counters of the same progress.
+    * Register with `spark.streams.addListener`. */
   class PublishListener(onMetrics: BatchMetrics => Unit,
       name: String = DefaultName) extends StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -52,7 +57,8 @@ object Observability {
         onMetrics(BatchMetrics(
           e.progress.batchId,
           row.getAs[Long]("n_events"),
-          row.getAs[Long]("n_dropped")))
+          row.getAs[Long]("n_dropped"),
+          PublishStats.fromMetrics(e.progress.sink.metrics)))
       }
     }
   }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.config.StreamsConfig
+import graft.config.{SinkConfig, StreamsConfig}
 import graft.encode.Ndjson
 import graft.keys.PartitionKeys
-import graft.sink.{BatchPut, KinesisShapedSink}
+import graft.sink.{BatchPut, GraftStreamsProvider}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -16,7 +16,7 @@ import scala.concurrent.duration.FiniteDuration
   *
   *   libbeat queue flush (flush.min_events/timeout)  ≈ micro-batch trigger
   *   mapEvents (encode + key, drop failures)         ≈ narrow transform stage
-  *   putKinesisRecords + collectFailed + backoff     ≈ foreachBatch partition writer
+  *   putKinesisRecords + collectFailed + backoff     ≈ graft-streams DSv2 writer
   *   batch.ACK → registrar offset commit             ≈ checkpoint commit
   *
   * Sources: file-tail NDJSON (S2 — filebeat prospector twin) and `rate` (S3/S4
@@ -103,28 +103,13 @@ object Pipeline {
 
   /** Wire a keyed-record stream into the Kinesis-shaped sink with a
     * processing-time trigger (the flush.timeout twin) and checkpointing
-    * (the ACK/registrar twin). `newPutter` must be serializable.
-    *
-    * `partitionByKey = true` hash-repartitions on the partition key before
-    * the sink — the engine-side analogue of Kinesis shard routing (SURVEY
-    * §2.4 K1): all records of a key flow through one task, hence one
-    * writer. It does not keep their order: the writer's chunks are in
-    * flight concurrently, and within a chunk a failed-subset retry already
-    * sends a record after ones queued behind it (PutRecords itself promises
-    * no order across the records of one call). Costs a shuffle; leave off
-    * when the sink's own key-hashing (the real Kinesis) is the routing
-    * authority. */
+    * (the ACK/registrar twin), through `format("graft-streams")`
+    * ([[GraftStreamsProvider]]). `newPutter` must be serializable; each task
+    * calls it once. `cfg` is validated in `start()`. */
   def toKinesisShapedSink(records: DataFrame, cfg: StreamsConfig,
       newPutter: () => BatchPut.Putter, checkpointDir: String,
-      trigger: FiniteDuration, partitionByKey: Boolean = false): DataStreamWriter[Row] =
-    (if (partitionByKey) records.repartition(col("partition_key")) else records)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(trigger.toMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        KinesisShapedSink.write(batch, cfg, newPutter)
-      }
+      trigger: FiniteDuration): DataStreamWriter[Row] =
+    toGraftStreams(records, cfg, newPutter, checkpointDir, trigger)
 
   /** P2: the firehose publish transform — encode + newline, NO partition key
     * (firehose/client.go:111-137; the sink record is {Data} only,
@@ -156,17 +141,21 @@ object Pipeline {
       .trigger(Trigger.ProcessingTime(trigger.toMillis))
 
   /** O2: wire an unkeyed record stream into the firehose-shaped sink — same
-    * chunk/retry/backoff machinery, records carry an empty key. */
+    * writer and delivery machinery, records carry an empty key. */
   def toFirehoseShapedSink(records: DataFrame, cfg: graft.config.FirehoseConfig,
       newPutter: () => BatchPut.Putter, checkpointDir: String,
       trigger: FiniteDuration): DataStreamWriter[Row] =
+    toGraftStreams(records, cfg, newPutter, checkpointDir, trigger)
+
+  private def toGraftStreams(records: DataFrame, cfg: SinkConfig,
+      newPutter: () => BatchPut.Putter, checkpointDir: String,
+      trigger: FiniteDuration): DataStreamWriter[Row] =
     records.writeStream
+      .format("graft-streams")
+      .options(GraftStreamsProvider.handoff(cfg, newPutter))
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(trigger.toMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        KinesisShapedSink.write(batch, cfg, newPutter)
-      }
 
   // ------------------------------------------------------------------
   // Streaming semantics beyond the reference (SURVEY §2.8 streaming row):

@@ -4,7 +4,7 @@ import graft.config.StreamsConfig
 import graft.sink.BatchPut
 import graft.streaming.{LocalCheckpointFileManager, Pipeline}
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, HDFSMetadataLog}
 import org.apache.spark.sql.types._
@@ -134,6 +134,27 @@ class CheckpointFileManagerSpec extends SparkSpec {
     s.conf.set(GraftSession.CheckpointFileManagerConf._1,
       classOf[FileContextBasedCheckpointFileManager].getName)
     s
+  }
+
+  test("a checkpoint written through a plain foreachBatch sink resumes on toKinesisShapedSink") {
+    Collecting.got.clear()
+    val inDir = tempDir("graft-cfm-upgrade-in")
+    val ckDir = tempDir("graft-cfm-upgrade-ck")
+    val a = addFile(inDir, "a", 7)
+    val cfg = StreamsConfig(region = "us-east-1", streamName = "t", partitionKey = "host")
+    val src = Pipeline.readNdjsonStream(spark, inDir.getAbsolutePath, schema)
+    val seen = new ConcurrentLinkedQueue[String]()
+    val q = Pipeline.publishTransform(src, cfg)._1.writeStream
+      .option("checkpointLocation", ckDir.getAbsolutePath)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.collect().foreach(r => seen.add(r.getString(0)))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    assert(seen.asScala.toSeq.sorted == a.sorted)
+    val b = addFile(inDir, "b", 5)
+    ship(spark, inDir, ckDir)
+    assert(Collecting.got.asScala.toSeq.sorted == b.sorted,
+      "every later record delivered, no committed record put again")
   }
 
   for ((label, firstSpark) <- Seq("Spark's manager -> this one" -> true,

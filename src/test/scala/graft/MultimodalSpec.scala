@@ -478,4 +478,18 @@ class MultimodalSpec extends SparkSpec {
       .collect()
     assert(agg.length == 1 && agg.head.getAs[Long]("n") > 0)
   }
+
+  test("jar fixtures extract once to a content-addressed directory") {
+    val root = java.nio.file.Files.createTempDirectory("graft-fix-spec")
+    val entries = Seq("a.bin" -> Array[Byte](1, 2, 3), "empty.bin" -> Array.emptyByteArray)
+    val dir = Multimodal.extractFixtures(root, entries)
+    assert(Multimodal.extractFixtures(root, entries) == dir, "a second call reuses the copy")
+    entries.foreach { case (n, bytes) =>
+      assert(java.nio.file.Files.readAllBytes(dir.resolve(n)).sameElements(bytes), n)
+    }
+    val other = Multimodal.extractFixtures(root, Seq("a.bin" -> Array[Byte](1, 2, 4)))
+    assert(other != dir, "other bytes, other directory")
+    val names = java.nio.file.Files.list(root)
+    try assert(names.count() == 2, "no temp directory left behind") finally names.close()
+  }
 }

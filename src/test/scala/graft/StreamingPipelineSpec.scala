@@ -121,7 +121,7 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(m.nonEmpty, "at least one observed batch")
       assert(m.map(_.nEvents).sum == 3L, "all events counted")
       assert(m.map(_.nDropped).sum == 1L, "null-key row counted as dropped")
-      assert(m.map(_.nAcked).sum == 2L, "acked = events - dropped")
+      assert(m.map(_.nKeyed).sum == 2L, "keyed = events - dropped")
       assert(CollectingPutter.got.size == 2, "only keyed events delivered")
     } finally spark.streams.removeListener(listener)
   }
