@@ -126,7 +126,7 @@ object BenchApi {
           d
         })
         drainDf(graft.ext.Similarity.ivfPqSearch(m,
-          graft.streaming.CurationStream.loadIvfPqIndex(spark, idxDir),
+          graft.streaming.CurationStream.loadIndex(spark, idxDir, "id"),
           e, e.filter(col("vec_id") < 20), "vec_id", "embedding", k = 5,
           pruneLists = true))
       },

@@ -23,15 +23,19 @@ import org.apache.spark.sql.types.StructType
   */
 object Ndjson {
 
+  /** The NDJSON `data` column over the named columns: their compact JSON
+    * object plus the trailing '\n' — the one record encoder every publish
+    * path projects. */
+  def data(columns: Seq[String]): Column =
+    concat(to_json(struct(columns.map(col): _*)), lit("\n")).as("data")
+
   /** Serialize all columns of `df` to an NDJSON `data` column (P1/P2). */
   def encode(df: DataFrame): DataFrame =
-    df.select(concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"))
+    df.select(data(df.columns.toIndexedSeq))
 
   /** Streams-shaped record: (data, partition_key) — P1 + K1/K2. */
   def encodeKeyed(df: DataFrame, key: Column): DataFrame =
-    df.select(
-      concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"),
-      key.cast("string").as("partition_key"))
+    df.select(data(df.columns.toIndexedSeq), key.cast("string").as("partition_key"))
 
   /** Decode side (S2): parse NDJSON lines in PERMISSIVE mode, splitting
     * parse failures onto a dropped side-output — the engine twin of

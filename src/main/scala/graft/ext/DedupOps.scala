@@ -903,7 +903,10 @@ object DedupOps {
     * dropped ids. Results are bit-identical to
     * `cosinePairs(...).select("id_b").distinct()` for unique-id inputs —
     * the CosineDropAgg scaladoc lists the IEEE/NaN/±0.0 replay contract,
-    * and DedupOpsSpec pins the equivalence against the join plan.
+    * and DedupOpsSpec pins the equivalence against the join plan. A
+    * zero-norm vector fails the query on both plans, but not necessarily
+    * at the identical pair: the early exit can skip a pair the join
+    * divides first.
     *
     * Null-block rows never pair in [[cosinePairs]] (the self-join's
     * equality condition skips null keys), so their vectors are nulled in

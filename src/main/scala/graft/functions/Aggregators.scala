@@ -198,9 +198,12 @@ object Aggregators {
     *    Catalyst `sqrt(graft_dot(v,v))` of the old plan;
     *  - `cosine = dot / (na * nb)` in that operation order; an
     *    overflow-NaN cosine (Inf/Inf) replays exactly, and a ZERO divisor
-    *    raises — the ANSI division-by-zero the Catalyst division throws
-    *    (Spark 4 default; zero-norm vectors are out of the embedding
-    *    contract, so the failure must stay LOUD, not become a NaN drop);
+    *    raises, as the join plan's ANSI division does (Spark 4 default;
+    *    zero-norm vectors are out of the embedding contract, so the
+    *    failure must stay LOUD, not become a NaN drop). Both plans fail,
+    *    but not necessarily at the same pair: the scan stops at a row's
+    *    first dropping partner, so it can skip a zero-norm pair the join
+    *    would have divided first;
     *  - the threshold test replays Spark's DoubleType `>=`
     *    (`Utils.nanSafeCompareDoubles`): NaN ≥ threshold is TRUE, and
     *    `0.0 >= -0.0` ties exactly like the SQL comparison;
@@ -269,8 +272,9 @@ object Aggregators {
               var d = 0
               while (d < len) { s += va(d) * vj(d); d += 1 }
               val den = nr(a) * nr(j)
-              // ANSI parity with the join plan's Catalyst division: a zero
-              // divisor (zero-norm vector) must fail loudly, not NaN-drop
+              // like the join plan's ANSI division, a zero divisor
+              // (zero-norm vector) fails loudly instead of NaN-dropping —
+              // possibly at a different pair than the join would name
               if (den == 0.0) throw new ArithmeticException(
                 "[DIVIDE_BY_ZERO] cosine norm product is 0 for ids " +
                   s"${m(a)._1}/${m(j)._1} — zero-norm vectors are out of " +

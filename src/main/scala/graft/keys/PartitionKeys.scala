@@ -1,7 +1,7 @@
 package graft.keys
 
 import graft.config.StreamsConfig
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *     field or a non-string value is an ERROR and the event is dropped
   *     (surfaced at streams/client.go:148-151). No implicit casting — here a
   *     non-string schema type or null value yields a NULL key column, and
-  *     [[PartitionKeys.split]] routes those rows to the dropped side-output.
+  *     [[graft.streaming.Pipeline.publishTransform]] routes those rows to the
+  *     dropped side-output.
   *   - xid provider (partition_key.go:41-47): a globally-unique, time-sortable
   *     key per event for uniform shard spread. Implemented as the native
   *     codegen'd [[graft.functions.Xid]] Catalyst expression with rs/xid
@@ -59,14 +60,4 @@ object PartitionKeys {
   def forConfig(cfg: StreamsConfig, schema: StructType): Column =
     if (cfg.partitionKeyProvider == "xid") xidKey
     else fieldKey(schema, cfg.partitionKey)
-
-  /** Attach the key and split into (publishable, dropped) — the engine's
-    * F2 filter (streams/client.go:148-151): rows whose key resolved NULL are
-    * retained on a side output for audit instead of silently vanishing
-    * (SURVEY §4.3 "dropped-event side channel"). */
-  def split(df: DataFrame, key: Column): (DataFrame, DataFrame) = {
-    val keyed = df.withColumn("partition_key", key)
-    (keyed.filter(col("partition_key").isNotNull),
-      keyed.filter(col("partition_key").isNull))
-  }
 }

@@ -1,9 +1,13 @@
 package graft.streaming
 
 import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField,
+  StructType}
 
 import graft.ext.TextOps._
 
@@ -28,6 +32,49 @@ import graft.ext.TextOps._
   * plan-literal hash array is cheaper (no per-element hashing). Dedup state
   * is bounded by the watermark, not the stream length — the standard trade:
   * only duplicates arriving within the horizon collapse.
+  *
+  * STREAMED STORES. Every `*Batch` writer here is a `foreachBatch` body
+  * that maintains one on-disk store, and every store keeps one protocol,
+  * implemented once by the private `Store` helper:
+  *
+  *   - Layout: parquet partitions `batch=<id>/` (the two monitor series use
+  *     `report=<id>/`), epoch markers `_fence/epoch-<n>`, parameter files
+  *     `_meta.<key>`, and — only while a compaction runs or after it
+  *     crashed — a temp partition `.compact-<id>/` and an aside copy
+  *     `.old-<id>/`. Readers see only the partitions.
+  *   - Lock: writers, readers and compactors of a store serialize on a
+  *     per-directory JVM lock (the supported shape: `foreachBatch` and
+  *     maintenance compaction run on the stream's driver), so a heal never
+  *     catches a same-JVM compaction between its renames.
+  *   - Fence: a compactor in ANOTHER process is held off by epochs. Every
+  *     writer and compactor acquires the next `epoch-<n>` by atomic
+  *     create-new. The writer never yields (the stream owns its store); a
+  *     compactor re-checks the highest epoch before each destructive step
+  *     and aborts, returning false, when a writer moved under it. An abort
+  *     leaves duplicated rows at worst, never lost ones.
+  *   - Heal: before every write, read and compaction, an interrupted
+  *     compaction is recovered: an `.old-<id>` whose partition is missing
+  *     is renamed back, one whose partition exists is deleted, and
+  *     `.compact-<id>` temps are deleted.
+  *   - Verified write: a writer rewrites exactly its own `batch=<id>`
+  *     (deleting it when the batch has no rows), then checks the partition
+  *     is there (or gone) and re-writes if a lagging compactor delete — the
+  *     one check-then-act window the fence cannot close — removed it. A
+  *     replayed micro-batch thus leaves the store as its first attempt did:
+  *     the idempotent-sink condition of `foreachBatch`.
+  *   - Compaction and its manifest: `compact*` merges every partition below
+  *     a batch id into one named after the highest merged id — merge into
+  *     `.compact-<max>` with a `_merged` manifest of the folded ids, rename
+  *     `batch=<max>` aside, rename the temp into place, then delete the
+  *     aside, the folded partitions and the manifest. Readers skip every
+  *     partition a present manifest lists, so a crash after the commit
+  *     rename neither double-counts the sum-merged stores nor duplicates
+  *     rows (Spark's reader skips `_`-prefixed files).
+  *   - Precondition: give a compactor only the streaming checkpoint's
+  *     committed horizon. A committed micro-batch is never replayed; a
+  *     replayed batch below the horizon would see its own rows (the
+  *     near-dup index drops its own documents) or be counted twice (the
+  *     count and stat stores).
   */
 object CurationStream {
 
@@ -131,16 +178,292 @@ object CurationStream {
       n: Int): DataFrame =
     curate(docs, ExactGrams(benchHashes), minTokens, n)
 
+  // ------------------------------------------------------- store protocol
+  /** Per-directory JVM locks of the store protocol (object scaladoc), keyed
+    * on the directory string as given. */
+  private val indexLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def lockFor(dir: String): Object =
+    indexLocks.computeIfAbsent(dir, _ => new Object)
+
+  /** The `<prefix><id>` id of a store entry, if it is one. */
+  private def idOf(p: Path, prefix: String): Option[Long] =
+    Option(p.getName).filter(_.startsWith(prefix))
+      .flatMap(_.stripPrefix(prefix).toLongOption)
+
+  /** One store directory and the protocol of the object scaladoc — the only
+    * code in this file that touches the filesystem. `prefix` names the
+    * partitions: `batch=`, or `report=` for the monitor series. */
+  private final class Store(spark: SparkSession, dir: String,
+      prefix: String = "batch=") {
+    private val root = new Path(dir)
+    private val fs: FileSystem =
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private val Manifest = "_merged"
+    private def part(id: Long) = new Path(root, s"$prefix$id")
+
+    def lock: Object = lockFor(dir)
+    def exists: Boolean = fs.exists(root)
+    def sub(name: String): Store = new Store(spark, s"$dir/$name", prefix)
+
+    /** The one writer: under the lock, [[open]], then a verified write of
+      * exactly `<prefix><batchId>` holding `rows`, which is computed from
+      * the healed store (an empty frame deletes the partition). */
+    def writeBatch(batchId: Long, what: String, sortCols: Seq[String] = Nil,
+        meta: Seq[(String, Long)] = Nil, onWrite: () => Unit = () => ())
+        (rows: => DataFrame): Unit =
+      lock.synchronized {
+        open(meta: _*)
+        write(batchId, Some(rows), sortCols, what, onWrite)
+      }
+
+    /** The writer's steps before its write; the caller holds the lock.
+      * The fence comes first: from here on, a compactor holding an older
+      * epoch aborts at its next check. */
+    def open(meta: (String, Long)*): Unit = {
+      fs.mkdirs(root)
+      Fence.acquire()
+      requireMeta(meta: _*)
+      healCompaction()
+    }
+
+    /** Rewrite exactly `<prefix><batchId>` — or delete it when `rows` is
+      * None or empty — and re-check until the result survives a lagging
+      * compactor delete. Each compaction run deletes a partition at most
+      * once, so one re-write converges; the bound guards against a stack of
+      * broken compactors. Sort columns make the write range-partitioned and
+      * sorted, so each row group covers a narrow key slice that a pushed
+      * filter skips by its stats. `onWrite` is a test seam run after each
+      * attempt (the fencing spec injects the racing delete there). */
+    def write(batchId: Long, rows: Option[DataFrame], sortCols: Seq[String],
+        what: String, onWrite: () => Unit): Unit = {
+      val target = part(batchId)
+      val live = rows.filterNot(_.isEmpty)
+      val by = sortCols.map(col)
+      var attempts = 0
+      var settled = false
+      while (!settled) {
+        attempts += 1
+        require(attempts <= 5,
+          s"$what: $prefix$batchId partition kept disappearing under " +
+            "concurrent compaction — external coordination is broken")
+        live match {
+          case Some(df) =>
+            (if (by.isEmpty) df
+             else df.repartitionByRange(by: _*).sortWithinPartitions(by: _*))
+              .write.mode("overwrite").parquet(target.toString)
+          case None => fs.delete(target, true): Unit
+        }
+        onWrite()
+        settled =
+          if (live.isDefined) fs.exists(new Path(target, "_SUCCESS"))
+          else !fs.exists(target)
+      }
+    }
+
+    /** The one reader: the union of the partitions with id < `below` that
+      * no present manifest lists as folded, after a heal; None when there
+      * is none. Reads each partition as its own path, so no
+      * partition-discovery column is added. */
+    def read(below: Long = Long.MaxValue): Option[DataFrame] =
+      readParts(listing()._1.filter(_._1 < below))
+
+    private def readParts(parts: Seq[(Long, Path)]): Option[DataFrame] =
+      if (parts.isEmpty) None
+      else Some(spark.read.parquet(parts.map(_._2.toString): _*))
+
+    /** Under the lock: heal, then (live partitions in id order, partitions
+      * a present manifest lists as folded into another). */
+    private def listing(): (Seq[(Long, Path)], Seq[(Long, Path)]) =
+      lock.synchronized {
+        if (!fs.exists(root)) (Nil, Nil)
+        else {
+          healCompaction()
+          val parts = fs.listStatus(root).toSeq.filter(_.isDirectory)
+            .flatMap(s => idOf(s.getPath, prefix).map(_ -> s.getPath))
+            .sortBy(_._1)
+          val folded = parts.map(p => new Path(p._2, Manifest)).filter(fs.exists)
+            .flatMap(m => readText(m).split('\n').flatMap(_.trim.toLongOption)).toSet
+          parts.partition(p => !folded(p._1))
+        }
+      }
+
+    /** Compact every partition below `upto` into one named after the
+      * highest merged id (object scaladoc): `merge` folds their union.
+      * Folded partitions a crashed run left behind are deleted. `onStep`
+      * is the test seam the crash and fencing specs throw from or race in:
+      * "merged", "aside", "committed", and "fenced" on abort. Returns false
+      * when a writer fenced the run, true when it committed or had nothing
+      * to merge. */
+    def compact(upto: Long, onStep: String => Unit)
+        (merge: DataFrame => DataFrame): Boolean = lock.synchronized {
+      val (liveAll, foldedAll) = listing()
+      if (liveAll.isEmpty && foldedAll.isEmpty) return true
+      val myEpoch = Fence.acquire()
+      def fenced: Boolean = Fence.maxEpoch() != myEpoch
+      val live = liveAll.filter(_._1 < upto)
+      val folded = foldedAll.filter(_._1 < upto)
+      // folded leftovers go first: while any exists, the partition whose
+      // manifest lists it does too. Deleting stops at the first fence — a
+      // writer that moved may own what is left.
+      def cleanUp(originals: Seq[Path], merged: Seq[Path]): Boolean = {
+        val clean = (folded.map(_._2) ++ originals).forall { p =>
+          if (fenced) { onStep("fenced"); false } else { fs.delete(p, true); true }
+        }
+        if (clean) merged.foreach(m => fs.delete(new Path(m, Manifest), false))
+        clean
+      }
+      if (live.length < 2) return cleanUp(Nil, live.map(_._2))
+      val maxId = live.map(_._1).max
+      val tmp = new Path(root, s".compact-$maxId")
+      merge(readParts(live).get).write.mode("overwrite").parquet(tmp.toString)
+      writeText(new Path(tmp, Manifest),
+        (live ++ folded).map(_._1).filter(_ != maxId).mkString("\n"))
+      onStep("merged")
+      val target = part(maxId)
+      val aside = new Path(root, s".old-$maxId")
+      if (fenced) { fs.delete(tmp, true); onStep("fenced"); return false }
+      require(fs.rename(target, aside),
+        s"compaction: rename $target -> $aside failed")
+      onStep("aside")
+      // RawLocalFileSystem THROWS on a missing source where HDFS returns
+      // false — a fencing writer's heal can legally remove our source
+      // (restore the aside, delete the tmp), so both mean "not renamed"
+      def tryRename(src: Path, dst: Path): Boolean =
+        try fs.rename(src, dst) catch { case _: java.io.IOException => false }
+      if (fenced) {
+        // roll the aside back — one rename, loss-free; the writer that
+        // fenced us may have restored the target in its own heal already
+        if (!tryRename(aside, target)) require(fs.exists(target),
+          s"compaction: fenced rollback failed and $target is missing")
+        fs.delete(tmp, true); onStep("fenced"); return false
+      }
+      if (!tryRename(tmp, target)) {
+        // a fencing writer's heal restored the aside between the check and
+        // the rename — orderly abort (tmp is re-built next run)
+        require(fs.exists(target),
+          s"compaction: rename $tmp -> $target failed; original kept in $aside")
+        fs.delete(tmp, true); onStep("fenced"); return false
+      }
+      onStep("committed")
+      // the merged partition now holds every folded row and its manifest
+      // hides the originals; a writer that fences us from here on keeps
+      // them until the next run (healCompaction deletes the shadowed aside)
+      if (fenced) { onStep("fenced"); return false }
+      fs.delete(aside, true)
+      cleanUp(live.collect { case (id, p) if id != maxId => p }, Seq(target))
+    }
+
+    /** The epoch manifest `_fence/epoch-<n>` of the object scaladoc. */
+    private object Fence {
+      private val fenceDir = new Path(root, "_fence")
+      private def epochs(): Seq[(Long, Path)] =
+        if (!fs.exists(fenceDir)) Nil
+        else fs.listStatus(fenceDir).toSeq
+          .flatMap(s => idOf(s.getPath, "epoch-").map(_ -> s.getPath))
+
+      /** Highest acquired epoch, 0 if none. */
+      def maxEpoch(): Long = epochs().map(_._1).foldLeft(0L)(math.max)
+
+      /** Acquire the next epoch by atomic create-new of `epoch-<n>` (O_EXCL
+        * locally, create(overwrite=false) on HDFS — the one compare-and-set
+        * object stores and HDFS share), bumping n past racing losers.
+        * Markers older than the previous 8 are pruned; a few are kept so a
+        * concurrent [[maxEpoch]] never lists an empty manifest. */
+      def acquire(): Long = {
+        fs.mkdirs(fenceDir)
+        var e = maxEpoch() + 1
+        while (!(try { fs.create(new Path(fenceDir, s"epoch-$e"), false).close(); true }
+            catch { case _: java.io.IOException => false })) e += 1
+        epochs().foreach { case (n, p) => if (n < e - 8) fs.delete(p, false) }
+        e
+      }
+    }
+
+    /** Recover an interrupted compaction: an `.old-<id>` aside whose
+      * partition exists is redundant (the merged partition holds it) and
+      * is deleted; one whose partition is missing hit the aside→commit
+      * window and is renamed back, losing nothing. `.compact-<id>` temps
+      * are deleted and re-built by the next compaction. One listing. */
+    private def healCompaction(): Unit = {
+      val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
+      dirs.filter(_.getName.startsWith(".old-")).foreach { aside =>
+        val target = new Path(root, prefix + aside.getName.stripPrefix(".old-"))
+        if (fs.exists(target)) fs.delete(aside, true)
+        else require(fs.rename(aside, target),
+          s"healCompaction: restore $aside -> $target failed")
+      }
+      dirs.filter(_.getName.startsWith(".compact-"))
+        .foreach(p => fs.delete(p, true))
+    }
+
+    /** The value under `_meta.<key>`; an absent or empty file (the legacy
+      * create-then-write crash remnant) reads as None. */
+    def meta(key: String): Option[String] = {
+      val p = new Path(root, s"_meta.$key")
+      if (!fs.exists(p)) None else Option(readText(p).trim).filter(_.nonEmpty)
+    }
+
+    /** Persist-or-check integer parameters fixed at store creation (a
+      * bucket width, banding parameters): the first batch records each as
+      * `_meta.<key>`, every later batch must match and fails loudly
+      * otherwise — a stream cannot re-bucket retroactively. The value is
+      * written under a temp name and published by an atomic rename, so the
+      * visible file is never partial; an empty file (the legacy crash
+      * shape) is deleted and re-published. The caller holds the lock, so a
+      * first-write race is only the cross-process first-batch case: the
+      * loser's rename fails and it compares against the winner's value. */
+    def requireMeta(kvs: (String, Long)*): Unit = kvs.foreach { case (key, value) =>
+      val p = new Path(root, s"_meta.$key")
+      var recorded = meta(key)
+      var attempts = 0
+      while (recorded.isEmpty) {
+        attempts += 1
+        require(attempts <= 5,
+          s"_meta.$key under $root could not be published after 5 attempts - " +
+            "the filesystem keeps surfacing an empty or vanishing meta file")
+        // only a zero-length file is the crash remnant (whitespace-only
+        // content cannot come from the atomic publish)
+        if (fs.exists(p) && fs.getFileStatus(p).getLen == 0) fs.delete(p, false): Unit
+        val tmp = new Path(root, s"._meta.$key.tmp-${java.util.UUID.randomUUID}")
+        writeText(tmp, value.toString)
+        if (fs.exists(p) || !fs.rename(tmp, p)) fs.delete(tmp, false): Unit
+        recorded = meta(key)
+      }
+      require(recorded.contains(value.toString),
+        s"index at $root was created with $key=${recorded.getOrElse("")} but " +
+          s"this batch offers $key=$value - a stream cannot re-bucket " +
+          "retroactively; a parameter change is a NEW index")
+    }
+
+    private def readText(p: Path): String = {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+
+    private def writeText(p: Path, s: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(s.getBytes(UTF_8)) finally out.close()
+    }
+  }
+
+  /** An empty frame of the given schema — the no-state source of the
+    * reports, fed through the same plan as the non-empty path so both
+    * always agree on the output schema. */
+  private def emptyFrame(spark: SparkSession, fields: (String, DataType)*): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](),
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+
   // ------------------------------------------------- incremental near-dup
   /** Incremental MinHash near-dup dedup for a STREAM, as a `foreachBatch`
     * body: each micro-batch (1) greedily dedups within itself
     * ([[graft.ext.DedupOps.dropNearDuplicatesMinhash]]'s smallest-id-wins
     * contract), (2) drops any remaining doc whose band signature collides
     * with a KEPT doc of an EARLIER batch (first-seen wins — arrival order is
-    * the greedy order across batches), and (3) appends the survivors'
-    * postings to a parquet signature index under `batch=<id>`, with
-    * overwrite — a replayed micro-batch rewrites exactly its own partition,
-    * the standard foreachBatch idempotency contract.
+    * the greedy order across batches), and (3) writes the survivors'
+    * postings as its `batch=<id>` partition of the signature index,
+    * (band, bsig)-sorted. A replay reads only the partitions strictly below
+    * its own id, so it never sees its own earlier attempt.
     *
     * This is deliberately the stream-to-batch production shape, not a
     * chained stateful operator: Spark restricts stateful-after-stateful
@@ -173,82 +496,6 @@ object CurationStream {
     * only the row groups holding probed signatures. */
   private val ProbeInChunk = graft.Pushdown.InChunk
 
-  /** Per-indexDir JVM lock serializing [[nearDedupBatch]]'s index
-    * read/write against [[compactIndex]]: an unserialized heal (run before
-    * every index read) could catch a live compaction between its rename
-    * steps and either delete its in-flight tmp or restore the aside under
-    * it, aborting the compaction spuriously. Same-JVM callers (the
-    * supported shape — foreachBatch and maintenance compaction both run on
-    * the stream's driver) are fully serialized; a compactor in a SEPARATE
-    * process is additionally fenced by the [[Fence]] epoch manifest so it
-    * can abort but never lose postings. */
-  private val indexLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(dir: String): Object =
-    indexLocks.computeIfAbsent(dir, _ => new Object)
-
-  /** Cross-PROCESS epoch fencing for the signature index — the JVM lock
-    * above cannot reach a compactor running in a second process (a
-    * maintenance job racing the live stream). The index carries a manifest
-    * directory `_fence/` of monotonically numbered `epoch-<n>` marker
-    * files; every mutator acquires the next epoch by ATOMIC create-new
-    * (O_EXCL locally, the namenode's create(overwrite=false) on HDFS — the
-    * only primitive object stores and HDFS agree is a CAS), and the
-    * FENCING RULE is asymmetric, matching ownership:
-    *
-    *   - the WRITER (the stream's foreachBatch) acquires an epoch at every
-    *     batch and never yields — the stream owns its index;
-    *   - a COMPACTOR records the epoch it acquired and re-checks `maxEpoch`
-    *     before every destructive step (aside rename, commit rename, every
-    *     original-partition delete). A newer epoch means a writer moved
-    *     underneath it: the compactor ABORTS, rolling back or leaving only
-    *     states [[healCompaction]] recovers — duplicated postings at worst,
-    *     never loss. Compaction is hygiene; aborting is always safe.
-    *
-    * The unavoidable check-then-act window (a writer bumps between a
-    * compactor's last check and its one in-flight delete) is closed on the
-    * writer side: [[nearDedupBatch]] re-verifies its partition after
-    * writing and re-writes if a lagging delete clobbered it — each
-    * compaction run deletes a given partition at most once, so the retry
-    * converges. Old epoch markers are pruned at acquire; the manifest stays
-    * a handful of empty files. */
-  private[graft] object Fence {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    private def dir(root: Path) = new Path(root, "_fence")
-
-    /** Highest acquired epoch, 0 if none. */
-    def maxEpoch(fs: FileSystem, root: Path): Long = {
-      val d = dir(root)
-      if (!fs.exists(d)) 0L
-      else fs.listStatus(d).iterator.flatMap(s =>
-        Option(s.getPath.getName).filter(_.startsWith("epoch-"))
-          .flatMap(_.stripPrefix("epoch-").toLongOption)).foldLeft(0L)(math.max)
-    }
-
-    /** Acquire the next epoch: atomic create-new of `epoch-<n>`, bumping n
-      * past losers of concurrent races. Prunes markers older than the
-      * previous 8 (only the max matters; a few are kept so a concurrent
-      * maxEpoch listing never observes an empty manifest mid-prune). */
-    def acquire(fs: FileSystem, root: Path): Long = {
-      val d = dir(root)
-      fs.mkdirs(d)
-      var e = maxEpoch(fs, root) + 1
-      var acquired = false
-      while (!acquired) {
-        val p = new Path(d, s"epoch-$e")
-        acquired =
-          try { fs.create(p, false).close(); true }
-          catch { case _: java.io.IOException => e += 1; false }
-      }
-      fs.listStatus(d).foreach { s =>
-        Option(s.getPath.getName).filter(_.startsWith("epoch-"))
-          .flatMap(_.stripPrefix("epoch-").toLongOption)
-          .filter(_ < e - 8).foreach(_ => fs.delete(s.getPath, false))
-      }
-      e
-    }
-  }
-
   def nearDedupBatch(indexDir: String, idCol: String, textCol: String,
       bands: Int = 4, rowsPerBand: Int = 4, shingleLen: Int = 3,
       onWrite: () => Unit = () => ())
@@ -271,14 +518,11 @@ object CurationStream {
     // index. STICKY (see graft.Pushdown): a per-batch set/restore raced
     // concurrent streams on the same session.
     graft.Pushdown.ensureInThreshold(spark)
-    try lockFor(indexDir).synchronized {
-      // fence any cross-process compactor FIRST: from here on, a compactor
-      // holding an older epoch aborts at its next destructive-step check
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      Fence.acquire(fs, root)
-      val survivors = earlierIndex(batch, indexDir, batchId) match {
+    val store = new Store(spark, indexDir)
+    var kept: DataFrame = null
+    try store.writeBatch(batchId, "nearDedupBatch", Seq("band", "bsig"),
+        onWrite = onWrite) {
+      val survivors = store.read(below = batchId) match {
         case Some(idx) =>
           val probeSigs = posts.select(col("bsig")).distinct()
             .limit(MaxProbeSigs + 1).collect().map(_.getString(0)).toSeq
@@ -295,404 +539,165 @@ object CurationStream {
           inBatch.join(dropIds.withColumnRenamed("__id", idCol), Seq(idCol), "left_anti")
         case None => inBatch
       }
-      val survivorPosts = posts.join(
-        survivors.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
-      // skip the write when nothing survived: an empty parquet dir has no
-      // schema to read back, and an absent partition is equivalent — but a
-      // PRIOR attempt's partition must go (replay idempotency: a batch
-      // rewrites exactly its own partition, including rewriting it to
-      // nothing when compaction changed what survives between attempts)
-      val target = new org.apache.hadoop.fs.Path(s"$indexDir/batch=$batchId")
-      val hasPosts = !survivorPosts.isEmpty
-      // write-and-verify loop: a cross-process compactor whose LAST epoch
-      // check predated our Fence.acquire above can have one in-flight
-      // delete land on our fresh partition (the unavoidable check-then-act
-      // window, see [[Fence]]). Each compaction run deletes a partition at
-      // most once and aborts at its next check, so one re-write converges;
-      // the bound is paranoia against a pathological stack of compactors.
-      var attempts = 0
-      var settled = false
-      while (!settled) {
-        attempts += 1
-        require(attempts <= 5,
-          s"nearDedupBatch: batch=$batchId partition kept disappearing " +
-            "under concurrent compaction — external coordination is broken")
-        if (hasPosts)
-          // (band,bsig)-sorted write: range-partitioned files, each sorted,
-          // so every row group covers a narrow signature slice and the
-          // probe's pushed In filter above can skip it by stats alone
-          survivorPosts.sort(col("band"), col("bsig"))
-            .write.mode("overwrite").parquet(target.toString)
-        else fs.delete(target, true)
-        onWrite() // test seam: the fencing spec injects the racing delete here
-        settled =
-          if (hasPosts)
-            fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))
-          else !fs.exists(target)
-      }
-      survivors.localCheckpoint(true)
+      // localCheckpoint, not persist(MEMORY_AND_DISK): the caller gets the
+      // survivors after the lock is released, when a compaction may rename
+      // the index files their lineage reads and the persisted parents are
+      // freed. The price of dropping lineage — a lost executor block fails
+      // the caller's batch, which the stream replays — is bounded by the
+      // micro-batch, which is all the survivors can hold.
+      kept = survivors.localCheckpoint(true)
+      posts.join(kept.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
     } finally {
       posts.unpersist(false)
       inBatch.unpersist(false)
     }
+    kept
   }
 
   /** Compact the [[nearDedupBatch]] signature index: merge every partition
-    * STRICTLY below `uptoBatchId` into one partition named after the highest
-    * merged id, deleting the originals — small-file hygiene for a
-    * long-running stream (one partition per micro-batch adds up). The
-    * earlier-than-current invariant survives: every merged id < any future
+    * strictly below `uptoBatchId` into one, keeping the (band, bsig) sort
+    * the per-batch probe prunes on. Every merged id is below any future
     * batch id, so future batches still see all compacted postings.
-    *
-    * PRECONDITION: `uptoBatchId` must not exceed the streaming checkpoint's
-    * committed horizon. A committed micro-batch is never replayed, so
-    * folding its postings forward is safe; compacting an uncommitted batch
-    * would let its replay see its own postings and drop its own documents.
-    *
-    * Crash-safety (rename-aside commit): write-tmp → rename the conflicting
-    * `batch=<maxId>` ASIDE to `.old-<maxId>` → rename tmp into place →
-    * delete the aside copy and the remaining merged partitions. Every crash
-    * window now leaves the index recoverable without posting LOSS:
-    * interrupted states are healed by [[healCompaction]] (run at the start
-    * of every compaction AND before every [[earlierIndex]] read), and the
-    * only post-commit anomaly is original partitions coexisting with the
-    * merged one — duplicated postings, harmless (every consumer distincts
-    * the signatures) and folded away by the next compaction. `onStep` is a
-    * test seam: the crash-injection spec throws from it to exercise each
-    * window, and the fencing spec runs a concurrent writer from it.
-    *
-    * Cross-process fencing (see [[Fence]]): the compactor acquires an
-    * epoch up front and re-checks `maxEpoch` before every destructive
-    * step. A concurrent [[nearDedupBatch]] (same process or not) bumps the
-    * epoch, so a fenced compactor rolls back / stops cleanly — worst case
-    * duplicated postings, never loss — and returns `false`. Returns `true`
-    * when a merge committed (or there was nothing to merge). */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+    * Committed-horizon precondition: see the object scaladoc. */
+  def compactIndex(spark: SparkSession, indexDir: String,
       uptoBatchId: Long, onStep: String => Unit = _ => ()): Boolean =
-    compactPartitions(spark, indexDir, uptoBatchId, onStep)(
-      // preserve the (band,bsig) sort across compaction — the merged
-      // partition must stay prunable by the per-batch probe's In filter
-      _.sort(org.apache.spark.sql.functions.col("band"),
-        org.apache.spark.sql.functions.col("bsig")))
+    new Store(spark, indexDir).compact(uptoBatchId, onStep)(
+      _.sort(col("band"), col("bsig")))
 
-  /** Compact the [[tokenCountsBatch]] count state: merge every partition
-    * strictly below `uptoBatchId` into one SUM-aggregated partition —
-    * [[compactIndex]]'s machinery with an aggregate merge, so the state
-    * shrinks to one row per (group, token) instead of concatenating.
-    *
-    * The `uptoBatchId` precondition is CORRECTNESS-critical here, not just
-    * replay hygiene: a replayed batch below the compaction horizon would
-    * re-create its own partition while its counts also live inside the
-    * merged one — double-counting, which count semantics (unlike the
-    * index's distinct-probed postings) do NOT absorb. Pass only the
-    * streaming checkpoint's committed horizon, which structured streaming
-    * never replays. */
-  def compactCounts(spark: org.apache.spark.sql.SparkSession,
+  /** Compact the [[tokenCountsBatch]] count state: a SUM-aggregated merge,
+    * so the state shrinks to one row per (group, token). The
+    * committed-horizon precondition is correctness-critical here: a
+    * replayed batch below the horizon would be counted in its own
+    * partition and in the merged one, and counts do not absorb duplicates
+    * the way the index's distinct-probed postings do. */
+  def compactCounts(spark: SparkSession,
       countsDir: String, uptoBatchId: Long, byCol: String,
       onStep: String => Unit = _ => ()): Boolean =
-    compactPartitions(spark, countsDir, uptoBatchId, onStep)(
+    new Store(spark, countsDir).compact(uptoBatchId, onStep)(
       _.groupBy(col(byCol), col("__tok"))
         .agg(sum(col("__c")).as("__c")))
 
-  private def compactPartitions(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, uptoBatchId: Long, onStep: String => Unit)
-      (merge: DataFrame => DataFrame): Boolean =
-      lockFor(indexDir).synchronized {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return true
-    healCompaction(fs, root)
-    val myEpoch = Fence.acquire(fs, root)
-    def fenced: Boolean = Fence.maxEpoch(fs, root) != myEpoch
-    val parts = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .flatMap { p =>
-        Option(p.getName).filter(_.startsWith("batch="))
-          .flatMap(_.stripPrefix("batch=").toLongOption)
-          .filter(_ < uptoBatchId).map(_ -> p)
-      }
-    if (parts.length < 2) return true // nothing to merge
-    val maxId = parts.map(_._1).max
-    val tmp = new org.apache.hadoop.fs.Path(root, s".compact-$maxId")
-    merge(spark.read.parquet(parts.map(_._2.toString).toIndexedSeq: _*))
-      .write.mode("overwrite").parquet(tmp.toString)
-    onStep("merged")
-    val target = new org.apache.hadoop.fs.Path(root, s"batch=$maxId")
-    val aside = new org.apache.hadoop.fs.Path(root, s".old-$maxId")
-    if (fenced) { fs.delete(tmp, true); onStep("fenced"); return false }
-    require(fs.rename(target, aside),
-      s"compactIndex: rename $target -> $aside failed")
-    onStep("aside")
-    // rename helper: RawLocalFileSystem THROWS on a missing source where
-    // HDFS returns false — a fencing writer's concurrent heal can legally
-    // remove our source (restore the aside, delete the tmp), so both
-    // outcomes mean the same thing here: "the rename didn't happen"
-    def tryRename(src: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path): Boolean =
-      try fs.rename(src, dst) catch { case _: java.io.IOException => false }
-    if (fenced) {
-      // roll the aside back under the fence — one rename, loss-free; the
-      // writer that fenced us may be healing concurrently and have restored
-      // the target itself already, in which case our aside is redundant
-      if (!tryRename(aside, target)) require(fs.exists(target),
-        s"compactIndex: fenced rollback failed and $target is missing")
-      fs.delete(tmp, true); onStep("fenced"); return false
-    }
-    if (!tryRename(tmp, target)) {
-      // a fencing writer's heal restored the aside under us between the
-      // check and the rename — orderly abort (tmp is re-built next run)
-      require(fs.exists(target),
-        s"compactIndex: rename $tmp -> $target failed; original kept in $aside")
-      fs.delete(tmp, true); onStep("fenced"); return false
-    }
-    onStep("committed")
-    // post-commit the merged partition holds every original posting; if a
-    // writer fences us now we STOP deleting — its re-written partition must
-    // survive, and the duplicates fold away next compaction (the aside is
-    // target-shadowed, healCompaction deletes it)
-    if (fenced) { onStep("fenced"); return false }
-    fs.delete(aside, true)
-    var clean = true
-    parts.collect { case (id, p) if id != maxId => p }.foreach { p =>
-      if (clean && fenced) { onStep("fenced"); clean = false }
-      if (clean) fs.delete(p, true)
-    }
-    clean
-  }
-
   // ------------------------------------------------------- streaming ANN
-  /** Append ONE micro-batch's IVF-PQ codes to a partitioned on-disk ANN
-    * index (round-13 NEXT #4 — the [[nearDedupBatch]] incremental-index
-    * discipline applied to the
-    * [[graft.ext.Similarity.saveIvfPqCodes]] layout): the batch encodes
-    * under the FIXED serving `model` and rewrites EXACTLY its own
-    * `batch=<id>` partition, list-sorted (range-partitioned + sorted on
-    * (__cid, id)) within the partition, so [[graft.ext.Similarity]]'s
-    * `ivfPqSearch(pruneLists = true)` skips row groups inside every
-    * partition exactly as against a batch-built index.
-    *
-    * Replay idempotency: a replayed batch overwrites its own partition —
-    * including rewriting it to NOTHING on an empty replay. Codes are
-    * deterministic per-row projections of (model, row), so the union of
-    * batch partitions is bit-identical to a one-shot corpus encode
-    * (StreamingPipelineSpec pins streamed-built ≡ batch-built search).
-    * The write-and-verify loop and up-front [[Fence]] epoch bump mirror
-    * [[nearDedupBatch]]: a concurrent compactor aborts at its next check,
-    * and its one possible in-flight delete is absorbed by a re-write. */
+  /** Write ONE micro-batch's IVF-PQ codes (the
+    * [[graft.ext.Similarity.saveIvfPqCodes]] layout) as its `batch=<id>`
+    * partition: the batch encodes under the FIXED serving `model`, sorted
+    * on (__cid, id), so `ivfPqSearch(pruneLists = true)` skips row groups
+    * inside every partition exactly as against a batch-built index. Codes
+    * are deterministic per-row projections of (model, row), so the union
+    * of partitions is bit-identical to a one-shot corpus encode
+    * (StreamingPipelineSpec pins streamed-built ≡ batch-built search). */
   def ivfPqIndexBatch(indexDir: String,
       model: graft.ext.Similarity.IvfPqModel, idCol: String, vecCol: String,
       onWrite: () => Unit = () => ())
       (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val codes = graft.ext.Similarity
       .ivfPqEncode(model, batch, idCol, vecCol).persist()
-    try lockFor(indexDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      Fence.acquire(fs, root) // fence any cross-process compactor FIRST
-      healCompaction(fs, root)
-      // write-and-verify via the shared settled loop (test seam: onWrite
-      // is the nearDedupBatch fencing-spec pattern)
-      writeOwnPartition(fs, indexDir, batchId,
-        if (codes.isEmpty) None else Some(codes), Seq("__cid", "id"),
-        "ivfPqIndexBatch", onWrite)
-    } finally codes.unpersist(false)
+    try new Store(batch.sparkSession, indexDir).writeBatch(batchId,
+      "ivfPqIndexBatch", Seq("__cid", "id"), onWrite = onWrite)(codes)
+    finally codes.unpersist(false)
   }
 
-  /** Read the [[ivfPqIndexBatch]]-maintained index as one code table for
-    * [[graft.ext.Similarity]]'s `ivfPqSearch`. Heals any interrupted
-    * compaction first, then reads the batch partitions WITHOUT the
-    * partition-discovery column (the explicit-subdir read, so the schema
-    * matches a [[graft.ext.Similarity.saveIvfPqCodes]] table exactly).
-    * `dedupIds = true` (default) adds a one-pass distinct on `idCol`: in
-    * steady state partitions are disjoint and it removes nothing, but in
-    * the one documented crash window — a compactor dying AFTER its commit
-    * rename and BEFORE deleting the merged originals — a doc's code row
-    * exists in two partitions, and an ANN top-k must not surface one id
-    * twice. Codes of a duplicate id are bit-identical (deterministic
-    * projection), so the distinct is exact. A deployment that compacts
-    * (with healing) before serving can pass `dedupIds = false` to keep the
-    * scan exchange-free. */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, idCol: String = "id",
-      dedupIds: Boolean = true): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"no index at $indexDir")
-    lockFor(indexDir).synchronized(healCompaction(fs, root))
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.toString).sorted
-    require(dirs.nonEmpty, s"no batch partitions under $indexDir")
-    val codes = spark.read.parquet(dirs.toIndexedSeq: _*)
-    if (dedupIds) codes.dropDuplicates(idCol) else codes
+  /** Load a per-batch index — [[ivfPqIndexBatch]]'s (`idCol` "id"),
+    * [[binarySigBatch]]'s or [[bucketBatch]]'s ("vec_id") — as one table
+    * whose schema equals the batch-built one, through the store reader.
+    * One distinct on `idCol` follows: it removes nothing from a store this
+    * code wrote, but a store compacted by an older version that crashed
+    * after its commit rename holds one id in two partitions, and an ANN
+    * top-k must not surface an id twice. Rows of one id are bit-identical
+    * (deterministic projections), so the distinct is exact. */
+  def loadIndex(spark: SparkSession, indexDir: String,
+      idCol: String): DataFrame = {
+    val store = new Store(spark, indexDir)
+    require(store.exists, s"no index at $indexDir")
+    val rows = store.read()
+    require(rows.nonEmpty, s"no batch partitions under $indexDir")
+    rows.get.dropDuplicates(idCol)
   }
 
-  /** Compact the [[ivfPqIndexBatch]] index: merge every partition strictly
-    * below `uptoBatchId` into one partition named after the highest merged
-    * id — [[compactIndex]]'s rename-aside machinery with a list-sorted,
-    * id-DISTINCT merge (a post-commit-crash leftover partition duplicates
-    * code rows; the distinct folds them away exactly, codes being
-    * deterministic). Same PRECONDITION as [[compactCounts]]: pass only the
-    * streaming checkpoint's committed horizon. Returns `true` when a merge
-    * committed (or there was nothing to merge). */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Compact the [[ivfPqIndexBatch]] index: a list-sorted, id-distinct
+    * merge. Committed-horizon precondition: see the object scaladoc. */
+  def compactIvfPqIndex(spark: SparkSession,
       indexDir: String, uptoBatchId: Long,
       idCol: String = "id", onStep: String => Unit = _ => ()): Boolean =
-    compactPartitions(spark, indexDir, uptoBatchId, onStep)(
+    new Store(spark, indexDir).compact(uptoBatchId, onStep)(
       _.dropDuplicates(idCol).sort(col("__cid"), col(idCol)))
 
   // ------------------------------------------- streaming binary signatures
-  /** Append ONE micro-batch's 64-bit sign signatures to a partitioned
-    * on-disk signature index — the streaming maintenance path of the
-    * [[graft.ext.Similarity]] `binarySigTable` relation (the round-17
-    * served hybrid fusion's Hamming leg): a deployment ingesting
-    * embeddings keeps the 16-byte/vector code table current per batch
-    * instead of re-projecting the whole corpus, and every Hamming
-    * ranking ([[graft.ext.Similarity.knnBinary]]-shaped scans, the
-    * `rrf_served` fusion leg) reads the index. Signatures are pure
-    * integer projections of the vector signs, so the union of batch
-    * partitions is bit-identical to the one-shot table
-    * (StreamingPipelineSpec pins it, including the served-fusion-leg
-    * parity). Same [[ivfPqIndexBatch]] machinery: each batch rewrites
-    * exactly its own `batch=<id>` partition (replay idempotent, empty
-    * replay deletes), vec_id-sorted within the partition so signature
-    * row groups prune on id probes; [[Fence]] + [[healCompaction]]
-    * guard cross-process compaction. */
+  /** Write ONE micro-batch's 64-bit sign signatures as its `batch=<id>`
+    * partition — the streaming maintenance path of the
+    * [[graft.ext.Similarity]] `binarySigTable` relation (the served hybrid
+    * fusion's Hamming leg), vec_id-sorted so signature row groups prune on
+    * id probes. Signatures are pure integer projections of the vector
+    * signs, so the union of partitions is bit-identical to the one-shot
+    * table (StreamingPipelineSpec pins it, including the served-fusion-leg
+    * parity). */
   def binarySigBatch(indexDir: String, idCol: String, vecCol: String,
       onWrite: () => Unit = () => ())
       (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val sigs = graft.ext.Similarity.withBinarySig(
         batch.select(col(idCol).as("vec_id"),
           transform(col(vecCol), x => x.cast("double")).as("__v")), "__v")
       .select(col("vec_id"), col("sig0"), col("sig1")).persist()
-    try lockFor(indexDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      Fence.acquire(fs, root)
-      healCompaction(fs, root)
-      writeOwnPartition(fs, indexDir, batchId,
-        if (sigs.isEmpty) None else Some(sigs), Seq("vec_id"),
-        "binarySigBatch", onWrite)
-    } finally sigs.unpersist(false)
+    try new Store(batch.sparkSession, indexDir).writeBatch(batchId,
+      "binarySigBatch", Seq("vec_id"), onWrite = onWrite)(sigs)
+    finally sigs.unpersist(false)
   }
 
-  /** Read the [[binarySigBatch]]-maintained index as one
-    * (vec_id, sig0, sig1) table — the [[loadIvfPqIndex]] contract:
-    * heals interrupted compactions, explicit-subdir read (schema matches
-    * the batch `binarySigTable` exactly), and `dedupIds` folds away the
-    * one documented post-compaction-crash duplicate window (signature
-    * rows of a duplicate id are bit-identical, so the distinct is
-    * exact). */
-  def loadBinarySigIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, dedupIds: Boolean = true): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"no index at $indexDir")
-    lockFor(indexDir).synchronized(healCompaction(fs, root))
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.toString).sorted
-    require(dirs.nonEmpty, s"no batch partitions under $indexDir")
-    val sigs = spark.read.parquet(dirs.toIndexedSeq: _*)
-    if (dedupIds) sigs.dropDuplicates("vec_id") else sigs
-  }
-
-  /** Compact the [[binarySigBatch]] index — [[compactIvfPqIndex]]'s
-    * rename-aside merge with a vec_id-sorted, id-distinct fold. Same
-    * committed-horizon PRECONDITION. */
-  def compactBinarySigIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Compact the [[binarySigBatch]] index: a vec_id-sorted, id-distinct
+    * merge. Committed-horizon precondition: see the object scaladoc. */
+  def compactBinarySigIndex(spark: SparkSession,
       indexDir: String, uptoBatchId: Long,
       onStep: String => Unit = _ => ()): Boolean =
-    compactPartitions(spark, indexDir, uptoBatchId, onStep)(
+    new Store(spark, indexDir).compact(uptoBatchId, onStep)(
       _.dropDuplicates("vec_id").sort(col("vec_id")))
 
-  /** Append ONE micro-batch's single-band bucket rows to a partitioned
-    * on-disk DENSE index — the streaming maintenance path of
+  /** Write ONE micro-batch's single-band bucket rows as its `batch=<id>`
+    * partition of a DENSE index — the streaming maintenance path of
     * [[graft.ext.Similarity]]'s content-addressed `bucketTable` (the s02
-    * serving store), completing the round-17 follow-up: the
-    * binary-signature index got this treatment first
-    * ([[binarySigBatch]]); a deployment whose embeddings arrive as a
-    * stream keeps the probed-cosine leg's index current per batch too,
-    * instead of re-projecting the whole corpus on every refresh. The
-    * signature width `w` is FIXED at index creation (a stream cannot
-    * re-bucket retroactively — pick it from the expected corpus size via
-    * the `bucketPlanes` rule; a width change is a new index), and the
-    * contract is MACHINE-enforced: the first batch records `w` in a
-    * `_meta.w` file and every later batch fails loudly on mismatch
-    * ([[requireMeta]]; [[bucketIndexWidth]] is the read side): the same
-    * [[graft.ext.Similarity.bucketProjection]] the batch store builds,
-    * so for any ingested set the union of batch partitions is
-    * bit-identical to the one-shot store at that width
-    * (StreamingPipelineSpec pins it, including the probed-ranking
-    * parity). Partition discipline is [[binarySigBatch]]'s: each batch
-    * rewrites exactly its own `batch=<id>` partition (replay idempotent,
-    * empty replay deletes), (bucket, vec_id)-sorted within the partition
-    * so per-search IO prunes row groups to the probed lists; [[Fence]] +
-    * [[healCompaction]] guard cross-process compaction. */
+    * serving store), so the probed-cosine leg stays current per batch
+    * instead of re-projecting the corpus on every refresh. The signature
+    * width `w` is FIXED at index creation (a stream cannot re-bucket
+    * retroactively — pick it from the expected corpus size via the
+    * `bucketPlanes` rule; a width change is a new index): the first batch
+    * records it as `_meta.w` and every later batch fails loudly on a
+    * mismatch ([[bucketIndexWidth]] is the read side). Rows are the same
+    * [[graft.ext.Similarity.bucketProjection]] the batch store builds, so
+    * the union of partitions is bit-identical to the one-shot store at that
+    * width (StreamingPipelineSpec pins it, including the probed-ranking
+    * parity); (bucket, vec_id)-sorted so per-search IO prunes row groups to
+    * the probed lists. */
   def bucketBatch(indexDir: String, idCol: String, vecCol: String, w: Int,
       onWrite: () => Unit = () => ())
       (batch: DataFrame, batchId: Long): Unit = {
     require(w >= 1 && w <= 20, s"bucket width in [1,20], got $w")
-    val spark = batch.sparkSession
     val rows = graft.ext.Similarity
       .bucketProjection(batch, idCol, vecCol, w).persist()
-    try lockFor(indexDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      Fence.acquire(fs, root)
-      requireMeta(fs, root, "w", w.toLong)
-      healCompaction(fs, root)
-      writeOwnPartition(fs, indexDir, batchId,
-        if (rows.isEmpty) None else Some(rows), Seq("bucket", "vec_id"),
-        "bucketBatch", onWrite)
-    } finally rows.unpersist(false)
+    try new Store(batch.sparkSession, indexDir).writeBatch(batchId,
+      "bucketBatch", Seq("bucket", "vec_id"), Seq("w" -> w.toLong),
+      onWrite)(rows)
+    finally rows.unpersist(false)
   }
 
-  /** Read the [[bucketBatch]]-maintained dense index as one
-    * (vec_id, v, nrm, bucket) table — the [[loadBinarySigIndex]]
-    * contract: heals interrupted compactions, explicit-subdir read
-    * (schema matches the batch `bucketTable` exactly), and `dedupIds`
-    * folds away the one documented post-compaction-crash duplicate
-    * window (bucket rows of a duplicate id are bit-identical — the
-    * projection is deterministic in the vector — so the distinct is
-    * exact). */
-  def loadBucketIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, dedupIds: Boolean = true): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"no index at $indexDir")
-    lockFor(indexDir).synchronized(healCompaction(fs, root))
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.toString).sorted
-    require(dirs.nonEmpty, s"no batch partitions under $indexDir")
-    val rows = spark.read.parquet(dirs.toIndexedSeq: _*)
-    if (dedupIds) rows.dropDuplicates("vec_id") else rows
-  }
-
-  /** Compact the [[bucketBatch]] index — the rename-aside merge with a
-    * (bucket, vec_id)-sorted, id-distinct fold, so the compacted
-    * partition keeps the probed-list row-group pruning the per-batch
-    * sort bought. Same committed-horizon PRECONDITION as
-    * [[compactIndex]]. */
-  def compactBucketIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Compact the [[bucketBatch]] index: a (bucket, vec_id)-sorted,
+    * id-distinct merge, so the compacted partition keeps the probed-list
+    * row-group pruning. Committed-horizon precondition: see the object
+    * scaladoc. */
+  def compactBucketIndex(spark: SparkSession,
       indexDir: String, uptoBatchId: Long,
       onStep: String => Unit = _ => ()): Boolean =
-    compactPartitions(spark, indexDir, uptoBatchId, onStep)(
+    new Store(spark, indexDir).compact(uptoBatchId, onStep)(
       _.dropDuplicates("vec_id").sort(col("bucket"), col("vec_id")))
 
   // --------------------------------------- streaming component labels
   /** Append ONE micro-batch to the streamed COMPONENT-LABEL store — the
     * incremental-maintenance path of [[graft.ext.Dedup]]'s
-    * `sigComponentsTable` (round-18 verdict #3: the last content-addressed
-    * store without a streaming twin — ingest silently served stale labels
-    * until the next batch rebuild). The store holds TWO sub-indexes under
+    * `sigComponentsTable`. The store holds TWO sub-stores under
     * `indexDir`: `sigs/batch=<id>` — the batch's per-doc simhash
-    * fingerprints (a pure projection, the [[binarySigBatch]] discipline) —
-    * and `labels/batch=<id>` — the label DELTA: every member of every
-    * component this batch's documents touch, written as
-    * (id, component, group_size, __b = batchId).
+    * fingerprints (a pure projection) — and `labels/batch=<id>` — the label
+    * DELTA: every member of every component this batch's documents touch,
+    * written as (id, component, group_size, __b = batchId). Both are
+    * written under the lock of `indexDir`, whose `_meta` files fix the
+    * banding parameters at store creation.
     *
     * Incremental algorithm (exact, not approximate): the batch's new
     * fingerprints probe the accumulated signature index for the pair
@@ -711,18 +716,13 @@ object CurationStream {
     *
     * Read side resolves LAST-WRITER-WINS per id on the in-row `__b`
     * column ([[loadComponentIndex]]); a replayed batch recomputes its
-    * delta from state STRICTLY before it (the [[earlierIndex]] rule) and
-    * rewrites exactly its own partitions — replay idempotent, empty
-    * replay deletes. SCOPE of the empty-replay-delete (derived-store
-    * caveat the pure-projection stores don't have): it is sound only for
-    * the batch structured streaming actually replays — the LAST,
+    * delta from the partitions strictly below it. SCOPE of the empty-replay
+    * delete (a caveat the pure-projection stores don't have): it is sound
+    * only for the batch structured streaming actually replays — the LAST,
     * uncommitted one, before any later batch exists. Replaying an OLD
     * committed batch empty would orphan later deltas that were computed
-    * with its docs present; committed batches are never replayed (the
-    * [[compactIndex]] committed-horizon contract), so that state is
-    * unreachable under the streaming semantics this store serves.
-    * Banding parameters are FIXED at store creation and
-    * machine-enforced via `_meta` ([[requireMeta]]).
+    * with its docs present; committed batches are never replayed, so that
+    * state is unreachable under the streaming semantics this store serves.
     *
     * Identity contract: one signature per doc_id (the
     * [[graft.ext.DedupOps.simhashPairsAcross]] determinism contract). A
@@ -742,43 +742,39 @@ object CurationStream {
       bands: Int = 2, bitsPerBand: Int = 15, maxHamming: Int = 1,
       maxDriverEdges: Long = 5000000L, onWrite: () => Unit = () => ())
       (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
+    val store = new Store(batch.sparkSession, indexDir)
+    val (sigs, labels) = (store.sub("sigs"), store.sub("labels"))
     val sigsNew = graft.ext.DedupOps.withSimhash(
         batch.select(col(idCol).cast("long").as("doc_id"),
           col(textCol).as("__text")),
         "__text", "simhash", bands * bitsPerBand)
       .select(col("doc_id"), col("simhash")).persist()
     var delta: Option[DataFrame] = None
-    try lockFor(indexDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      requireMeta(fs, root, "bands", bands.toLong)
-      requireMeta(fs, root, "bitsPerBand", bitsPerBand.toLong)
-      requireMeta(fs, root, "maxHamming", maxHamming.toLong)
-      val sigsDir = s"$indexDir/sigs"
-      val labelsDir = s"$indexDir/labels"
-      val sigsRoot = new org.apache.hadoop.fs.Path(sigsDir)
-      val labelsRoot = new org.apache.hadoop.fs.Path(labelsDir)
-      fs.mkdirs(sigsRoot); fs.mkdirs(labelsRoot)
-      Fence.acquire(fs, sigsRoot); Fence.acquire(fs, labelsRoot)
-      healCompaction(fs, sigsRoot); healCompaction(fs, labelsRoot)
-      val hasRows = !sigsNew.isEmpty
+    try store.lock.synchronized {
+      store.requireMeta("bands" -> bands.toLong,
+        "bitsPerBand" -> bitsPerBand.toLong, "maxHamming" -> maxHamming.toLong)
+      sigs.open(); labels.open()
       // the label delta, computed from state STRICTLY before this batch
       delta =
-        if (!hasRows) None
+        if (sigsNew.isEmpty) None
         else {
           // the batch's signature WINS over any earlier index row for the
-          // same doc_id (round-19 ADVICE #3: two live sigs per id made the
-          // pair resolution nondeterministic through first()): the anti-join
-          // is batch-sized-broadcast cheap and a no-op under the store's
+          // same doc_id (two live sigs per id made the pair resolution
+          // nondeterministic through first()): the anti-join is
+          // batch-sized-broadcast cheap and a no-op under the store's
           // unique-doc_id contract (see the simhashPairsAcross scaladoc —
           // a changed document is a NEW doc_id; same-batch replay recomputes
           // from strictly-earlier state, so it never self-collides here)
-          val all = earlierIndex(batch, sigsDir, batchId)
+          val all = sigs.read(below = batchId)
             .map(_.join(broadcast(sigsNew.select(col("doc_id"))),
               Seq("doc_id"), "left_anti").unionByName(sigsNew))
             .getOrElse(sigsNew)
+          // localCheckpoint, not persist(MEMORY_AND_DISK): the pairs feed an
+          // emptiness check, two joins and the union-find, and cutting the
+          // lineage keeps those plans from re-planning the band join against
+          // the index files. A lost block fails the batch (the stream
+          // replays it) instead of recomputing; the pairs are the edges
+          // this batch's documents add, so the bound is the micro-batch.
           val pairs = graft.ext.DedupOps.simhashPairsAcross(sigsNew, all,
             "doc_id", "simhash", bands, bitsPerBand, maxHamming)
             .localCheckpoint(true)
@@ -786,7 +782,12 @@ object CurationStream {
           // steady-state micro-batch adds no near-dup pairs, and the
           // label-store scan + checkpoint would be pure waste there
           if (pairs.isEmpty) None else {
-          val res = earlierIndex(batch, labelsDir, batchId)
+          // localCheckpoint for the same reason as the pairs: the resolved
+          // labels are read by two joins and a distinct, and the id-keyed
+          // window over every label partition should run once. Its size is
+          // the pair graph (ids that ever paired), not the corpus — the
+          // bound that makes a driver-tracked, lineage-free copy acceptable.
+          val res = labels.read(below = batchId)
             .map(df => resolveLatest(df).select(col("id"), col("component"))
               .localCheckpoint(true))
           val contracted = (res match {
@@ -830,11 +831,9 @@ object CurationStream {
           }
           }
         }
-      writeOwnPartition(fs, sigsDir, batchId,
-        if (hasRows) Some(sigsNew) else None, Seq("doc_id"),
+      sigs.write(batchId, Some(sigsNew), Seq("doc_id"),
         "componentBatch/sigs", onWrite)
-      writeOwnPartition(fs, labelsDir, batchId, delta, Seq("id"),
-        "componentBatch/labels", onWrite)
+      labels.write(batchId, delta, Seq("id"), "componentBatch/labels", onWrite)
     } finally {
       sigsNew.unpersist(false)
       delta.foreach(_.unpersist(false)): Unit
@@ -842,8 +841,7 @@ object CurationStream {
   }
 
   /** Resolve the newest row per id on the in-row batch stamp — the
-    * component store's last-writer-wins read. Duplicate (id, __b) rows
-    * from the one documented post-compaction-crash window are
+    * component store's last-writer-wins read. Duplicate (id, __b) rows are
     * bit-identical (the delta is deterministic), so the pick is exact. */
   private def resolveLatest(df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -852,212 +850,68 @@ object CurationStream {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** The settled-write loop shared by the per-batch partition writers:
-    * rewrite exactly `batch=<id>` (or delete it when the batch contributes
-    * no rows) and re-check until the write survives a concurrent
-    * compaction window. */
-  private def writeOwnPartition(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, batchId: Long, rows: Option[DataFrame],
-      sortCols: Seq[String], what: String, onWrite: () => Unit): Unit = {
-    val target = new org.apache.hadoop.fs.Path(s"$dir/batch=$batchId")
-    var attempts = 0
-    var settled = false
-    while (!settled) {
-      attempts += 1
-      require(attempts <= 5,
-        s"$what: batch=$batchId partition kept disappearing under " +
-          "concurrent compaction — external coordination is broken")
-      rows match {
-        case Some(df) =>
-          df.repartitionByRange(sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.map(col): _*)
-            .write.mode("overwrite").parquet(target.toString)
-        case None => fs.delete(target, true): Unit
-      }
-      onWrite()
-      settled = rows match {
-        case Some(_) =>
-          fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))
-        case None => !fs.exists(target)
-      }
-    }
-  }
-
   /** Read the [[componentBatch]]-maintained store as one
     * (id, component, group_size) table — the `sigComponentsTable` shape,
     * so every batch consumer (d07's label scan, c17/c19's
     * `softDedupWeightsFromComponents`, d11's `componentStatsFromLabels`)
-    * serves from the streamed store unchanged. Heals interrupted
-    * compactions, resolves last-writer-wins per id, and never touches the
-    * pair stage (PlanSpec pins the zero-rebuild serving). Returns an
-    * empty table when no batch has produced a pair yet (every doc still a
-    * singleton — the batch table's contract). */
-  def loadComponentIndex(spark: org.apache.spark.sql.SparkSession,
+    * serves from the streamed store unchanged. Resolves last-writer-wins
+    * per id and never touches the pair stage (PlanSpec pins the
+    * zero-rebuild serving). Returns an empty table when no batch has
+    * produced a pair yet (every doc still a singleton — the batch table's
+    * contract). */
+  def loadComponentIndex(spark: SparkSession,
       indexDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"no index at $indexDir")
-    val labelsRoot = new org.apache.hadoop.fs.Path(s"$indexDir/labels")
-    lockFor(indexDir).synchronized {
-      if (fs.exists(labelsRoot)) healCompaction(fs, labelsRoot)
-      val sigsRoot = new org.apache.hadoop.fs.Path(s"$indexDir/sigs")
-      if (fs.exists(sigsRoot)) healCompaction(fs, sigsRoot)
+    val store = new Store(spark, indexDir)
+    require(store.exists, s"no index at $indexDir")
+    store.sub("labels").read() match {
+      case Some(df) =>
+        resolveLatest(df).select(col("id"), col("component"), col("group_size"))
+      case None =>
+        spark.range(0).select(col("id"), col("id").as("component"),
+          col("id").as("group_size"))
     }
-    val dirs =
-      if (!fs.exists(labelsRoot)) Array.empty[String]
-      else fs.listStatus(labelsRoot).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("batch=")).map(_.toString).sorted
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id"), col("id").as("component"),
-        col("id").as("group_size"))
-    else
-      resolveLatest(spark.read.parquet(dirs.toIndexedSeq: _*))
-        .select(col("id"), col("component"), col("group_size"))
   }
 
-  /** Compact both component-store sub-indexes — the signature index with
-    * an id-distinct doc-sorted fold, the label index by folding every
-    * merged partition to the newest row per id (keeping the in-row `__b`
-    * stamp, so precedence against not-yet-compacted later batches is
-    * unchanged). Same committed-horizon PRECONDITION as [[compactIndex]];
-    * returns true only when both sub-compactions committed (or had
-    * nothing to merge). */
-  def compactComponentIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Compact both component sub-stores — the signature index with an
+    * id-distinct doc-sorted fold, the label index by folding every merged
+    * partition to the newest row per id (keeping the in-row `__b` stamp,
+    * so precedence against not-yet-compacted later batches is unchanged).
+    * Committed-horizon precondition: see the object scaladoc. Returns true
+    * only when both sub-compactions committed (or had nothing to merge). */
+  def compactComponentIndex(spark: SparkSession,
       indexDir: String, uptoBatchId: Long,
-      onStep: String => Unit = _ => ()): Boolean =
-    // the ROOT lock serializes against componentBatch/loadComponentIndex
-    // (which key on indexDir, not the sub-dirs): without it a same-JVM
-    // reader's heal could race a sub-compaction's aside/commit window.
-    // compactPartitions takes its own sub-dir monitor inside — a strict
-    // child of this one, taken nowhere else first, so no deadlock.
-    lockFor(indexDir).synchronized {
-      val sigsOk = compactPartitions(spark, s"$indexDir/sigs", uptoBatchId,
-        onStep)(_.dropDuplicates("doc_id").sort(col("doc_id")))
-      val labelsOk = compactPartitions(spark, s"$indexDir/labels", uptoBatchId,
-        onStep)(df => resolveLatest(df.dropDuplicates()).sort(col("id")))
+      onStep: String => Unit = _ => ()): Boolean = {
+    // the ROOT lock serializes against componentBatch, which writes both
+    // sub-stores under it; each sub-compaction takes its own sub-store
+    // lock inside — a strict child of this one, taken nowhere else first,
+    // so no deadlock
+    val store = new Store(spark, indexDir)
+    store.lock.synchronized {
+      val sigsOk = store.sub("sigs").compact(uptoBatchId, onStep)(
+        _.dropDuplicates("doc_id").sort(col("doc_id")))
+      val labelsOk = store.sub("labels").compact(uptoBatchId, onStep)(
+        df => resolveLatest(df.dropDuplicates()).sort(col("id")))
       sigsOk && labelsOk
     }
-
-  /** Persist-or-check a single integer parameter under an index root — the
-    * bucket index's width contract made MACHINE-enforced (round-18 ADVICE
-    * #2): caller discipline alone let a later batch append at a different
-    * `w`, silently mixing incompatible bucket spaces in one index (probed
-    * reads then just miss rows). The FIRST batch records the value as a
-    * tiny `_meta.<key>` file; every later batch must match, failing loudly
-    * otherwise. The file is invisible to the partition machinery (readers
-    * and compaction enumerate only `batch=`-prefixed directories). Callers
-    * hold the index lock / fence, so first-write races stay in-process. */
-  private def requireMeta(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, key: String, value: Long): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(root, s"_meta.$key")
-    // CRASH-SAFE publish (round-19 ADVICE #2): the old create-then-write
-    // left an EMPTY _meta file if the process died between create and
-    // close, after which every later batch failed the mismatch require
-    // against recorded="" — a permanently bricked index. Now the value
-    // lands complete under a temp name and an atomic rename publishes it,
-    // so the visible file is never partial; an empty/short file (the one
-    // legacy crash shape) reads as ABSENT and is healed by re-publishing.
-    def readMeta(): Option[String] =
-      if (!fs.exists(meta)) None
-      else {
-        val in = fs.open(meta)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        if (s.isEmpty) None else Some(s)
-      }
-    var recorded = readMeta()
-    var attempts = 0
-    while (recorded.isEmpty) {
-      attempts += 1
-      require(attempts <= 5,
-        s"_meta.$key under $root could not be published after 5 attempts - " +
-          "the filesystem keeps surfacing an empty or vanishing meta file")
-      // heal the empty crash remnant — narrowly: only a zero-length file
-      // (whitespace-only content cannot be produced by the atomic publish)
-      if (fs.exists(meta) && fs.getFileStatus(meta).getLen == 0)
-        fs.delete(meta, false): Unit
-      val tmp = new org.apache.hadoop.fs.Path(root,
-        s"._meta.$key.tmp-${java.util.UUID.randomUUID}")
-      val out = fs.create(tmp, true)
-      try out.write(value.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      // rename is the atomic publish; losing a cross-process first-write
-      // race (dest already exists) is fine — re-read and compare below.
-      // Callers hold the index lock / fence, so the race window is the
-      // documented cross-process first-batch case only.
-      if (fs.exists(meta) || !fs.rename(tmp, meta)) fs.delete(tmp, false): Unit
-      recorded = readMeta()
-    }
-    require(recorded.contains(value.toString),
-      s"index at $root was created with $key=${recorded.getOrElse("")} but " +
-        s"this batch offers $key=$value - a stream cannot re-bucket " +
-        "retroactively; a parameter change is a NEW index")
   }
 
   /** The width recorded by [[bucketBatch]]'s first batch — lets serving
     * code derive its probe configuration from the INDEX instead of caller
     * knowledge (the `_meta` contract's read side). */
-  def bucketIndexWidth(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(root, "_meta.w")
-    require(fs.exists(meta), s"no _meta.w under $indexDir - not a " +
+  def bucketIndexWidth(spark: SparkSession, indexDir: String): Int = {
+    val w = new Store(spark, indexDir).meta("w")
+    require(w.nonEmpty, s"no _meta.w under $indexDir - not a " +
       "bucketBatch-maintained index (or created before the width contract)")
-    val in = fs.open(meta)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-    finally in.close()
-  }
-
-  /** Recover an interrupted [[compactIndex]] run. For each `.old-<id>` aside
-    * copy: if `batch=<id>` exists the commit rename happened — the aside is
-    * redundant (its content is inside the merged partition), delete it; if
-    * `batch=<id>` is absent the crash hit the aside→commit window — restore
-    * the original, losing nothing (the merged tmp is deleted either way and
-    * simply re-built by the next compaction). Idempotent and cheap (one
-    * directory listing); called before every index read so readers never see
-    * a post-crash index with a hidden partition. */
-  private def healCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-    dirs.filter(_.getName.startsWith(".old-")).foreach { aside =>
-      val id = aside.getName.stripPrefix(".old-")
-      val target = new org.apache.hadoop.fs.Path(root, s"batch=$id")
-      if (fs.exists(target)) fs.delete(aside, true)
-      else require(fs.rename(aside, target),
-        s"healCompaction: restore $aside -> $target failed")
-    }
-    dirs.filter(_.getName.startsWith(".compact-"))
-      .foreach(p => fs.delete(p, true))
-  }
-
-  /** The signature-index partitions of batches BEFORE `batchId` (a replayed
-    * batch must not see its own previous postings). */
-  private def earlierIndex(batch: DataFrame, indexDir: String,
-      batchId: Long): Option[DataFrame] = {
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    healCompaction(fs, root) // a crashed compaction must not hide a partition
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("batch=") &&
-          p.getName.stripPrefix("batch=").toLongOption.exists(_ < batchId)
-      }
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_.toString).toIndexedSeq: _*))
+    w.get.toInt
   }
 
   /** The [[nearDedupBatch]] signature index read back as a posting relation
     * in the [[graft.ext.DedupOps.bandPostings]] shape `(__id, band, bsig)`
     * — the adapter that lets the BATCH serving path
     * ([[graft.ext.DedupOps.dropNearDuplicatesMinhashFromPostings]], d09's
-    * cross-corpus probe) read the stream's store directly (round-15 NEXT
-    * #4). Heals interrupted compactions first and distincts (a post-crash
-    * index may transiently hold duplicated postings — see
-    * [[compactIndex]]); returns None when the index is empty.
+    * cross-corpus probe) read the stream's store directly. Distinct, so an
+    * index an older version left mid-compaction serves each posting once;
+    * None when the index is empty.
     *
     * ONE STORE, BOTH PATHS — and its limit: the index and the batch
     * [[graft.ext.Dedup]] minhashPostTable share the bandPostings schema,
@@ -1080,21 +934,10 @@ object CurationStream {
     * bucket chains (1~2, 2~3, 1≁3) the two rules genuinely diverge:
     * batch d02 drops 3 (its bucket's min is 2), the stream keeps 3 (2
     * never entered the index). */
-  def indexPostings(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    lockFor(indexDir).synchronized { healCompaction(fs, root) }
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_.toString).toIndexedSeq: _*)
-      .select(org.apache.spark.sql.functions.col("__id"),
-        org.apache.spark.sql.functions.col("band"),
-        org.apache.spark.sql.functions.col("bsig"))
-      .distinct())
-  }
+  def indexPostings(spark: SparkSession,
+      indexDir: String): Option[DataFrame] =
+    new Store(spark, indexDir).read()
+      .map(_.select(col("__id"), col("band"), col("bsig")).distinct())
 
   /** |cos| between two fitted components — the drift gauge between two
     * [[topComponentReport]] points (sign-invariant: a power iteration may
@@ -1114,20 +957,17 @@ object CurationStream {
   }
 
   /** Record one [[topComponentReport]] fit as a MONITOR POINT — the
-    * time-series composition of [[componentDrift]] (round-16 verdict #7):
-    * each report's fitted component persists as `monitorDir/report=<id>`
-    * (the [[tokenCountsBatch]] partition discipline applied to dim-sized
-    * driver state: replay overwrites exactly its own point, per-report IO
-    * is one tiny row). Feed successive report ids from the batch ids the
-    * reports cover; [[componentDriftAlarms]] reads the series back. */
-  def componentFitPoint(spark: org.apache.spark.sql.SparkSession,
+    * time-series composition of [[componentDrift]]: each report's fitted
+    * component is the `monitorDir/report=<id>` partition (one tiny row; a
+    * replayed report overwrites exactly its own point). Feed successive
+    * report ids from the batch ids the reports cover;
+    * [[componentDriftAlarms]] reads the series back. */
+  def componentFitPoint(spark: SparkSession,
       monitorDir: String, reportId: Long, fit: Array[Double]): Unit = {
     import spark.implicits._
-    lockFor(monitorDir).synchronized {
-      Seq((reportId, fit.toSeq)).toDF("report_id", "component")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$monitorDir/report=$reportId")
-    }
+    new Store(spark, monitorDir, "report=").writeBatch(reportId,
+      "componentFitPoint")(
+      Seq((reportId, fit.toSeq)).toDF("report_id", "component").coalesce(1))
   }
 
   /** The DRIFT ALARM over every recorded [[componentFitPoint]], in
@@ -1141,42 +981,33 @@ object CurationStream {
     * doubles — KBs at any corpus size; the expensive half (the fit) was
     * already bounded by [[topComponentBatch]]'s sample rule. Returns an
     * empty series when fewer than two points exist. */
-  def componentDriftAlarms(spark: org.apache.spark.sql.SparkSession,
+  def componentDriftAlarms(spark: SparkSession,
       monitorDir: String, threshold: Double): Seq[(Long, Double, Boolean)] = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0,1]: $threshold")
-    val root = new org.apache.hadoop.fs.Path(monitorDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val parts = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("report="))
-    if (parts.length < 2) return Seq.empty
     import spark.implicits._
-    val points = spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
-      .select(col("report_id"), col("component"))
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    points.sliding(2).collect { case Array((_, prev), (id, cur)) =>
-      val d = componentDrift(prev.toArray, cur.toArray)
-      (id, d, d < threshold)
-    }.toSeq
+    new Store(spark, monitorDir, "report=").read().toSeq.flatMap { df =>
+      val points = df.select(col("report_id"), col("component"))
+        .as[(Long, Seq[Double])].collect().sortBy(_._1)
+      points.sliding(2).collect { case Array((_, prev), (id, cur)) =>
+        val d = componentDrift(prev.toArray, cur.toArray)
+        (id, d, d < threshold)
+      }.toSeq
+    }
   }
 
   /** Record one [[klDriftReport]]'s per-source KL points as a MONITOR
     * POINT — the [[componentFitPoint]] discipline applied to the token
-    * distribution gauge (round-17 verdict #8: the component-drift series
-    * got its alarm composition in round 17; this is the KL stream's
-    * twin): each report's (source, kl_corpus) rows persist as
-    * `monitorDir/report=<id>` with the report id folded into the rows,
-    * so a replayed report overwrites exactly its own point. Per-report
-    * IO is |sources| rows — KBs at any corpus size. */
+    * distribution gauge: each report's (source, kl_corpus) rows are the
+    * `monitorDir/report=<id>` partition with the report id folded into the
+    * rows, so a replayed report overwrites exactly its own point.
+    * Per-report IO is |sources| rows — KBs at any corpus size. */
   def klDriftPoint(monitorDir: String, reportId: Long, report: DataFrame,
       byCol: String): Unit =
-    lockFor(monitorDir).synchronized {
+    new Store(report.sparkSession, monitorDir, "report=").writeBatch(reportId,
+      "klDriftPoint")(
       report.select(lit(reportId).as("report_id"), col(byCol),
-          col("kl_corpus").as("kl"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$monitorDir/report=$reportId")
-    }
+        col("kl_corpus").as("kl")).coalesce(1))
 
   /** The DRIFT ALARM over every recorded [[klDriftPoint]], per source in
     * report-id order: one row per consecutive report pair per source —
@@ -1187,32 +1018,17 @@ object CurationStream {
     * there and not before (spec-pinned on a planted drifting source).
     * A source absent from some report pairs its surviving points
     * (consecutive PRESENT points — absence means no tokens, not
-    * drift). Returns an empty series (correct schema) when fewer than
-    * two reports exist. State is |sources| × |reports| rows — driver-
-    * negligible; the expensive half (the counts) was already
-    * batch-partitioned by [[tokenCountsBatch]]. */
-  def klDriftAlarms(spark: org.apache.spark.sql.SparkSession,
+    * drift). Returns an empty series when fewer than two reports exist
+    * (with `byType` as the group column's type when none exists). State is
+    * |sources| × |reports| rows — driver-negligible; the expensive half
+    * (the counts) was already batch-partitioned by [[tokenCountsBatch]]. */
+  def klDriftAlarms(spark: SparkSession,
       monitorDir: String, byCol: String, threshold: Double,
-      byType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType): DataFrame = {
+      byType: DataType = StringType): DataFrame = {
     require(threshold > 0.0, s"threshold > 0: $threshold")
-    val root = new org.apache.hadoop.fs.Path(monitorDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("report="))
-    val source =
-      if (parts.length < 2)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("report_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(byCol, byType),
-            org.apache.spark.sql.types.StructField("kl",
-              org.apache.spark.sql.types.DoubleType))))
-      else spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+    val source = new Store(spark, monitorDir, "report=").read().getOrElse(
+      emptyFrame(spark, "report_id" -> LongType, byCol -> byType,
+        "kl" -> DoubleType))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(byCol)).orderBy(col("report_id"))
     source
@@ -1235,36 +1051,20 @@ object CurationStream {
   // ------------------------------------------------ incremental KL drift
   /** Incremental token-count state for streaming distribution monitoring —
     * the c14 `klDrift` report fed from a stream: each micro-batch writes
-    * its OWN (byCol, __tok, __c) aggregate as `countsDir/batch=<id>`, the
-    * [[nearDedupBatch]] signature-index write discipline applied to counts:
-    *
-    *   - replay idempotency for free — a replayed batch OVERWRITES exactly
-    *     its own partition (rewriting it to absent when the batch is
-    *     empty), never double-counts;
-    *   - per-batch IO is BATCH-sized (one aggregate write), never
-    *     state-sized — no read-merge-rewrite of the whole vocabulary per
-    *     micro-batch;
-    *   - report cost grows with the partition count until compacted; the
-    *     [[compactIndex]] rename-aside pattern applies verbatim when batch
-    *     partitions accumulate (counts merge by sum instead of distinct).
+    * its OWN (byCol, __tok, __c) aggregate as its `batch=<id>` partition.
+    * Per-batch IO is batch-sized (one aggregate write), never state-sized —
+    * no read-merge-rewrite of the vocabulary per micro-batch; report cost
+    * grows with the partition count until [[compactCounts]] folds them.
     *
     * Use as `stream.writeStream.foreachBatch(tokenCountsBatch(dir, "text",
     * "source") _)`. */
   def tokenCountsBatch(countsDir: String, textCol: String, byCol: String)
       (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val counts = graft.ext.CurationOps.tokenCounts(batch, textCol, byCol)
       .persist()
-    try lockFor(countsDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(countsDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      val target = new org.apache.hadoop.fs.Path(s"$countsDir/batch=$batchId")
-      // empty batch -> absent partition (an empty parquet dir has no schema
-      // to read back); a replayed batch still deletes its prior attempt
-      if (counts.isEmpty) fs.delete(target, true)
-      else counts.write.mode("overwrite").parquet(target.toString)
-    } finally counts.unpersist(false)
+    try new Store(batch.sparkSession, countsDir).writeBatch(batchId,
+      "tokenCountsBatch")(counts)
+    finally counts.unpersist(false)
   }
 
   /** The c14 KL-drift report over everything [[tokenCountsBatch]] has
@@ -1272,35 +1072,14 @@ object CurationStream {
     * count table (vocabulary-sized — the merge never touches document
     * text), then the exact [[graft.ext.CurationOps.klFromCounts]] math, so
     * the streaming report is BIT-identical to running the batch `klDrift`
-    * over the union of all micro-batches (spec-pinned). Returns the empty
-    * report when no batch has written yet. */
-  def klDriftReport(spark: org.apache.spark.sql.SparkSession,
+    * over the union of all micro-batches (spec-pinned). Absent state gives
+    * the empty report through the same plan, over an empty frame whose
+    * group column has type `byType`. */
+  def klDriftReport(spark: SparkSession,
       countsDir: String, byCol: String,
-      byType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(countsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-    // Absent state -> empty report, derived from the SAME klFromCounts
-    // plan the non-empty path runs over an empty tokenCounts-shaped frame
-    // (byType = the group column's type, caller-overridable), so both
-    // paths always agree on schema — a hand-written StructType here would
-    // silently diverge for a non-string byCol exactly when state happens
-    // to be absent (round-10 ADVICE).
-    val source =
-      if (parts.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(byCol, byType),
-            org.apache.spark.sql.types.StructField("__tok",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("__c",
-              org.apache.spark.sql.types.LongType))))
-      else spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+      byType: DataType = StringType): DataFrame = {
+    val source = new Store(spark, countsDir).read().getOrElse(
+      emptyFrame(spark, byCol -> byType, "__tok" -> StringType, "__c" -> LongType))
     val merged = source
       .groupBy(col(byCol), col("__tok"))
       .agg(sum(col("__c")).as("__c"))
@@ -1309,26 +1088,17 @@ object CurationStream {
 
   // ------------------------------------------ embedding top-component drift
   /** Streaming twin of the s30 top-principal-component fit — the
-    * corpus-drift monitor for EMBEDDING spaces (round-15 NEXT #6), the
-    * [[tokenCountsBatch]] discipline applied to the ABTT primitives: each
-    * micro-batch appends its training-eligible vectors (`idCol` <
-    * `sampleMax` — the s30/s15 bounded-sample rule, so state is
-    * sample-sized, never stream-sized) as a `sampleDir/batch=<id>`
-    * partition. A replayed batch overwrites its own partition (idempotent
-    * replay); an empty batch deletes it. */
+    * corpus-drift monitor for EMBEDDING spaces: each micro-batch writes its
+    * training-eligible vectors (`idCol` < `sampleMax` — the s30/s15
+    * bounded-sample rule, so state is sample-sized, never stream-sized) as
+    * its `batch=<id>` partition. */
   def topComponentBatch(sampleDir: String, idCol: String, vecCol: String,
       sampleMax: Long = 256L)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val sample = batch.filter(col(idCol) < sampleMax)
       .select(col(idCol), col(vecCol)).persist()
-    try lockFor(sampleDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(sampleDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      val target = new org.apache.hadoop.fs.Path(s"$sampleDir/batch=$batchId")
-      if (sample.isEmpty) fs.delete(target, true)
-      else sample.write.mode("overwrite").parquet(target.toString)
-    } finally sample.unpersist(false)
+    try new Store(batch.sparkSession, sampleDir).writeBatch(batchId,
+      "topComponentBatch")(sample)
+    finally sample.unpersist(false)
   }
 
   /** Fit the top component over everything [[topComponentBatch]] has
@@ -1342,41 +1112,29 @@ object CurationStream {
     * reports (cosine between fits) to watch the common direction drift as
     * the corpus grows.
     *
-    * BOUND (behavior change in round 18 — release note): the forwarded
-    * [[graft.ext.Similarity.topComponentFit]] now FAILS (IllegalArgument)
-    * when the accumulated sample exceeds its `maxSample` default of 65536
-    * rows, instead of fitting an unbounded driver collect. The
-    * [[topComponentBatch]] writer's `sampleMax` id-cut keeps in-repo
-    * stores far below the bound; an external caller accumulating a larger
-    * sample must re-point `sampleMax`/`maxSample` deliberately — the
+    * BOUND: the forwarded [[graft.ext.Similarity.topComponentFit]] FAILS
+    * (IllegalArgument) when the accumulated sample exceeds its `maxSample`
+    * default of 65536 rows, instead of fitting an unbounded driver
+    * collect. The [[topComponentBatch]] writer's `sampleMax` id-cut keeps
+    * in-repo stores far below the bound; an external caller accumulating a
+    * larger sample must re-point `sampleMax`/`maxSample` deliberately — the
     * fail-not-truncate contract is intentional (a silent cut would change
     * the fitted component under a contract that promises the exact
     * accumulated sample). */
-  def topComponentReport(spark: org.apache.spark.sql.SparkSession,
+  def topComponentReport(spark: SparkSession,
       sampleDir: String, idCol: String, vecCol: String, iters: Int = 8)
-      : Option[(Array[Double], Array[Double])] = {
-    val root = new org.apache.hadoop.fs.Path(sampleDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-    if (parts.isEmpty) None
-    else Some(graft.ext.Similarity.topComponentFit(
-      spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*),
-      idCol, vecCol, iters))
-  }
+      : Option[(Array[Double], Array[Double])] =
+    new Store(spark, sampleDir).read().map(
+      graft.ext.Similarity.topComponentFit(_, idCol, vecCol, iters))
 
   // --------------------------------------------- incremental corpus report
-  /** Incremental doc-stat state for the c15 corpus report over a stream —
-    * the [[tokenCountsBatch]] discipline applied to the dataset-card
-    * accounting: each micro-batch writes its (source, lang) cell stats
-    * (n_docs / n_tokens / n_chars / max_doc_tokens — all sum/max-mergeable)
-    * as `statsDir/batch=<id>`. Replay overwrites its own partition;
-    * per-batch IO is one |sources×langs|-row aggregate. */
+  /** Incremental doc-stat state for the c15 corpus report over a stream:
+    * each micro-batch writes its (source, lang) cell stats (n_docs /
+    * n_tokens / n_chars / max_doc_tokens — all sum/max-mergeable) as its
+    * `batch=<id>` partition; per-batch IO is one |sources×langs|-row
+    * aggregate. */
   def docStatsBatch(statsDir: String, textCol: String, sourceCol: String,
       langCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val stats = batch
       .withColumn("__ntok", size(toks(col(textCol))).cast("long"))
       .withColumn("__nchr", length(col(textCol)).cast("long"))
@@ -1385,14 +1143,9 @@ object CurationStream {
         sum(col("__nchr")).as("n_chars"),
         max(col("__ntok")).as("max_doc_tokens"))
       .persist()
-    try lockFor(statsDir).synchronized {
-      val root = new org.apache.hadoop.fs.Path(statsDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      val target = new org.apache.hadoop.fs.Path(s"$statsDir/batch=$batchId")
-      if (stats.isEmpty) fs.delete(target, true)
-      else stats.write.mode("overwrite").parquet(target.toString)
-    } finally stats.unpersist(false)
+    try new Store(batch.sparkSession, statsDir).writeBatch(batchId,
+      "docStatsBatch")(stats)
+    finally stats.unpersist(false)
   }
 
   /** The c15 rollup report over everything [[docStatsBatch]] accumulated:
@@ -1400,32 +1153,15 @@ object CurationStream {
     * associative), then the SAME rollup lattice and `(all)` labels as the
     * batch [[graft.ext.CurationOps.corpusReport]], so the streamed report
     * equals the batch operator over the union of all micro-batches exactly
-    * (integer-only — spec-pinned). */
-  def corpusReportStream(spark: org.apache.spark.sql.SparkSession,
+    * (integer-only — spec-pinned). Absent state gives the empty report
+    * through the same plan. */
+  def corpusReportStream(spark: SparkSession,
       statsDir: String, sourceCol: String = "source",
       langCol: String = "lang"): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(statsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-    // Absent state -> empty report through the SAME rollup plan over an
-    // empty stats-shaped frame, so the empty and non-empty paths can never
-    // disagree on schema (round-10 ADVICE; the group columns surface as
-    // coalesce(col, '(all)') strings on both paths either way).
-    val source =
-      if (parts.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(
-            Seq(sourceCol, langCol).map(n =>
-              org.apache.spark.sql.types.StructField(n,
-                org.apache.spark.sql.types.StringType)) ++
-            Seq("n_docs", "n_tokens", "n_chars", "max_doc_tokens").map(n =>
-              org.apache.spark.sql.types.StructField(n,
-                org.apache.spark.sql.types.LongType))))
-      else spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+    val source = new Store(spark, statsDir).read().getOrElse(
+      emptyFrame(spark, Seq(sourceCol, langCol).map(_ -> StringType) ++
+        Seq("n_docs", "n_tokens", "n_chars", "max_doc_tokens")
+          .map(_ -> LongType): _*))
     source
       .rollup(col(sourceCol), col(langCol))
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -1440,12 +1176,12 @@ object CurationStream {
   }
 
   /** [[compactCounts]] for the doc-stat state: sum/max-merge committed
-    * partitions (same `uptoBatchId` correctness precondition — replaying a
-    * compacted batch would double-count). */
-  def compactStats(spark: org.apache.spark.sql.SparkSession,
+    * partitions (the same correctness-critical horizon precondition —
+    * replaying a compacted batch would double-count). */
+  def compactStats(spark: SparkSession,
       statsDir: String, uptoBatchId: Long, sourceCol: String = "source",
       langCol: String = "lang", onStep: String => Unit = _ => ()): Boolean =
-    compactPartitions(spark, statsDir, uptoBatchId, onStep)(
+    new Store(spark, statsDir).compact(uptoBatchId, onStep)(
       _.groupBy(col(sourceCol), col(langCol))
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("n_tokens")).as("n_tokens"),

@@ -37,10 +37,6 @@ object Pipeline {
       .text(dir)
       .transform(lines => Ndjson.parseLines(lines, schema)._1)
 
-  /** Batch twin of [[readNdjsonStream]] returning (parsed, corrupt). */
-  def readNdjson(spark: SparkSession, dir: String, schema: StructType): (DataFrame, DataFrame) =
-    Ndjson.parseLines(spark.read.text(dir), schema)
-
   /** S3 synthesis: a metricbeat-poll-shaped stream from the built-in `rate`
     * source (example/metricbeat/metricbeat.yml:19-50 — periodic system
     * metric snapshots). Deterministic per `value`, so tests can assert. */
@@ -85,7 +81,11 @@ object Pipeline {
 
   /** The full publish transform (P1 + K1/K2 + F2): encode NDJSON, attach the
     * configured partition key, split off key-failures. Returns
-    * (records, dropped) — records are (data, partition_key). */
+    * (records, dropped) — records are (data, partition_key); `dropped`
+    * keeps the input rows whose key resolved NULL, with their
+    * `partition_key` column, on a side output for audit instead of letting
+    * them vanish (the F2 filter of streams/client.go:148-151; SURVEY §4.3
+    * "dropped-event side channel"). */
   def publishTransform(df: DataFrame, cfg: StreamsConfig): (DataFrame, DataFrame) = {
     val key = PartitionKeys.forConfig(cfg, df.schema)
     // M1 counters ride on the keyed frame BEFORE the null-key filter, so
@@ -95,9 +95,7 @@ object Pipeline {
     val dropped = keyed.filter(col("partition_key").isNull)
     // payload = the event's own columns; the key rides alongside, not inside
     // (streams/client.go:153 — {Data, PartitionKey}).
-    val records = ok.select(
-      concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"),
-      col("partition_key"))
+    val records = ok.select(Ndjson.data(df.columns.toIndexedSeq), col("partition_key"))
     (records, dropped)
   }
 
@@ -115,9 +113,7 @@ object Pipeline {
     * (firehose/client.go:111-137; the sink record is {Data} only,
     * firehose/client.go:136). Encode-failures were already dropped at parse
     * time (F1), matching mapEvents' fold. */
-  def firehoseTransform(df: DataFrame): DataFrame =
-    df.select(
-      concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"))
+  def firehoseTransform(df: DataFrame): DataFrame = Ndjson.encode(df)
 
   /** O2 terminal twin: the reference's firehose delivers onward to
     * S3-as-NDJSON for Athena (streams/client.go:140-144 documents the

@@ -27,6 +27,33 @@ object StatefulSessions {
   final case class ClosedSession(user_id: Long, session_start: Timestamp,
       n_events: Long, sess_value: Double)
 
+  /** The session fold both sessionizers run: apply a batch of events, in
+    * (time, value) order, to the (possibly absent) open session, emitting
+    * the sessions that a gap longer than `gapUs` closes. */
+  private[streaming] def fold(user: Long, gapUs: Long, start: Option[SessionState],
+      events: Seq[UserEvent]): (Seq[ClosedSession], Option[SessionState]) = {
+    val closed = Seq.newBuilder[ClosedSession]
+    var cur = start
+    events.sortBy(e => (e.ts.getTime, e.value)).foreach { e =>
+      val us = e.ts.getTime * 1000L
+      cur match {
+        case Some(s) if us - s.lastUs > gapUs =>
+          closed += close(user, s)
+          cur = Some(SessionState(us, us, 1L, e.value))
+        case Some(s) =>
+          cur = Some(s.copy(lastUs = math.max(s.lastUs, us),
+            nEvents = s.nEvents + 1, sumValue = s.sumValue + e.value))
+        case None =>
+          cur = Some(SessionState(us, us, 1L, e.value))
+      }
+    }
+    (closed.result(), cur)
+  }
+
+  /** The emitted record of a closed session. */
+  private[streaming] def close(user: Long, s: SessionState): ClosedSession =
+    ClosedSession(user, new Timestamp(s.start / 1000L), s.nEvents, s.sumValue)
+
   /** Sessionize a watermarked [[UserEvent]] stream: a gap of `gapSeconds`
     * of inactivity closes the session; closure is detected either by a later
     * event of the same user or by the event-time timeout (watermark passing
@@ -36,10 +63,6 @@ object StatefulSessions {
     implicit val outEnc = Encoders.product[ClosedSession]
     implicit val keyEnc = Encoders.scalaLong
     val gapUs = gapSeconds * 1000000L
-
-    def close(user: Long, s: SessionState): ClosedSession =
-      ClosedSession(user, new Timestamp(s.start / 1000L), s.nEvents, s.sumValue)
-
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
@@ -50,28 +73,13 @@ object StatefulSessions {
             state.remove()
             out
           } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.value))
-            val closed = Seq.newBuilder[ClosedSession]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val us = e.ts.getTime * 1000L
-              cur match {
-                case Some(s) if us - s.lastUs > gapUs =>
-                  closed += close(user, s)
-                  cur = Some(SessionState(us, us, 1L, e.value))
-                case Some(s) =>
-                  cur = Some(s.copy(lastUs = math.max(s.lastUs, us),
-                    nEvents = s.nEvents + 1, sumValue = s.sumValue + e.value))
-                case None =>
-                  cur = Some(SessionState(us, us, 1L, e.value))
-              }
-            }
-            cur.foreach { s =>
+            val (closed, next) = fold(user, gapUs, state.getOption, rows.toSeq)
+            next.foreach { s =>
               state.update(s)
               // evict when the watermark passes the gap horizon
               state.setTimeoutTimestamp(s.lastUs / 1000L + gapSeconds * 1000L)
             }
-            closed.result().iterator
+            closed.iterator
           }
         })
   }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
   StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 
-import StatefulSessions.{ClosedSession, SessionState, UserEvent}
+import StatefulSessions.{ClosedSession, SessionState, UserEvent, fold}
 
 /** Gap sessionizer on Spark 4's `transformWithState` — the successor API to
   * `flatMapGroupsWithState` ([[StatefulSessions]] is the FMGWS twin; both
@@ -25,31 +23,6 @@ import StatefulSessions.{ClosedSession, SessionState, UserEvent}
   * ACTIVE user, hash-partitioned by key, bounded by the watermark horizon.
   */
 object TwsSessions {
-
-  /** Pure session fold shared by both processors: apply a batch of events to
-    * the (possibly absent) open session, emitting sessions closed by gaps. */
-  private def fold(user: Long, gapUs: Long, start: Option[SessionState],
-      events: Seq[UserEvent]): (Seq[ClosedSession], Option[SessionState]) = {
-    val closed = Seq.newBuilder[ClosedSession]
-    var cur = start
-    events.sortBy(e => (e.ts.getTime, e.value)).foreach { e =>
-      val us = e.ts.getTime * 1000L
-      cur match {
-        case Some(s) if us - s.lastUs > gapUs =>
-          closed += TwsSessions.close(user, s)
-          cur = Some(SessionState(us, us, 1L, e.value))
-        case Some(s) =>
-          cur = Some(s.copy(lastUs = math.max(s.lastUs, us),
-            nEvents = s.nEvents + 1, sumValue = s.sumValue + e.value))
-        case None =>
-          cur = Some(SessionState(us, us, 1L, e.value))
-      }
-    }
-    (closed.result(), cur)
-  }
-
-  private def close(user: Long, s: SessionState): ClosedSession =
-    ClosedSession(user, new Timestamp(s.start / 1000L), s.nEvents, s.sumValue)
 
   /** The shared processor body — mixed into both the plain and the
     * initial-state processor (they need DIFFERENT Spark base classes, and
@@ -90,7 +63,7 @@ object TwsSessions {
       // a timer may fire after the session it guarded was extended — only a
       // timer matching the CURRENT state's horizon closes the session
       if (state.exists() && timerMsFor(state.get()) <= info.getExpiryTimeInMs) {
-        val out = TwsSessions.close(user, state.get())
+        val out = StatefulSessions.close(user, state.get())
         state.clear()
         Iterator.single(out)
       } else Iterator.empty

@@ -21,6 +21,28 @@ class HarnessSpec extends SparkSpec {
       s"build sessions with GraftSession, not SparkSession.builder(): $offenders")
   }
 
+  test("CurationStream touches the filesystem only inside its store helper") {
+    val src = Files.readString(
+      Paths.get("src/main/scala/graft/streaming/CurationStream.scala"))
+    val start = src.indexOf("private final class Store(")
+    assert(start >= 0, "the store helper class is missing")
+    // the helper runs from its header to the brace that closes its body
+    var i = src.indexOf('{', start)
+    var depth = 0
+    while ({
+      if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
+      i += 1
+      depth > 0
+    }) ()
+    val helper = src.substring(start, i)
+    val rest = src.substring(0, start) + src.substring(i)
+    for (idiom <- Seq("getFileSystem", "listStatus", "healCompaction(",
+        "Fence.acquire", "read.parquet")) {
+      assert(helper.contains(idiom), s"the store helper no longer uses $idiom")
+      assert(!rest.contains(idiom), s"$idiom outside the store helper")
+    }
+  }
+
   test("the spec session is the shipped session at 4 cores") {
     val conf = spark.conf
     assert(spark.sparkContext.master == "local[4]")

@@ -3,6 +3,7 @@ package graft
 import graft.encode.Ndjson
 import graft.keys.PartitionKeys
 import graft.config.StreamsConfig
+import graft.streaming.Pipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,10 +57,12 @@ class NdjsonSpec extends SparkSpec {
 class PartitionKeySpec extends SparkSpec {
   import spark.implicits._
 
+  // the field provider through the publish transform's own key split
+  private def fieldCfg(path: String) = StreamsConfig("r", "s", partitionKey = path)
+
   test("field provider: string field value becomes the key") {
     val df = Seq(("v1", 1L), ("v2", 2L)).toDF("mykey", "n")
-    val key = PartitionKeys.fieldKey(df.schema, "mykey")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = Pipeline.publishTransform(df, fieldCfg("mykey"))
     assert(ok.select("partition_key").as[String].collect().sorted.toSeq == Seq("v1", "v2"))
     assert(dropped.count() == 0)
   }
@@ -73,22 +76,19 @@ class PartitionKeySpec extends SparkSpec {
 
   test("field provider: non-string field -> dropped (no implicit cast)") {
     val df = Seq((7L, "x")).toDF("numkey", "payload")
-    val key = PartitionKeys.fieldKey(df.schema, "numkey")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = Pipeline.publishTransform(df, fieldCfg("numkey"))
     assert(ok.count() == 0 && dropped.count() == 1)
   }
 
   test("field provider: missing field -> dropped") {
     val df = Seq(("x", 1L)).toDF("a", "n")
-    val key = PartitionKeys.fieldKey(df.schema, "no.such.field")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = Pipeline.publishTransform(df, fieldCfg("no.such.field"))
     assert(ok.count() == 0 && dropped.count() == 1)
   }
 
   test("field provider: null value at runtime -> dropped") {
     val df = Seq(Some("k"), None).map(v => Tuple1(v.orNull)).toDF("mykey")
-    val key = PartitionKeys.fieldKey(df.schema, "mykey")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = Pipeline.publishTransform(df, fieldCfg("mykey"))
     assert(ok.count() == 1 && dropped.count() == 1)
   }
 

@@ -52,6 +52,12 @@ class StreamingPipelineSpec extends SparkSpec {
     rows
   }
 
+  /** Every `batch=` partition of a store read as it lies on disk — no heal,
+    * no manifest, no id distinct — to count what the writers left. */
+  private def rawPartitions(dir: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("batch=")).map(_.getPath).toIndexedSeq: _*)
+
   test("end-to-end: NDJSON file stream -> encode+key -> kinesis-shaped sink") {
     import StreamingPipelineSpec.CollectingPutter
     CollectingPutter.got.clear()
@@ -1213,6 +1219,59 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(aCount == Seq(3L), s"got $aCount")
   }
 
+  test("a crashed compaction of the count and stat stores neither loses nor double-counts") {
+    import graft.streaming.CurationStream
+    val batches = Seq(
+      Seq((1L, "a a b", "A", "en"), (2L, "b c", "B", "de")),
+      Seq((3L, "a c", "A", "en")),
+      Seq((4L, "d d", "B", "en")))
+      .map(_.toDF("doc_id", "text", "source", "lang"))
+    // report rows with doubles as raw bits: the merge must be exact
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      }).sortBy(_.mkString("|")).toSeq
+    final case class SumStore(name: String, write: (String, Long) => Unit,
+        report: String => Seq[Seq[Any]],
+        compact: (String, String => Unit) => Boolean)
+    val stores = Seq(
+      SumStore("counts",
+        (dir, id) => CurationStream.tokenCountsBatch(dir, "text", "source")(
+          batches(id.toInt), id),
+        dir => bits(CurationStream.klDriftReport(spark, dir, "source")),
+        (dir, onStep) => CurationStream.compactCounts(spark, dir,
+          uptoBatchId = 3L, "source", onStep)),
+      SumStore("stats",
+        (dir, id) => CurationStream.docStatsBatch(dir, "text", "source", "lang")(
+          batches(id.toInt), id),
+        dir => bits(CurationStream.corpusReportStream(spark, dir)),
+        (dir, onStep) => CurationStream.compactStats(spark, dir,
+          uptoBatchId = 3L, onStep = onStep)))
+    for (store <- stores; step <- Seq("merged", "aside", "committed")) {
+      val dir = Files.createTempDirectory(s"${store.name}_crash_$step").toString
+      batches.indices.foreach(i => store.write(dir, i.toLong))
+      val before = store.report(dir)
+      val boom = intercept[RuntimeException] {
+        store.compact(dir, s => if (s == step) throw new RuntimeException(s"crash at $s"))
+      }
+      assert(boom.getMessage == s"crash at $step")
+      // aside: batch=2 sits renamed away until a reader heals it back;
+      // committed: the folded originals still lie next to the merged sum
+      assert(store.report(dir) == before,
+        s"${store.name}: crash window '$step' changed the report")
+      assert(store.compact(dir, _ => ()),
+        s"${store.name}: the follow-up compaction after '$step' must complete")
+      assert(store.report(dir) == before,
+        s"${store.name}: the follow-up compaction after '$step' changed the report")
+      val left = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(n => n.startsWith("batch=") || n.startsWith(".old-") ||
+          n.startsWith(".compact-")).sorted.toSeq
+      assert(left == Seq("batch=2"),
+        s"${store.name}: after '$step' and a follow-up compaction: $left")
+    }
+  }
+
   test("incremental corpus report: streamed cell partitions reproduce batch c15 exactly") {
     import graft.streaming.CurationStream
     import graft.ext.CurationOps
@@ -1470,14 +1529,14 @@ class StreamingPipelineSpec extends SparkSpec {
     slices.zipWithIndex.foreach { case (b, i) =>
       CurationStream.ivfPqIndexBatch(dir, model, "vec_id", "embedding")(b, i.toLong)
     }
-    assert(searchRows(CurationStream.loadIvfPqIndex(spark, dir)) == batchRows,
+    assert(searchRows(CurationStream.loadIndex(spark, dir, "id")) == batchRows,
       "streamed-built index search must equal the batch-built search")
     // replay idempotency: batch 1 re-runs against an index that already
     // holds its partition — rewritten, not duplicated
     CurationStream.ivfPqIndexBatch(dir, model, "vec_id", "embedding")(slices(1), 1L)
-    assert(CurationStream.loadIvfPqIndex(spark, dir, dedupIds = false).count() == 500L,
+    assert(rawPartitions(dir).count() == 500L,
       "a replayed batch must rewrite, not duplicate, its partition")
-    assert(searchRows(CurationStream.loadIvfPqIndex(spark, dir)) == batchRows,
+    assert(searchRows(CurationStream.loadIndex(spark, dir, "id")) == batchRows,
       "replay must leave the search identical")
     // an empty replay rewrites the partition to nothing, then a fresh
     // non-empty replay restores it (the delete/rewrite idempotency pair)
@@ -1486,7 +1545,7 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(!new java.io.File(dir, "batch=1").exists(),
       "an empty replay must delete the stale partition")
     CurationStream.ivfPqIndexBatch(dir, model, "vec_id", "embedding")(slices(1), 1L)
-    assert(searchRows(CurationStream.loadIvfPqIndex(spark, dir)) == batchRows)
+    assert(searchRows(CurationStream.loadIndex(spark, dir, "id")) == batchRows)
   }
 
   test("streaming binary-signature index: streamed-built equals the batch table; fusion leg parity; compaction exact") {
@@ -1504,11 +1563,11 @@ class StreamingPipelineSpec extends SparkSpec {
     slices.zipWithIndex.foreach { case (b, i) =>
       CurationStream.binarySigBatch(dir, "vec_id", "embedding")(b, i.toLong)
     }
-    assert(rows(CurationStream.loadBinarySigIndex(spark, dir)) == batchTable,
+    assert(rows(CurationStream.loadIndex(spark, dir, "vec_id")) == batchTable,
       "streamed-built signatures must equal the one-shot table bit-exactly")
     // replay idempotency: rewrite, not duplicate; empty replay deletes
     CurationStream.binarySigBatch(dir, "vec_id", "embedding")(slices(1), 1L)
-    assert(CurationStream.loadBinarySigIndex(spark, dir, dedupIds = false)
+    assert(rawPartitions(dir)
       .count() == batchTable.size.toLong)
     CurationStream.binarySigBatch(dir, "vec_id", "embedding")(
       slices(1).filter(lit(false)), 1L)
@@ -1521,12 +1580,12 @@ class StreamingPipelineSpec extends SparkSpec {
       Similarity.hammingRankingFromSigs(sigs, k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy(t => (t._1, t._3)).toSeq
-    assert(leg(CurationStream.loadBinarySigIndex(spark, dir)) ==
+    assert(leg(CurationStream.loadIndex(spark, dir, "vec_id")) ==
       leg(Similarity.binarySigTable(spark, sfDir)),
       "the fusion's Hamming leg must serve identically from the streamed index")
     // compaction merges to one partition, rows unchanged
     assert(CurationStream.compactBinarySigIndex(spark, dir, uptoBatchId = 3L))
-    assert(rows(CurationStream.loadBinarySigIndex(spark, dir)) == batchTable,
+    assert(rows(CurationStream.loadIndex(spark, dir, "vec_id")) == batchTable,
       "compaction must preserve the signature rows exactly")
   }
 
@@ -1551,11 +1610,11 @@ class StreamingPipelineSpec extends SparkSpec {
     slices.zipWithIndex.foreach { case (b, i) =>
       CurationStream.bucketBatch(dir, "vec_id", "embedding", w)(b, i.toLong)
     }
-    assert(rows(CurationStream.loadBucketIndex(spark, dir)) == batchTable,
+    assert(rows(CurationStream.loadIndex(spark, dir, "vec_id")) == batchTable,
       "streamed-built bucket rows must equal the one-shot store bit-exactly")
     // replay idempotency: rewrite, not duplicate; empty replay deletes
     CurationStream.bucketBatch(dir, "vec_id", "embedding", w)(slices(1), 1L)
-    assert(CurationStream.loadBucketIndex(spark, dir, dedupIds = false)
+    assert(rawPartitions(dir)
       .count() == batchTable.size.toLong,
       "a replayed batch must rewrite, not duplicate, its partition")
     CurationStream.bucketBatch(dir, "vec_id", "embedding", w)(
@@ -1571,14 +1630,14 @@ class StreamingPipelineSpec extends SparkSpec {
       }
       assert(boom.getMessage == s"crash at $step")
       // the next reader heals in-line and the id-dedup load stays exact
-      assert(rows(CurationStream.loadBucketIndex(spark, dir)) == batchTable,
+      assert(rows(CurationStream.loadIndex(spark, dir, "vec_id")) == batchTable,
         s"crash window '$step' broke the streamed bucket table")
       // a follow-up compaction completes and leaves no recovery residue
       assert(CurationStream.compactBucketIndex(spark, dir, uptoBatchId = 3L))
       val residue = new java.io.File(dir).listFiles().map(_.getName)
         .filter(n => n.startsWith(".old-") || n.startsWith(".compact-")).toSeq
       assert(residue.isEmpty, s"crash window '$step' left $residue")
-      assert(rows(CurationStream.loadBucketIndex(spark, dir)) == batchTable,
+      assert(rows(CurationStream.loadIndex(spark, dir, "vec_id")) == batchTable,
         s"post-compaction rows after '$step' must be unchanged")
       // re-seed batch partitions for the next crash window (compaction
       // merged them into batch=0): rewrite the original slices
@@ -1804,7 +1863,7 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(boom.getMessage == s"crash at $step")
       // the next reader heals in-line; the default id-dedup load keeps the
       // search exact even in the post-commit coexistence window
-      assert(searchRows(CurationStream.loadIvfPqIndex(spark, dir)) == batchRows,
+      assert(searchRows(CurationStream.loadIndex(spark, dir, "id")) == batchRows,
         s"crash window '$step' broke the search")
       // a follow-up compaction completes, folds any duplicate rows away
       // exactly, and leaves no recovery residue
@@ -1812,10 +1871,10 @@ class StreamingPipelineSpec extends SparkSpec {
       val residue = new java.io.File(dir).listFiles().map(_.getName)
         .filter(n => n.startsWith(".old-") || n.startsWith(".compact-")).toSeq
       assert(residue.isEmpty, s"crash window '$step' left $residue")
-      assert(CurationStream.loadIvfPqIndex(spark, dir, dedupIds = false)
+      assert(rawPartitions(dir)
           .count() == 500L,
         s"post-compaction index after '$step' must hold exactly one row per id")
-      assert(searchRows(CurationStream.loadIvfPqIndex(spark, dir)) == batchRows,
+      assert(searchRows(CurationStream.loadIndex(spark, dir, "id")) == batchRows,
         s"post-compaction search after '$step' must stay exact")
     }
   }
