@@ -362,12 +362,12 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------- d15
-  /** Oracle-checkable SemDeDup — the deterministic twin of
-    * [[DedupOps.semanticDedup]]: that operator clusters with
-    * [[Similarity.trainCentroids]], whose per-cluster means are plain
-    * float sums (partial-aggregated in task order — fast, but the bits
-    * depend on partitioning, so a borderline pair could flip and no SQL
-    * twin can replay it; it stays spec-covered). This row swaps in the
+  /** Oracle-checkable SemDeDup — the oracle twin of
+    * [[DedupOps.semanticDedup]]. That operator clusters with
+    * [[Similarity.trainCoarse]], whose means are the same id-sorted Lloyd
+    * fold as every trainer here (the same bits at every partitioning), but
+    * whose md5 training sample and corpus-sized nlist are not staged in
+    * the DuckDB twin; it stays spec-covered. This row clusters with the
     * s15-pinned [[Similarity.kmeansFit]] over UNIT vectors — L2 argmin on
     * the unit sphere IS the cosine clustering (d² = 2 − 2·cos) — so the
     * whole pipeline (normalize → Lloyd → assign → within-cluster cosine

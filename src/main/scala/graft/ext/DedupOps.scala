@@ -1489,8 +1489,10 @@ object DedupOps {
   }
 
   /** SemDeDup-style semantic dedup: cluster the embedding space with the IVF
-    * coarse quantizer (deterministic seeded k-means, centroid matrix is
-    * driver-side KBs folded into the plan as literals), then inside each
+    * coarse quantizer ([[Similarity.trainCoarse]]: seeded k-means whose
+    * id-sorted means give the same centroid bits at every partitioning, so
+    * the drop set does too; the centroid matrix is driver-side KBs folded
+    * into the plan as literals), then inside each
     * cluster drop every row whose cosine to a LOWER-id row reaches
     * `threshold` (the same greedy keep-first contract as
     * [[dropNearDuplicatesMinhash]]). Rows the clustering cannot embed
@@ -1513,17 +1515,16 @@ object DedupOps {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nlist: Int = 0, iters: Int = 2,
       trainSampleRows: Long = 262144L, targetClusterSize: Long = 4096L): DataFrame = {
-    val c = Similarity.unitVecs(df.filter(col(vecCol).isNotNull), idCol, vecCol, "id")
+    val embedded = df.filter(col(vecCol).isNotNull)
     val k =
       if (nlist > 0) nlist
-      else semanticDedupNlist(c.count(), targetClusterSize)
+      else semanticDedupNlist(embedded.count(), targetClusterSize)
     // k-means trains on the deterministic hash sample (the ivfKnn/pqKnn
     // practice — centroid placement needs a density sketch, not the corpus);
     // cluster ASSIGNMENT below always runs over every row
-    val centroids = Similarity.trainCentroids(
-      Similarity.trainSample(c, trainSampleRows), k, iters,
-      persistInput = trainSampleRows != Long.MaxValue)
-    val clustered = df.filter(col(vecCol).isNotNull)
+    val centroids = Similarity.withTrainSample(embedded, idCol, vecCol,
+      trainSampleRows)(Similarity.trainCoarse(_, k, iters))
+    val clustered = embedded
       .withColumn("__cid", Similarity.assignExpr(
         transform(col(vecCol), x => x.cast("double")), centroids))
     // round 21: the drop set via ONE block-keyed aggregation instead of the

@@ -342,23 +342,47 @@ object Similarity {
   private def dotLit(u: Column, cen: Seq[Double]): Column =
     graft.functions.VectorExprs.dot(u, array(cen.map(lit): _*))
 
-  /** Deterministic md5-hash sample of ≈ `maxRows` rows of a (id, __u) frame
-    * for quantizer training (no-op when the frame is already smaller). Same
-    * stateless-threshold mechanism as the corpus samplers — reproducible on
-    * every run and data subset, unlike `df.sample`'s seed-and-partition-
-    * dependent Bernoulli. One cheap count() sizes the rate. */
-  private[ext] def trainSample(c: DataFrame, maxRows: Long): DataFrame = {
-    if (maxRows == Long.MaxValue) return c
+  /** Deterministic md5-hash sample of ≈ `trainSampleRows` rows of an
+    * (__id, __v) frame for quantizer training (no-op when the frame is
+    * already smaller). Same stateless-threshold mechanism as the corpus
+    * samplers — reproducible on every run and data subset, unlike
+    * `df.sample`'s seed-and-partition-dependent Bernoulli. One cheap
+    * count() sizes the rate. */
+  private def trainSample(c: DataFrame, trainSampleRows: Long): DataFrame = {
+    // the sample bounds the Lloyd fold's per-cell member lists; without a
+    // cap they would grow with the corpus
+    require(trainSampleRows != Long.MaxValue,
+      "trainSampleRows = Long.MaxValue would train on the whole corpus; pass a bound")
     val n = c.count()
-    if (n <= maxRows) c
+    if (n <= trainSampleRows) c
     else {
       // threshold in the hash's FULL 60-bit range: a coarser (per-million)
       // threshold would floor to its minimum on huge corpora and overshoot
-      // the row cap by n/1e6 instead of staying ≈ maxRows
-      val thr = math.max(1L, (maxRows.toDouble / n * (1L << 60).toDouble).toLong)
-      c.filter(h60(concat(lit("ivftrain"), col("id").cast("string"))) < thr)
+      // the row cap by n/1e6 instead of staying ≈ trainSampleRows
+      val thr = math.max(1L,
+        (trainSampleRows.toDouble / n * (1L << 60).toDouble).toLong)
+      c.filter(h60(concat(lit("ivftrain"), col("__id").cast("string"))) < thr)
     }
   }
+
+  /** Runs `fit` over `train` persisted once — the seed collect and every
+    * Lloyd round re-read it — and unpersists it afterwards. Every training
+    * frame in this file is bounded (a [[trainSample]] or a caller's
+    * slice), so pinning it costs less than re-scanning and re-projecting
+    * its source 1 + iters times. */
+  private def withPersisted[T](train: DataFrame)(fit: DataFrame => T): T = {
+    val p = train.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try fit(p) finally { p.unpersist(false); () }
+  }
+
+  /** The ANN training frame: unit vectors (__id, __v) of the corpus,
+    * [[trainSample]]d to `trainSampleRows` and persisted for `fit`.
+    * Assignment and search always use the FULL corpus; only centroid
+    * positions (an approximation either way) derive from the sample. */
+  private[graft] def withTrainSample[T](corpus: DataFrame, idCol: String,
+      vecCol: String, trainSampleRows: Long)(fit: DataFrame => T): T =
+    withPersisted(trainSample(unitVecs(corpus, idCol, vecCol, "__id")
+      .select(col("__id"), col("__u").as("__v")), trainSampleRows))(fit)
 
   /** Nearest-centroid id for a unit-vector column; the centroid matrix is
     * folded into the plan as literals — no shuffle, no UDF. */
@@ -375,59 +399,85 @@ object Similarity {
     (array_position(scores, array_max(scores)) - 1).cast("int")
   }
 
-  /** Deterministic seeded Lloyd iterations over a unit-vector corpus (the
-    * coarse quantizer shared by [[ivfKnn]] and `DedupOps.semanticDedup`).
-    * Driver state is only the nlist×dim centroid matrix; each iteration is
-    * one keyed aggregation over the corpus. `c` must have columns
-    * (id, __u) as produced by [[unitVecs]]. */
-  private[ext] def trainCentroids(c: DataFrame, nlist: Int,
-      iters: Int, l2: Boolean = false,
-      persistInput: Boolean = true): IndexedSeq[Seq[Double]] = {
-    import org.apache.spark.sql.Row
-    // IVF (cosine) mode keeps centroids on the unit sphere; L2 mode (PQ
-    // sub-codebooks) keeps the raw means — normalizing would distort the
-    // quantization cells
-    def normalize(v: Seq[Double]): Seq[Double] =
-      if (l2) v else {
-        val n = math.sqrt(v.map(x => x * x).sum)
-        if (n == 0) v else v.map(_ / n)
-      }
-    def assign(u: Column, cs: IndexedSeq[Seq[Double]]): Column =
-      if (l2) assignL2Expr(u, cs) else assignExpr(u, cs)
-    // the seed collect plus every Lloyd iteration re-reads this frame —
-    // persist it once (callers pass the BOUNDED training sample, ≤
-    // trainSampleRows rows even on a 100 TB corpus) instead of re-scanning
-    // + re-normalizing the source 1 + iters times. persistInput = false is
-    // the opt-out for the explicit train-on-everything path
-    // (trainSampleRows = Long.MaxValue), where caching a corpus-sized frame
-    // would cost more storage than the rescans it saves.
-    val cp = if (persistInput)
-      c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else c
-    try {
-    // deterministic seed: the nlist lowest-id unit vectors
-    var centroids: IndexedSeq[Seq[Double]] = cp.orderBy(col("id")).limit(nlist)
-      .select(col("__u")).collect().toIndexedSeq.map(_.getSeq[Double](0))
+  /** The `k` lowest-id vectors of an (__id, __v) frame — the deterministic
+    * seed of every Lloyd fit here except the ++ and ‖ inits. */
+  private def lowestIdSeeds(train: DataFrame, k: Int): IndexedSeq[Seq[Double]] =
+    train.orderBy(col("__id")).limit(k).select(col("__v")).collect()
+      .toIndexedSeq.map(_.getSeq[Double](0))
+
+  /** The one Lloyd loop: every IVF, PQ and k-means fit in this file runs
+    * it. `train` is a bounded, persisted (__id, __v) frame, plus a group key
+    * __g when `init` holds more than one group; group g trains its own
+    * centroids `init(g)`, so the m PQ subspaces share ONE aggregation job per
+    * round. Each of the `iters` rounds:
+    *  1. assigns every row with the caller's rule against its group's
+    *     centroids, folded into the plan as literals ([[assignExpr]],
+    *     [[assignL2Expr]] or [[kmeansPick]] — each pinned by its own DuckDB
+    *     twin);
+    *  2. takes each cell's mean as the id-sorted element-wise fold of its
+    *     members, divided once by the member count — the same bits at
+    *     every partitioning and in the twins (a `sum()` would merge
+    *     partials in task order);
+    *  3. keeps the previous centroid for an empty cell. With `renormalize`
+    *     the mean is projected onto the unit sphere (sequential square-sum,
+    *     one IEEE sqrt — sqrt(list_dot_product) in the twins), and a zero
+    *     mean keeps the previous centroid instead of turning into NaNs.
+    * Driver state is the centroid matrices; a cell's fold state is its
+    * member list, which is why the frame must be a bounded sample. */
+  private def lloyd(train: DataFrame, init: IndexedSeq[IndexedSeq[Seq[Double]]],
+      iters: Int, renormalize: Boolean)(
+      assign: (Column, IndexedSeq[Seq[Double]]) => Column)
+      : IndexedSeq[IndexedSeq[Seq[Double]]] = {
+    val sp = train.sparkSession
+    import sp.implicits._
+    val dim = init.flatten.headOption.fold(0)(_.size)
+    if (dim == 0) return init
+    val zeros = typedLit(Seq.fill(dim)(0.0d))
+    val g = if (init.size == 1) lit(0) else col("__g")
+    var cents = init
     for (_ <- 0 until iters) {
-      // per-cluster SUM per position plus member count: the true mean is
-      // sum/count — cosine mode may normalize the sum directly (same
-      // direction), but L2 mode MUST divide, otherwise centroid norms scale
-      // with cluster size and the −|c|²/2 assignment term collapses
-      // everything into whichever centroid stays small
-      val means = cp.withColumn("__cid", assign(col("__u"), centroids))
-        .select(col("__cid"), posexplode_outer(col("__u")).as(Seq("__p", "__x")))
-        .filter(col("__x").isNotNull) // outer: no inferred-filter re-eval (see TextOps)
-        .groupBy(col("__cid"), col("__p")).agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-        .groupBy(col("__cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(__p, __s))), e -> e.__s)").as("__sum"),
-          max(col("__n")).as("__cnt"))
-        .collect().map { r: Row =>
-          r.getInt(0) -> r.getSeq[Double](1).map(_ / r.getLong(2)) }.toMap
-      centroids = centroids.indices.map(i =>
-        means.get(i).map(normalize).getOrElse(centroids(i)))
+      val cell =
+        if (cents.size == 1) assign(col("__v"), cents(0))
+        else cents.indices.tail.foldLeft(
+            when(g === 0, assign(col("__v"), cents(0)))) { (w, i) =>
+          w.when(g === i, assign(col("__v"), cents(i)))
+        }
+      val means = train
+        .select(g.as("__g"), cell.as("__cl"), col("__id"), col("__v"))
+        .groupBy(col("__g"), col("__cl"))
+        .agg(count(lit(1)).as("__n"),
+          aggregate(sort_array(collect_list(struct(col("__id"), col("__v")))),
+            zeros,
+            (acc, el) => zip_with(acc, el.getField("__v"), (a, b) => a + b))
+            .as("__s"))
+        .select(col("__g"), col("__cl"),
+          transform(col("__s"), z => z / col("__n")).as("__c"))
+        .as[(Int, Int, Seq[Double])].collect()
+        .map { case (g0, cl, c) => (g0, cl) -> c }.toMap
+      cents = cents.indices.map(g0 => cents(g0).indices.map { i =>
+        val prev = cents(g0)(i)
+        means.get((g0, i)).fold(prev) { v =>
+          if (!renormalize) v
+          else {
+            val nrm = math.sqrt(v.foldLeft(0.0d)((a, x) => a + x * x))
+            if (nrm == 0) prev else v.map(_ / nrm)
+          }
+        }
+      })
     }
-    centroids
-    } finally if (persistInput) { cp.unpersist(false); () }
+    cents
   }
+
+  /** The coarse quantizer of [[ivfKnn]], [[ivfPqTrain]], s03 and
+    * `DedupOps.semanticDedup`: `nlist` unit centroids seeded with the
+    * lowest-id training vectors, [[lloyd]] under the max-dot rule with
+    * renormalization. `train` is a [[withTrainSample]] frame; the result
+    * is the same bits at every partitioning, so a model trained once can
+    * be stored and reused across sessions. */
+  private[graft] def trainCoarse(train: DataFrame, nlist: Int,
+      iters: Int): IndexedSeq[Seq[Double]] =
+    lloyd(train, IndexedSeq(lowestIdSeeds(train, nlist)), iters,
+      renormalize = true)(assignExpr).head
 
   /** @param trainSampleRows cap on the rows the Lloyd iterations touch: a
     *   deterministic md5-hash sample of the corpus trains the quantizer (the
@@ -435,9 +485,10 @@ object Similarity {
     *   density, and iterating a 100 TB corpus twice to place 16–65k
     *   centroids is pure waste). Assignment and search always use the FULL
     *   corpus, so recall semantics are unchanged — only centroid positions
-    *   (an approximation either way) derive from the sample. Pass
-    *   `Long.MaxValue` to train on everything (the spec's determinism
-    *   baseline). Hash-based, so the same rows train on every run/engine. */
+    *   (an approximation either way) derive from the sample. Hash-based, so
+    *   the same rows train on every run and engine; `Long.MaxValue` is
+    *   rejected (an unbounded sample would make [[lloyd]]'s per-cell fold
+    *   state corpus-sized). */
   def ivfKnn(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
       trainSampleRows: Long = 262144L,
@@ -448,8 +499,8 @@ object Similarity {
     // coarse model per corpus content (s03's memo) — a deployment does not
     // re-run Lloyd per query batch
     val centroids = knownCentroids.getOrElse(
-      trainCentroids(trainSample(c, trainSampleRows), nlist, iters,
-        persistInput = trainSampleRows != Long.MaxValue))
+      withTrainSample(corpus, idCol, vecCol, trainSampleRows)(
+        trainCoarse(_, nlist, iters)))
     val lists = c.withColumn("__cid", assignExpr(col("__u"), centroids))
     val q = unit(queries, "query_id")
     // top-nprobe centroid ids per query: sort (dot, cid) structs descending
@@ -514,151 +565,6 @@ object Similarity {
       iters = iters, trainSampleRows = trainSampleRows)
   }
 
-  /** Joint Lloyd training of the m per-subspace PQ codebooks over a
-    * (persisted) training sample `ct` of (id, __u) rows: ONE aggregation job
-    * per iteration keyed by (subspace, centroid, position) — bit-identical
-    * to training each subspace separately, at 1 + iters passes instead of
-    * m × (1 + iters). Seeds are the ksub lowest-id sample vectors sliced per
-    * subspace. Shared by [[pqKnn]] and [[ivfPqKnn]]. */
-  private[ext] def trainPqCodebooks(ct: DataFrame, m: Int, ksub: Int,
-      dsub: Int, iters: Int): IndexedSeq[IndexedSeq[Seq[Double]]] = {
-    def sub(u: Column, s: Int): Column = slice(u, s * dsub + 1, dsub)
-    var cbs: IndexedSeq[IndexedSeq[Seq[Double]]] = {
-      val seeds = ct.orderBy(col("id")).limit(ksub).select(col("__u"))
-        .collect().toIndexedSeq.map(_.getSeq[Double](0))
-      (0 until m).map(s => seeds.map(v => v.slice(s * dsub, (s + 1) * dsub)))
-    }
-    for (_ <- 0 until iters) {
-      val cids = array((0 until m).map(s =>
-        assignL2Expr(sub(col("__u"), s), cbs(s))): _*)
-      // driver result is m × ksub × dsub rows (the codebook size), never
-      // corpus-shaped; the __cids carrier is materialized by the Generate
-      // input so the assignment exprs evaluate once per row, not per dim
-      val rows = ct.withColumn("__cids", cids)
-        .select(col("__cids"), posexplode_outer(col("__u")).as(Seq("__p", "__x")))
-        .filter(col("__x").isNotNull) // outer: no inferred-filter re-eval (see TextOps)
-        .withColumn("__s", (col("__p") / dsub).cast("int"))
-        .groupBy(col("__s"),
-          element_at(col("__cids"), col("__s") + 1).as("__cid"),
-          (col("__p") % dsub).as("__sp"))
-        .agg(sum(col("__x")).as("__sum"), count(lit(1)).as("__n"))
-        .collect()
-      val bySub = rows.groupBy(r => (r.getInt(0), r.getInt(1)))
-      cbs = (0 until m).map { s =>
-        (0 until ksub).map { k0 =>
-          bySub.get((s, k0)).map { rs =>
-            val n = rs.head.getLong(4)
-            val arr = new Array[Double](dsub)
-            rs.foreach(r => arr(r.getInt(2)) = r.getDouble(3) / n)
-            arr.toSeq
-          }.getOrElse(cbs(s)(k0)) // empty cluster keeps its centroid
-        }
-      }
-    }
-    cbs
-  }
-
-  /** Bit-replayable twin of [[trainCentroids]] (cosine mode): identical
-    * seeds and assignment rule, but the per-cluster mean is the id-sorted
-    * element-wise fold of [[kmeansFit]] (lloydRounds' exact aggregate shape)
-    * instead of a task-order float sum, and the re-normalization is the
-    * same left-fold sum of squares both engines compute — so every centroid
-    * double is reproducible in DuckDB CTE staging (the d15 discipline
-    * applied to ANN training). Used by [[ivfPqTrainDet]] for the s21
-    * non-covering recall oracle; production trains with [[trainCentroids]]
-    * (faster merges, same geometry). `c` is a bounded (id, __u) frame. */
-  private[ext] def trainCentroidsDet(c: DataFrame, nlist: Int,
-      iters: Int): IndexedSeq[Seq[Double]] = {
-    val sp = c.sparkSession
-    import sp.implicits._
-    val dim = c.select(size(col("__u"))).head.getInt(0)
-    val zeros = typedLit(Seq.fill(dim)(0.0d))
-    var cents: IndexedSeq[Seq[Double]] = c.orderBy(col("id")).limit(nlist)
-      .select(col("__u")).as[Seq[Double]].collect().toIndexedSeq
-    for (_ <- 0 until iters) {
-      val means = c
-        .withColumn("__cl", assignExpr(col("__u"), cents))
-        .groupBy(col("__cl"))
-        .agg(count(lit(1)).as("__n"),
-          aggregate(sort_array(collect_list(struct(col("id"), col("__u")))),
-            zeros,
-            (acc, el) => zip_with(acc, el.getField("__u"), (a, b) => a + b))
-            .as("__s"))
-        .select(col("__cl"), transform(col("__s"), z => z / col("__n")).as("__c"))
-        .as[(Int, Seq[Double])].collect().toMap
-      cents = cents.indices.map { i =>
-        means.get(i).map { v =>
-          val nrm = math.sqrt(v.map(x => x * x).sum)
-          if (nrm == 0) cents(i) else v.map(_ / nrm)
-        }.getOrElse(cents(i))
-      }
-    }
-    cents
-  }
-
-  /** Bit-replayable twin of [[trainPqCodebooks]]: same seeds (the ksub
-    * lowest-id sample vectors sliced per subspace) and the same
-    * [[assignL2Expr]] rule, but per-(subspace, cell) means fold id-sorted.
-    * One job per subspace per iteration — fine for the bounded training
-    * sample this always receives; joint-keyed speed is production's
-    * concern, reproducibility is this twin's. */
-  private[ext] def trainPqCodebooksDet(ct: DataFrame, m: Int, ksub: Int,
-      dsub: Int, iters: Int): IndexedSeq[IndexedSeq[Seq[Double]]] = {
-    val sp = ct.sparkSession
-    import sp.implicits._
-    def sub(u: Column, s: Int): Column = slice(u, s * dsub + 1, dsub)
-    val zeros = typedLit(Seq.fill(dsub)(0.0d))
-    var cbs: IndexedSeq[IndexedSeq[Seq[Double]]] = {
-      val seeds = ct.orderBy(col("id")).limit(ksub).select(col("__u"))
-        .as[Seq[Double]].collect().toIndexedSeq
-      (0 until m).map(s => seeds.map(v => v.slice(s * dsub, (s + 1) * dsub)))
-    }
-    for (_ <- 0 until iters) {
-      cbs = (0 until m).map { s =>
-        val means = ct
-          .select(col("id"), sub(col("__u"), s).as("__sub"))
-          .withColumn("__cl", assignL2Expr(col("__sub"), cbs(s)))
-          .groupBy(col("__cl"))
-          .agg(count(lit(1)).as("__n"),
-            aggregate(sort_array(collect_list(struct(col("id"), col("__sub")))),
-              zeros,
-              (acc, el) => zip_with(acc, el.getField("__sub"), (a, b) => a + b))
-              .as("__s"))
-          .select(col("__cl"), transform(col("__s"), z => z / col("__n")).as("__c"))
-          .as[(Int, Seq[Double])].collect().toMap
-        (0 until ksub).map(k0 => means.getOrElse(k0, cbs(s)(k0)))
-      }
-    }
-    cbs
-  }
-
-  /** Deterministic-training twin of [[ivfPqTrain]] (by_residual = false):
-    * the SAME model shape served by the SAME [[ivfPqEncode]]/[[ivfPqSearch]]
-    * steady-state path, but every centroid/codebook double is bit-replayable
-    * cross-engine ([[trainCentroidsDet]]/[[trainPqCodebooksDet]]) — which is
-    * what lets the s21 recall row oracle-check a NON-covering production
-    * configuration, where results depend on the trained bits (the covering
-    * s08 witness is training-insensitive by construction). */
-  def ivfPqTrainDet(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, m: Int = 8, ksub: Int = 16, iters: Int = 2,
-      trainSampleRows: Long = 262144L, byResidual: Boolean = false): IvfPqModel = {
-    val c = unitVecs(corpus, idCol, vecCol, "id")
-    val dim = c.select(size(col("__u"))).head.getInt(0)
-    require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val ct = trainSample(c, trainSampleRows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cens = trainCentroidsDet(ct, nlist, iters)
-      // residual mode mirrors ivfPqTrain: sub-codebooks train on
-      // r = u − centroid(list(u)) — zip_with subtraction against the
-      // det-trained (hence replayable) coarse centroids
-      val cbs = trainPqCodebooksDet(
-        if (byResidual) ct.select(col("id"), residualOf(col("__u"), cens).as("__u"))
-        else ct, m, ksub, dim / m, iters)
-      IvfPqModel(cens, PqModel(m, dim / m, cbs), byResidual)
-    } finally { ct.unpersist(false); () }
-  }
-
   // ------------------------------------------------------------- PQ ANN
   /** Driver-side product-quantization model: `m` per-subspace codebooks of
     * `ksub` sub-centroids each (`dsub` doubles per sub-centroid). Tiny —
@@ -697,30 +603,33 @@ object Similarity {
   /** Train the `m` per-subspace PQ codebooks (L2 mode — raw means, not
     * re-normalized) on the deterministic md5 sample of the corpus (see
     * [[ivfKnn]]'s trainSampleRows note); the corpus itself is never
-    * iterated. All m subspaces train JOINTLY: one aggregation job per
-    * Lloyd iteration keyed by (subspace, centroid, position) instead of m
-    * independent trainings — same seeds, same assignment formula, same
-    * means (bit-for-bit the per-subspace result), but 1 + iters passes
-    * over the persisted sample rather than m × (1 + iters) separate
-    * jobs. */
+    * iterated. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 16, iters: Int = 2,
-      trainSampleRows: Long = 262144L): PqModel = {
-    val c = unitVecs(corpus, idCol, vecCol, "id")
-    val dim = c.select(size(col("__u"))).head.getInt(0)
-    require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
+      trainSampleRows: Long = 262144L): PqModel =
+    withTrainSample(corpus, idCol, vecCol, trainSampleRows)(
+      trainCodebooks(_, m, ksub, iters))
+
+  /** The m sub-codebooks of [[pqTrain]] and [[ivfPqTrain]] over an
+    * (__id, __v) training frame (unit or residual vectors): every row
+    * explodes into its m subspace slices, each subspace is one [[lloyd]]
+    * group seeded with the slices of the ksub lowest-id rows and assigned
+    * by [[assignL2Expr]], so all m train in ONE aggregation job per round.
+    * No renormalization — normalizing would distort the quantization
+    * cells. */
+  private def trainCodebooks(train: DataFrame, m: Int, ksub: Int,
+      iters: Int): PqModel = {
+    val seeds = lowestIdSeeds(train, ksub)
+    val dim = seeds.headOption.fold(0)(_.size)
+    require(dim > 0 && dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
     val dsub = dim / m
-    // persist only the BOUNDED sample; the explicit train-on-everything
-    // opt-in (trainSampleRows = Long.MaxValue) re-scans lazily instead of
-    // pinning a corpus-sized frame to executor storage
-    val doPersist = trainSampleRows != Long.MaxValue
-    val ct0 = trainSample(c, trainSampleRows)
-    val ct = if (doPersist)
-      ct0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else ct0
-    val codebooks: IndexedSeq[IndexedSeq[Seq[Double]]] =
-      try trainPqCodebooks(ct, m, ksub, dsub, iters)
-      finally if (doPersist) { ct.unpersist(false); () }
-    PqModel(m, dsub, codebooks)
+    val bySub = train
+      .select(col("__id"), posexplode_outer(array((0 until m).map(s =>
+        slice(col("__v"), s * dsub + 1, dsub)): _*)).as(Seq("__g", "__v")))
+      .filter(col("__v").isNotNull) // outer: no inferred-filter re-eval (see TextOps)
+    PqModel(m, dsub, lloyd(bySub,
+      (0 until m).map(s => seeds.map(_.slice(s * dsub, (s + 1) * dsub))), iters,
+      renormalize = false)(assignL2Expr))
   }
 
   /** Encode the corpus against a trained model: (id, __code) with `m` small
@@ -892,28 +801,20 @@ object Similarity {
     * mode (FAISS by_residual=true): sub-codebooks train and encode on
     * r = u − centroid(list(u)), so each code spends its ksub cells on the
     * WITHIN-list spread instead of the whole space — finer quantization
-    * from the same m×ksub budget. */
+    * from the same m×ksub budget. Every double is the same at every
+    * partitioning and replays in DuckDB (the s21/s22 oracle rows), so a
+    * model trained once can be stored ([[saveIvfPqModel]]) and reused. */
   def ivfPqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 16, iters: Int = 2,
-      trainSampleRows: Long = 262144L, byResidual: Boolean = false): IvfPqModel = {
-    val c = unitVecs(corpus, idCol, vecCol, "id")
-    val dim = c.select(size(col("__u"))).head.getInt(0)
-    require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val dsub = dim / m
-    val doPersist = trainSampleRows != Long.MaxValue
-    val ct0 = trainSample(c, trainSampleRows)
-    val ct = if (doPersist)
-      ct0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else ct0
-    val (centroids, codebooks) = try {
-      val cens = trainCentroids(ct, nlist, iters, persistInput = false)
-      val cbs = trainPqCodebooks(
+      trainSampleRows: Long = 262144L, byResidual: Boolean = false): IvfPqModel =
+    withTrainSample(corpus, idCol, vecCol, trainSampleRows) { ct =>
+      val cens = trainCoarse(ct, nlist, iters)
+      val pq = trainCodebooks(
         if (byResidual)
-          ct.select(col("id"), residualOf(col("__u"), cens).as("__u"))
-        else ct, m, ksub, dsub, iters)
-      (cens, cbs)
-    } finally if (doPersist) { ct.unpersist(false); () }
-    IvfPqModel(centroids, PqModel(m, dsub, codebooks), byResidual)
-  }
+          ct.select(col("__id"), residualOf(col("__v"), cens).as("__v"))
+        else ct, m, ksub, iters)
+      IvfPqModel(cens, pq, byResidual)
+    }
 
   /** Encode the corpus against a trained IVF-PQ model: (id, __cid, __code)
     * — the stored table of an IVF-PQ deployment (list id + m codes per
@@ -1020,9 +921,10 @@ object Similarity {
       (a, b) => a - b)
   }
 
-  /** Per-JVM trained-model memo for the s05/s08/s09 oracle rows: training
-    * is fully deterministic (md5 sample, lowest-id seeds, fixed fold
-    * order), so the cached model is bit-identical to a fresh fit — the
+  /** Per-JVM trained-model memo for the s03/s05/s08/s09/s21/s22 oracle
+    * rows: training is fully deterministic (md5 sample, lowest-id seeds,
+    * the id-sorted [[lloyd]] fold — the same bits at every partitioning),
+    * so the cached model is bit-identical to a fresh fit — the
     * rows' RESULTS are unchanged whether the memo hits or misses. What
     * changes is what Bench measures: the min-of-3 sweeps see the
     * steady-state SEARCH (the thing a deployment runs per query batch
@@ -1048,10 +950,11 @@ object Similarity {
   /** MD5 over the trained model's raw IEEE-754 bits (coarse centroids,
     * sub-codebooks, residual flag) — the content address for persisted
     * code tables. Codes are a pure projection of (model, data), so a code
-    * table is only reusable under the EXACT model that produced it;
-    * keying the store on the data fingerprint alone served codes from a
-    * bit-different earlier fit when float training varied (round-13
-    * ADVICE #1). */
+    * table is only reusable under the EXACT model that produced it. Every
+    * trainer here gives the same bits for the same data and parameters,
+    * so the model key is a safety check: it catches a table written under
+    * other training parameters or by a changed trainer, which the data
+    * fingerprint alone would serve as stale codes (round-13 ADVICE #1). */
   private[graft] def modelFingerprint(model: AnyRef): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val buf = java.nio.ByteBuffer.allocate(8)
@@ -1082,9 +985,10 @@ object Similarity {
     * state does against its written index. Codes are a pure projection of
     * (model, data), so the store key folds in BOTH fingerprints: the data
     * stat+footer hash ([[Tables.tableFingerprint]]) AND the model's raw
-    * IEEE-754 bits ([[modelFingerprint]]) — a later JVM whose float
-    * training came out bit-different misses the cache and re-encodes
-    * instead of serving stale codes (round-13/14 ADVICE #1). The write is
+    * IEEE-754 bits ([[modelFingerprint]]) — a table written under a
+    * different model (other parameters, or a changed trainer) misses the
+    * cache and re-encodes instead of serving stale codes (round-13/14
+    * ADVICE #1). The write is
     * build-to-temp-sibling + atomic rename, so a concurrent gate/bench
     * JVM never reads a half-written table: it either sees the completed
     * directory or builds its own temp and loses the rename race benignly
@@ -1133,6 +1037,27 @@ object Similarity {
     s.read.parquet(path.getPath)
   }
 
+  /** The fixed 500-vector witness slice of s05/s08/s09/s21/s22: every SF
+    * has ≥ 500 embeddings with ids dense from 0, so the slice — and every
+    * oracle answer over it — is the same at every scale factor.
+    *
+    * Each of those rows consumes the slice from MANY plan subtrees
+    * (training, encode, probes, LUTs, rerank), so it is localCheckpointed:
+    * the big table is scanned ONCE per call instead of once per consumer
+    * (at sf1.0 the un-checkpointed plan re-read the 10× table ~6 times per
+    * run). Losing lineage is acceptable at this bound: the slice is
+    * 500 × 64 floats (~128 KB) of executor block storage, and an executor
+    * lost while holding it fails the row instead of recomputing it — a
+    * retry re-reads 500 rows. `persist(MEMORY_AND_DISK)` would keep
+    * lineage (a lost block recomputes), but it registers the frame with
+    * the session's cache manager until an explicit `unpersist`, which a
+    * row that returns a lazy frame has no place to call; the checkpointed
+    * blocks are freed by the context cleaner once the frame is
+    * unreachable. */
+  private def witnessSlice(s: SparkSession, dir: String): DataFrame =
+    Tables.loadSpread(s, dir, "embeddings")
+      .filter(col("vec_id") < 500).localCheckpoint(true)
+
   // ---------------------------------------------------------------- s08
   /** IVF-PQ in the covering configuration — the oracle row for the
     * [[ivfPqTrain]]/[[ivfPqEncode]]/[[ivfPqSearch]] seam: nprobe = nlist
@@ -1142,23 +1067,23 @@ object Similarity {
     * slice as s05 (and the same DuckDB brute-force answer). DedupOpsSpec
     * proves the ≡-brute property in-engine plus the approximate mode's
     * recall floor; this row proves it cross-engine. */
-  val s08IvfPq: Q = (s, dir) => {
+  val s08IvfPq: Q = (s, dir) =>
+    ivfPqCoveringRow(s, dir, "s08", byResidual = false)
+
+  /** The s08/s09 body: the covering IVF-PQ search (nprobe = nlist,
+    * refine × k ≥ |slice|) over the witness slice. */
+  private def ivfPqCoveringRow(s: SparkSession, dir: String, tag: String,
+      byResidual: Boolean): DataFrame = {
     import s.implicits._
-    // the fixed witness slice is consumed by MANY plan subtrees (encode,
-    // probes, LUTs, rerank) — localCheckpoint it so the big table is
-    // scanned ONCE per call instead of once per consumer (slice-sized:
-    // 500 x 64 floats; the bm25 materializeProbe discipline). At sf1.0
-    // the un-checkpointed plan re-read the 10x table ~6 times per run.
-    val e = Tables.loadSpread(s, dir, "embeddings")
-      .filter($"vec_id" < 500).localCheckpoint(true)
+    val e = witnessSlice(s, dir)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel("s08", dir)(
+    val model = cachedModel(tag, dir)(
       ivfPqTrain(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
-        iters = 2))
+        iters = 2, byResidual = byResidual))
     // serve the PERSISTED list-sorted code table (built once per
     // dir-content); no pruneLists: the covering nprobe = nlist probes
     // every list, so the In push would be pure probe-job overhead
-    val codes = cachedCodes(s, dir, "s08", model, listSorted = true)(
+    val codes = cachedCodes(s, dir, tag, model, listSorted = true)(
       ivfPqEncode(model, e, "vec_id", "embedding"))
     ivfPqSearch(model, codes, e, q,
         "vec_id", "embedding", k = 5, nprobe = 8, refine = 200)
@@ -1173,26 +1098,8 @@ object Similarity {
     * brute-force oracle — proving its probe/encode/heap plumbing loses no
     * candidate. The residual-specific quantization QUALITY claim (finer
     * cells from the same budget) is DedupOpsSpec's recall comparison. */
-  val s09IvfPqResidual: Q = (s, dir) => {
-    import s.implicits._
-    // the fixed witness slice is consumed by MANY plan subtrees (encode,
-    // probes, LUTs, rerank) — localCheckpoint it so the big table is
-    // scanned ONCE per call instead of once per consumer (slice-sized:
-    // 500 x 64 floats; the bm25 materializeProbe discipline). At sf1.0
-    // the un-checkpointed plan re-read the 10x table ~6 times per run.
-    val e = Tables.loadSpread(s, dir, "embeddings")
-      .filter($"vec_id" < 500).localCheckpoint(true)
-    val q = e.filter($"vec_id" < 20)
-    val model = cachedModel("s09", dir)(
-      ivfPqTrain(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
-        iters = 2, byResidual = true))
-    val codes = cachedCodes(s, dir, "s09", model, listSorted = true)(
-      ivfPqEncode(model, e, "vec_id", "embedding"))
-    ivfPqSearch(model, codes, e, q,
-        "vec_id", "embedding", k = 5, nprobe = 8, refine = 200)
-      .withColumn("cosine", round($"cosine", 4))
-      .orderBy($"query_id", $"rank")
-  }
+  val s09IvfPqResidual: Q = (s, dir) =>
+    ivfPqCoveringRow(s, dir, "s09", byResidual = true)
 
   // ---------------------------------------------------------------- s03
   /** IVF ANN at full probe (nprobe = nlist) — the oracle row for [[ivfKnn]]:
@@ -1206,14 +1113,14 @@ object Similarity {
     val e = Tables.loadSpread(s, dir, "embeddings")
     val q = e.filter($"vec_id" < 20)
     // coarse model memoized per dir-content (round 20, the s05/s08/s09
-    // rule). Doubly safe here: trainCentroids is deterministic for a fixed
+    // rule). Doubly safe here: trainCoarse gives the same bits at every
     // partitioning, AND at full probe the result does not depend on the
     // centroids at all — every inverted list is probed, so the candidate
     // set is the whole corpus whatever the assignment (the property this
     // row exists to prove). Bench times the one-time fit in `train`.
     val cents = cachedModel("s03", dir)(
-      trainCentroids(trainSample(unitVecs(e, "vec_id", "embedding", "id"),
-        262144L), nlist = 8, iters = 2))
+      withTrainSample(e, "vec_id", "embedding", 262144L)(
+        trainCoarse(_, nlist = 8, iters = 2)))
     ivfKnn(e, q, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 8,
         iters = 2, knownCentroids = Some(cents))
       .withColumn("cosine", round($"cosine", 4))
@@ -1230,21 +1137,13 @@ object Similarity {
     * cosine descending, lower-id tie-break. */
   val s05PqRerank: Q = (s, dir) => {
     import s.implicits._
-    // fixed 500-vector corpus slice (every SF has ≥ 500 embeddings, ids are
-    // dense from 0) so refine × k = 1000 ≥ |slice| — the covering-rerank
-    // invariant — holds at EVERY scale factor. A fixed refine over the whole
-    // table held only up to sf0.01 and silently turned approximate (and
-    // oracle-mismatching) on bigger directories; scaling refine WITH the
-    // table made the witness cost brute-force × a corpus-sized rerank heap
-    // (60 s at sf1.0). The slice keeps the oracle exact and SF-stable; the
+    // refine × k = 1000 ≥ |slice| — the covering-rerank invariant — holds
+    // at EVERY scale factor. A fixed refine over the whole table held only
+    // up to sf0.01 and silently turned approximate (and oracle-mismatching)
+    // on bigger directories; scaling refine WITH the table made the witness
+    // cost brute-force × a corpus-sized rerank heap (60 s at sf1.0). The
     // at-scale exact-mode bench signal is s03's full-probe job.
-    // the fixed witness slice is consumed by MANY plan subtrees (encode,
-    // probes, LUTs, rerank) — localCheckpoint it so the big table is
-    // scanned ONCE per call instead of once per consumer (slice-sized:
-    // 500 x 64 floats; the bm25 materializeProbe discipline). At sf1.0
-    // the un-checkpointed plan re-read the 10x table ~6 times per run.
-    val e = Tables.loadSpread(s, dir, "embeddings")
-      .filter($"vec_id" < 500).localCheckpoint(true)
+    val e = witnessSlice(s, dir)
     val q = e.filter($"vec_id" < 20)
     val model = cachedModel("s05", dir)(
       pqTrain(e, "vec_id", "embedding", m = 8, ksub = 16, iters = 2))
@@ -1562,57 +1461,43 @@ object Similarity {
     * against the proven brute-force ranking (round-12 verdict #4: s12 only
     * measured the s02 LSH; the index a 100 TB deployment actually serves is
     * ivfPqSearch, whose recall under (nprobe, refine) was only
-    * spec-floor-tested). The model trains with [[ivfPqTrainDet]] (id-sorted
-    * folds) so every centroid/codebook double — and therefore every probe,
-    * ADC score, tie, and returned id — replays in DuckDB: the oracle stages
-    * coarse Lloyd, per-subspace codebook Lloyd, encode, probe, LUT-fold ADC
-    * top-10, exact rerank, then the s12 recall join. Search runs the SAME
-    * [[ivfPqEncode]]/[[ivfPqSearch]] code production runs; only training
-    * swaps in the replayable twin (training bits are inputs here — the
-    * covering s08 witness proves the search plumbing loses no candidate,
-    * this row proves the recall MEASUREMENT machinery end-to-end). */
-  val s21IvfPqRecall: Q = (s, dir) => {
-    import s.implicits._
-    val e = Tables.loadSpread(s, dir, "embeddings")
-      .filter($"vec_id" < 500).localCheckpoint(true)
-    val q = e.filter($"vec_id" < 20)
-    val model = cachedModel("s21", dir)(
-      ivfPqTrainDet(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
-        iters = 2))
-    val approx = ivfPqSearch(model, ivfPqEncode(model, e, "vec_id", "embedding"),
-      e, q, "vec_id", "embedding", k = 5, nprobe = 2, refine = 2)
-    val u = unitVecs(e, "vec_id", "embedding", "id")
-    val qu = unitVecs(q, "vec_id", "embedding", "query_id")
-      .select($"query_id", $"__u".as("__qu"))
-    val wT = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"id")
-    val truth = broadcast(qu).join(u, $"query_id" =!= $"id")
-      .withColumn("cosine", graft.functions.VectorExprs.dot($"__qu", $"__u"))
-      .withColumn("rk", row_number().over(wT).cast("long"))
-      .filter($"rk" <= 5).select($"query_id", $"id")
-    recallAtK(truth, approx.select($"query_id", $"id"), "query_id", "id", k = 5)
-      .orderBy($"query_id")
-  }
+    * spec-floor-tested). The row runs exactly what production runs:
+    * [[ivfPqTrain]], [[ivfPqEncode]] and [[ivfPqSearch]]. Training is the
+    * id-sorted [[lloyd]] fold, so every centroid/codebook double — and
+    * therefore every probe, ADC score, tie, and returned id — replays in
+    * DuckDB: the oracle stages coarse Lloyd, per-subspace codebook Lloyd,
+    * encode, probe, LUT-fold ADC top-10, exact rerank, then the s12 recall
+    * join (the covering s08 witness proves the search plumbing loses no
+    * candidate, this row proves the recall MEASUREMENT machinery
+    * end-to-end). */
+  val s21IvfPqRecall: Q = (s, dir) =>
+    ivfPqRecallRow(s, dir, "s21", byResidual = false)
 
   // ---------------------------------------------------------------- s22
   /** The s21 recall measurement for the RESIDUAL IVF-PQ path
     * (by_residual = true — the configuration a deployment prefers: finer
     * cells from the same m×ksub budget): same non-covering shape (nprobe 2
-    * of 8, refine·k 10), same deterministic-training discipline, but the
-    * sub-codebooks train and encode on r = u − centroid(list(u)) and the
-    * ADC adds the coarse dot as its base term. The DuckDB twin extends the
-    * s21 staging with the residual projection (element-wise subtraction
-    * against the staged coarse centroids) and the base-plus-LUT-fold score.
-    * Closes the round-13 NEXT #3 gap: s09 proved the residual plumbing
-    * loses no candidate under a covering witness; this row oracle-checks
-    * its recall at a production config. */
-  val s22IvfPqResidualRecall: Q = (s, dir) => {
+    * of 8, refine·k 10), same training, but the sub-codebooks train and
+    * encode on r = u − centroid(list(u)) and the ADC adds the coarse dot as
+    * its base term. The DuckDB twin extends the s21 staging with the
+    * residual projection (element-wise subtraction against the staged
+    * coarse centroids) and the base-plus-LUT-fold score. Closes the
+    * round-13 NEXT #3 gap: s09 proved the residual plumbing loses no
+    * candidate under a covering witness; this row oracle-checks its recall
+    * at a production config. */
+  val s22IvfPqResidualRecall: Q = (s, dir) =>
+    ivfPqRecallRow(s, dir, "s22", byResidual = true)
+
+  /** The s21/s22 body: per-query recall@5 of the non-covering IVF-PQ
+    * search over the witness slice against the brute-force top-5. */
+  private def ivfPqRecallRow(s: SparkSession, dir: String, tag: String,
+      byResidual: Boolean): DataFrame = {
     import s.implicits._
-    val e = Tables.loadSpread(s, dir, "embeddings")
-      .filter($"vec_id" < 500).localCheckpoint(true)
+    val e = witnessSlice(s, dir)
     val q = e.filter($"vec_id" < 20)
-    val model = cachedModel("s22", dir)(
-      ivfPqTrainDet(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
-        iters = 2, byResidual = true))
+    val model = cachedModel(tag, dir)(
+      ivfPqTrain(e, "vec_id", "embedding", nlist = 8, m = 8, ksub = 16,
+        iters = 2, byResidual = byResidual))
     val approx = ivfPqSearch(model, ivfPqEncode(model, e, "vec_id", "embedding"),
       e, q, "vec_id", "embedding", k = 5, nprobe = 2, refine = 2)
     val u = unitVecs(e, "vec_id", "embedding", "id")
@@ -1856,7 +1741,7 @@ object Similarity {
     * the corpus), the mean and every matrix-vector fold run sequentially
     * in id order, the init is the md5-derived pseudo-random direction
     * ((h60("pi:<d>") % 2001 − 1000)/1000 — no transcendentals), and a
-    * zero-norm iterate keeps the previous vector (the lloydRounds guard).
+    * zero-norm iterate keeps the previous vector (the [[lloyd]] guard).
     * Every double therefore replays bit-exactly in the DuckDB twin's
     * staged CTEs (s30 oracle row).
     *
@@ -2666,62 +2551,24 @@ object Similarity {
     * join, linear scan at 100 TB. Returns the centroids for [[kmeansAssign]].
     */
   def kmeansFit(train: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): Seq[Array[Double]] = {
-    val sp = train.sparkSession
-    import sp.implicits._
-    val e = train.select(col(idCol).cast("long").as("__id"),
-      asDouble(col(vecCol)).as("__v")).persist()
-    try {
-      val cents: Seq[Array[Double]] = e.orderBy(col("__id")).limit(k)
-        .select(col("__v")).as[Seq[Double]].collect().map(_.toArray).toSeq
-      lloydRounds(e, cents, iters)
-    } finally e.unpersist(false)
-  }
+      iters: Int): Seq[Array[Double]] =
+    withPersisted(kmeansFrame(train, idCol, vecCol))(e =>
+      kmeansLloyd(e, lowestIdSeeds(e, k), iters))
 
-  /** The shared Lloyd loop of [[kmeansFit]]/[[kmeansFitPp]]/
-    * [[kmeansFitSpherical]]: `iters` rounds of plan-literal argmin
-    * assignment + the id-sorted element-wise fold mean, empty clusters
-    * keeping their previous centroid. `e` must be the persisted
-    * (__id, __v) training frame. With `renormalize` each new centroid is
-    * divided by its L2 norm on the driver (k×dim state; the sequential
-    * square-sum + IEEE sqrt replays as sqrt(list_dot_product) in the
-    * DuckDB twin) — the spherical-k-means mean-then-project step. */
-  private def lloydRounds(e: DataFrame, init: Seq[Array[Double]],
-      iters: Int, renormalize: Boolean = false): Seq[Array[Double]] = {
-    val sp = e.sparkSession
-    import sp.implicits._
-    val dim = e.select(size(col("__v"))).as[Int].head()
-    val zeros = typedLit(Seq.fill(dim)(0.0d))
-    var cents = init
-    for (_ <- 0 until iters) {
-      val means = e
-        .withColumn("__cl", kmeansPick(cents, col("__v")).getField("c"))
-        .groupBy(col("__cl"))
-        .agg(count(lit(1)).as("__n"),
-          aggregate(sort_array(collect_list(struct(col("__id"), col("__v")))),
-            zeros,
-            (acc, el) => zip_with(acc, el.getField("__v"), (a, b) => a + b))
-            .as("__s"))
-        .select(col("__cl"),
-          transform(col("__s"), z => z / col("__n")).as("__c"))
-        .as[(Int, Seq[Double])].collect().toMap
-      cents = cents.indices.map(i =>
-        means.get(i).map { m =>
-          val arr = m.toArray
-          if (!renormalize) arr
-          else {
-            // sequential square-sum — the same left-to-right association as
-            // dot(v, v), so the twin's sqrt(list_dot_product(mv, mv)) bits it
-            val nrm = math.sqrt(arr.foldLeft(0.0d)((a, x) => a + x * x))
-            // a zero-vector member mean has no unit projection: keep the
-            // previous centroid (trainCentroids' guard, line ~336) instead
-            // of poisoning every later assignment with NaNs
-            if (nrm == 0) cents(i) else arr.map(_ / nrm)
-          }
-        }.getOrElse(cents(i)))
-    }
-    cents
-  }
+  /** The k-means family's (__id, __v) training frame: long ids, double
+    * vectors. */
+  private def kmeansFrame(train: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    train.select(col(idCol).cast("long").as("__id"),
+      asDouble(col(vecCol)).as("__v"))
+
+  /** The rounds of [[kmeansFit]]/[[kmeansFitPp]]/[[kmeansFitSpherical]]/
+    * [[kmeansFitParallelRefined]]: one-group [[lloyd]] under the
+    * [[kmeansPick]] d2-argmin rule, over a persisted [[kmeansFrame]]. */
+  private def kmeansLloyd(e: DataFrame, init: Seq[Seq[Double]], iters: Int,
+      renormalize: Boolean = false): Seq[Array[Double]] =
+    lloyd(e, IndexedSeq(init.toIndexedSeq), iters, renormalize)((v, cs) =>
+      kmeansPick(cs.map(_.toArray), v).getField("c")).head.map(_.toArray)
 
   /** Spherical k-means — the embedding-native Lloyd variant: inputs are
     * L2-normalized once, assignment is the same fixed-shape d2 argmin
@@ -2739,18 +2586,10 @@ object Similarity {
     * [[kmeansFit]]: bounded training frame, k×dim driver state,
     * shuffle-free [[kmeansAssign]] projection. */
   def kmeansFitSpherical(train: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): Seq[Array[Double]] = {
-    val sp = train.sparkSession
-    import sp.implicits._
-    val e = unitVecs(train, idCol, vecCol, "__id")
-      .select(col("__id").cast("long").as("__id"), col("__u").as("__v"))
-      .persist()
-    try {
-      val cents: Seq[Array[Double]] = e.orderBy(col("__id")).limit(k)
-        .select(col("__v")).as[Seq[Double]].collect().map(_.toArray).toSeq
-      lloydRounds(e, cents, iters, renormalize = true)
-    } finally e.unpersist(false)
-  }
+      k: Int, iters: Int): Seq[Array[Double]] =
+    withPersisted(unitVecs(train, idCol, vecCol, "__id")
+        .select(col("__id").cast("long").as("__id"), col("__u").as("__v")))(e =>
+      kmeansLloyd(e, lowestIdSeeds(e, k), iters, renormalize = true))
 
   /** k-means++ deterministic init + Lloyd — the [[kmeansFit]] upgrade for
     * corpora where the k lowest-id vectors happen to sit in one region
@@ -2774,9 +2613,7 @@ object Similarity {
       iters: Int): Seq[Array[Double]] = {
     val sp = train.sparkSession
     import sp.implicits._
-    val e = train.select(col(idCol).cast("long").as("__id"),
-      asDouble(col(vecCol)).as("__v")).persist()
-    try {
+    withPersisted(kmeansFrame(train, idCol, vecCol)) { e =>
       var cents: Seq[Array[Double]] = Seq(e.orderBy(col("__id")).limit(1)
         .select(col("__v")).as[Seq[Double]].head().toArray)
       for (j <- 1 until k) {
@@ -2788,8 +2625,8 @@ object Similarity {
           .select(col("__v")).as[Seq[Double]].head().toArray
         cents = cents :+ next
       }
-      lloydRounds(e, cents, iters)
-    } finally e.unpersist(false)
+      kmeansLloyd(e, cents.map(_.toSeq), iters)
+    }
   }
 
   /** Greedy k-center picks — farthest-point traversal (Gonzalez, "Clustering
@@ -2816,9 +2653,7 @@ object Similarity {
     require(k >= 1, s"k >= 1, got $k")
     val sp = df.sparkSession
     import sp.implicits._
-    val e = df.select(col(idCol).cast("long").as("__id"),
-      asDouble(col(vecCol)).as("__v")).persist()
-    try {
+    withPersisted(kmeansFrame(df, idCol, vecCol)) { e =>
       val seed = e.orderBy(col("__id")).limit(1)
         .select(col("__id"), col("__v")).as[(Long, Seq[Double])].collect()
       require(seed.nonEmpty, "kCenterPicks: input frame is empty - nothing to pick")
@@ -2835,7 +2670,7 @@ object Similarity {
         else picks = picks :+ ((next._1, next._2.toArray))
       }
       picks
-    } finally { e.unpersist(false); () }
+    }
   }
 
   // ---------------------------------------------------------------- s35
@@ -2957,14 +2792,12 @@ object Similarity {
       weightCol: String, k: Int, iters: Int): Seq[Array[Double]] = {
     val sp = train.sparkSession
     import sp.implicits._
-    val e = train.select(col(idCol).cast("long").as("__id"),
-      asDouble(col(vecCol)).as("__v"),
-      col(weightCol).cast("double").as("__w")).persist()
-    try {
+    withPersisted(train.select(col(idCol).cast("long").as("__id"),
+        asDouble(col(vecCol)).as("__v"),
+        col(weightCol).cast("double").as("__w"))) { e =>
       val dim = e.select(size(col("__v"))).as[Int].head()
       val zeros = typedLit(Seq.fill(dim)(0.0d))
-      var cents: Seq[Array[Double]] = e.orderBy(col("__id")).limit(k)
-        .select(col("__v")).as[Seq[Double]].collect().map(_.toArray).toSeq
+      var cents: Seq[Array[Double]] = lowestIdSeeds(e, k).map(_.toArray)
       for (_ <- 0 until iters) {
         val means = e
           .withColumn("__cl", kmeansPick(cents, col("__v")).getField("c"))
@@ -2984,7 +2817,7 @@ object Similarity {
           means.get(i).map(_.toArray).getOrElse(cents(i)))
       }
       cents
-    } finally e.unpersist(false)
+    }
   }
 
   /** [[kmeansFitWeighted]] as an oracle row — the s15 configuration with
@@ -3011,7 +2844,7 @@ object Similarity {
     * number of training points nearest to it (one aggregation pass), and
     * reduce the ≤ rounds·l+1 weighted candidates to k centers with
     * [[kmeansFitWeighted]] — a tiny frame, so the reduction costs nothing.
-    * Returns the k centers; run [[lloydRounds]]-style refinement via
+    * Returns the k centers; run [[lloyd]] refinement via
     * [[kmeansFit]]-family callers or use them directly for
     * [[kmeansAssign]].
     *
@@ -3024,9 +2857,7 @@ object Similarity {
     require(rounds * l + 1 >= k, s"rounds*l+1 must reach k, got $rounds*$l vs $k")
     val sp = train.sparkSession
     import sp.implicits._
-    val e = train.select(col(idCol).cast("long").as("__id"),
-      asDouble(col(vecCol)).as("__v")).persist()
-    try {
+    withPersisted(kmeansFrame(train, idCol, vecCol)) { e =>
       val seed = e.orderBy(col("__id")).limit(1)
         .select(col("__id"), col("__v")).as[(Long, Seq[Double])].head()
       var cands: Seq[(Long, Array[Double])] = Seq((seed._1, seed._2.toArray))
@@ -3066,7 +2897,7 @@ object Similarity {
         "(rounds, l, k); raise rounds*l or lower k")
       val candDf = kept.toDF("__cid", "__cv", "__cw")
       kmeansFitWeighted(candDf, "__cid", "__cv", "__cw", k, candIters)
-    } finally e.unpersist(false)
+    }
   }
 
   /** s19 oracle row — the s15 configuration trained by [[kmeansFitParallel]]
@@ -3084,7 +2915,7 @@ object Similarity {
   // ---------------------------------------------------------------- s20
   /** The complete production clustering recipe: [[kmeansFitParallel]]'s
     * O(rounds)-pass init, then `refineIters` full Lloyd rounds over the
-    * training frame ([[lloydRounds]] — argmin assignment + id-sorted fold
+    * training frame ([[lloyd]] — argmin assignment + id-sorted fold
     * means). This is what a 100 TB deployment actually runs: ‖-init on the
     * sampled frame, a couple of refinement sweeps, then [[kmeansAssign]]'s
     * shuffle-free projection over the corpus. */
@@ -3092,9 +2923,8 @@ object Similarity {
       k: Int, rounds: Int = 2, l: Int = 4, candIters: Int = 2,
       refineIters: Int = 2): Seq[Array[Double]] = {
     val init = kmeansFitParallel(train, idCol, vecCol, k, rounds, l, candIters)
-    val e = train.select(col(idCol).cast("long").as("__id"),
-      asDouble(col(vecCol)).as("__v")).persist()
-    try lloydRounds(e, init, refineIters) finally e.unpersist(false)
+    withPersisted(kmeansFrame(train, idCol, vecCol))(e =>
+      kmeansLloyd(e, init.map(_.toSeq), refineIters))
   }
 
   /** s20 oracle row — s19's configuration plus 2 full Lloyd refinement
@@ -3801,10 +3631,10 @@ object Similarity {
            |      (acc, x) -> list_transform(range(1, ${dim + 1}), i -> acc[i] + x[i])) AS s
            |   FROM a%R% a JOIN tr t USING (vec_id) GROUP BY a.cl""".stripMargin
     // spherical mode: the round mean projects back to the unit sphere —
-    // exactly lloydRounds' driver-side renormalize (sequential square-sum
+    // exactly lloyd's driver-side renormalize (sequential square-sum
     // ≡ list_dot_product(mv, mv), then one IEEE sqrt and per-element
     // divide). A zero-norm mean yields NULL so the c$r coalesce keeps the
-    // previous centroid — the same guard as lloydRounds' nrm == 0 branch.
+    // previous centroid — the same guard as lloyd's nrm == 0 branch.
     val meanVec =
       if (spherical)
         """CASE WHEN list_dot_product(mv, mv) = 0 THEN NULL

@@ -930,6 +930,10 @@ class DedupOpsSpec extends SparkSpec {
       .select($"query_id", $"id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(cover == brute)
+    // training is deterministic: a second fit reproduces every double
+    def fit() = Similarity.ivfPqTrain(embs, "vec_id", "embedding",
+      nlist = 8, m = 8, ksub = 16, iters = 1)
+    assert(fit() == fit(), "IVF-PQ training must be bit-reproducible")
     // ...independent of sampled coarse+PQ training (both ride one sample):
     // training shapes only list assignment and ADC ordering, and the
     // covering configuration erases both
@@ -952,47 +956,6 @@ class DedupOpsSpec extends SparkSpec {
       s"mean IVF-PQ recall@5 too low: ${recall.sum / recall.size}")
   }
 
-  test("ivfPqTrainDet: deterministic model serves the same search path (covering = brute)") {
-    val queries = embs.filter($"vec_id" < 20)
-    val brute = DedupOps.knn(embs, queries, "vec_id", "embedding", 5)
-      .select($"query_id", $"id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // the id-sorted-fold trainer plugs into the unchanged encode/search:
-    // covering config must still be exactly brute force
-    val model = Similarity.ivfPqTrainDet(embs, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, iters = 1)
-    val cover = Similarity.ivfPqSearch(model,
-        Similarity.ivfPqEncode(model, embs, "vec_id", "embedding"),
-        embs, queries, "vec_id", "embedding", k = 5, nprobe = 8, refine = 200)
-      .select($"query_id", $"id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    assert(cover == brute)
-    // training is deterministic: a second fit reproduces every double
-    val again = Similarity.ivfPqTrainDet(embs, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, iters = 1)
-    assert(model == again, "det training must be bit-reproducible")
-    // non-covering production shape keeps a useful recall floor
-    val approx = Similarity.ivfPqSearch(model,
-        Similarity.ivfPqEncode(model, embs, "vec_id", "embedding"),
-        embs, queries, "vec_id", "embedding", k = 5, nprobe = 3, refine = 4)
-      .select($"query_id", $"id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val recall = brute.keys.toSeq.map { q =>
-      (approx.getOrElse(q, Set.empty[Long]) & brute(q)).size.toDouble / brute(q).size
-    }
-    assert(recall.sum / recall.size > 0.4,
-      s"mean det-IVF-PQ recall@5 too low: ${recall.sum / recall.size}")
-    // residual mode: det twin plugs into the same search; covering = brute
-    val rmodel = Similarity.ivfPqTrainDet(embs, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, iters = 1, byResidual = true)
-    val rcover = Similarity.ivfPqSearch(rmodel,
-        Similarity.ivfPqEncode(rmodel, embs, "vec_id", "embedding"),
-        embs, queries, "vec_id", "embedding", k = 5, nprobe = 8, refine = 200)
-      .select($"query_id", $"id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    assert(rcover == brute, "residual det covering must equal brute")
-  }
-
   test("ivfPqKnn byResidual: covering equals brute; residual recall is competitive") {
     val queries = embs.filter($"vec_id" < 20)
     val brute = DedupOps.knn(embs, queries, "vec_id", "embedding", 5)
@@ -1006,6 +969,9 @@ class DedupOpsSpec extends SparkSpec {
       .select($"query_id", $"id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(cover == brute)
+    def fit() = Similarity.ivfPqTrain(embs, "vec_id", "embedding",
+      nlist = 8, m = 8, ksub = 16, iters = 1, byResidual = true)
+    assert(fit() == fit(), "residual IVF-PQ training must be bit-reproducible")
     // production shape: the residual codes spend their ksub cells on the
     // within-list spread, so recall at the same budget must stay at least
     // in the same band as the non-residual path

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.{CurationOps, TextAnalysis, TextOps}
+import graft.ext.{CurationOps, Similarity, TextAnalysis, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -73,6 +73,32 @@ class FoldMeanSpec extends SparkSpec {
     assertStable("charEntropy",
       d => TextAnalysis.charEntropy(d, "doc_id", "text"),
       "doc_id", "char_entropy")
+  }
+
+  test("ANN quantizer training is bit-deterministic across partitionings") {
+    // every IVF/PQ fit runs the one id-sorted Lloyd fold, so a model trained
+    // on one partitioning is the model served on any other
+    val embs = Tables.load(spark, dir, "embeddings")
+    def fits(p: Int): Seq[(String, String)] = {
+      val e = embs.repartition(p)
+      Seq(
+        "ivfPqTrain" -> Similarity.ivfPqTrain(e, "vec_id", "embedding",
+          nlist = 8, m = 8, ksub = 16, iters = 2),
+        "ivfPqTrain byResidual" -> Similarity.ivfPqTrain(e, "vec_id",
+          "embedding", nlist = 8, m = 8, ksub = 16, iters = 2, byResidual = true),
+        "pqTrain" -> Similarity.pqTrain(e, "vec_id", "embedding",
+          m = 8, ksub = 16, iters = 2),
+        // the coarse quantizer behind ivfKnn and semanticDedup; its
+        // fingerprint hashes Double.toString, which round-trips every bit
+        "trainCoarse" -> Similarity.withTrainSample(e, "vec_id", "embedding",
+          262144L)(Similarity.trainCoarse(_, nlist = 8, iters = 2))
+      ).map { case (name, model) => name -> Similarity.modelFingerprint(model) }
+    }
+    val (one, seven) = (fits(1), fits(7))
+    one.zip(seven).foreach { case ((name, a), (_, b)) =>
+      assert(a == b, s"$name: the fit at 7 input partitions differs bit-wise " +
+        "from the 1-partition fit")
+    }
   }
 
   test("foldMean is reassociation-proof where avg(double) is not") {

@@ -43,6 +43,15 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("Similarity has one Lloyd loop: two element-wise mean folds, no twin trainers") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/ext/Similarity.scala"))
+    // the loop's id-sorted mean fold and kmeansFitWeighted's weighted fold
+    val folds = """zip_with\(acc,""".r.findAllMatchIn(src).size
+    assert(folds == 2, s"expected 2 element-wise mean folds, found $folds")
+    val twins = """def\s+(train\w*Det|lloydRounds)\b""".r.findAllIn(src).toList
+    assert(twins.isEmpty, s"a second Lloyd trainer is back: $twins")
+  }
+
   test("the spec session is the shipped session at 4 cores") {
     val conf = spark.conf
     assert(spark.sparkContext.master == "local[4]")

@@ -97,7 +97,7 @@ object IvfSweep {
       val e500 = Tables.loadSpread(spark, dir, "embeddings")
         .filter($"vec_id" < 500).localCheckpoint(true)
       val q = e500.filter($"vec_id" < 20)
-      val model = Similarity.ivfPqTrainDet(e500, "vec_id", "embedding",
+      val model = Similarity.ivfPqTrain(e500, "vec_id", "embedding",
         nlist = 8, m = 8, ksub = 16, iters = 2)
       val u = e500
         .select($"vec_id".as("id"), transform($"embedding", x => x.cast("double")).as("v"))
