@@ -75,8 +75,9 @@ object Bench {
         n -> (if (t.isNaN) -1.0 else t)
       }
     // Layout queries (q38 bucketed copies, q39 partitioned copy) write
-    // their storage layout AT MOST ONCE per dir (content-addressed,
-    // idempotent skip). Time that one-time build separately as layout_s —
+    // their storage layout AT MOST ONCE per source content (derived stores
+    // addressed by the source tables' fingerprints, Tables.cachedDerived).
+    // Time that one-time build separately as layout_s —
     // the timed sweeps below then measure the JOIN/SCAN, not the write, so
     // the 2x gate and round-over-round comparisons compare query plans.
     val layout = oneTime(Seq("q38_bucketed_join", "q39_partition_pruning"))

@@ -107,27 +107,31 @@ object Tables {
     // 16 hex chars (64 bits): at 8 (32 bits) a birthday collision between
     // two data dirs silently reintroduces the cross-dir mutual-eviction /
     // stale-read bug this hash exists to prevent (round-16 ADVICE #2); the
-    // name-length cost is negligible and the legacy-entry regexes
-    // disambiguate by segment count, not segment length
+    // name-length cost is negligible
     java.security.MessageDigest.getInstance("MD5")
       .digest(canonical.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(16)
   }
 
-  /** Content-addressed persisted DERIVED table under
-    * `${java.io.tmpdir}/graft_derived/<name>-<dirHash>-<fp>`: built AT MOST
-    * ONCE per source-table content (the q38 layout / ANN code-table
-    * discipline — Bench times the one-time build in its `sigs`/`layout`
-    * sections; the sweeps then measure the plans a deployment re-runs
-    * against the stored relation). Published via temp-sibling + atomic
-    * rename, so a concurrent gate/bench JVM never reads a half-written
-    * table — it either sees the completed directory or builds its own temp
-    * and loses the rename race benignly (identical content). Superseded
-    * generations of the same `name` FOR THE SAME SOURCE DIR are evicted on
-    * publish ([[dirHash]] scoping — different dirs coexist). Every
-    * parameter that changes the produced rows must be folded into `name`;
-    * trained-model addressing is [[graft.ext.Similarity]]'s cachedCodes
-    * (model-fingerprint half).
+  /** Content-addressed persisted DERIVED table: built AT MOST ONCE per
+    * source-table content and read back with `s.read.parquet`. Bench times
+    * the one-time build in its `sigs`/`layout`/`train` sections; the
+    * sweeps then measure the plans a deployment re-runs against the stored
+    * relation. Every derived store — these tables, the q38/q39/q48
+    * layouts, the ANN code tables — is published by one protocol
+    * ([[publishDerived]]):
+    *  1. build into a temp sibling under `${java.io.tmpdir}/graft_derived`;
+    *  2. mark it complete (`_SUCCESS` at its root), so a directory at the
+    *     final path is always a finished store, whatever wrote it;
+    *  3. rename it atomically to `<name>-<dirHash>-<fp>` — a concurrent
+    *     JVM either sees the completed directory or builds its own temp
+    *     and loses the rename race benignly (identical content); a build
+    *     that throws leaves nothing behind;
+    *  4. evict superseded generations of the same `name` FOR THE SAME
+    *     SOURCE DIR ([[dirHash]] scoping — different dirs coexist).
+    * `fp` is the source table's [[tableFingerprint]], so a table
+    * regenerated under the same path misses and rebuilds. Every parameter
+    * that changes the produced rows must be folded into `name`.
     *
     * `family`: when a PARAMETER rides in the name (the bucket table's
     * adaptive width — `s02bucket_w8` vs `s02bucket_w9`), same-name
@@ -136,16 +140,24 @@ object Tables {
     * entry (a full copy of the float corpus) never matches the new name
     * and lives forever in tmpdir (round-17 ADVICE #1). Passing the
     * parameter-free prefix as `family` widens eviction to EVERY
-    * `<family>*-<dirHash>-*` sibling of the same source dir except the
-    * entry just published — safe because one dir has exactly one live
+    * `<family><digits>-<dirHash>-*` sibling of the same source dir except
+    * the entry just published — safe because one dir has exactly one live
     * parameterization (the parameter is a function of the data). */
   def cachedDerived(s: SparkSession, dir: String, table: String,
       name: String, family: Option[String] = None)(build: => DataFrame)
-      : DataFrame = {
-    val dh = dirHash(dir)
-    val fp = tableFingerprint(dir, table)
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_derived")
-    val path = new java.io.File(root, s"$name-$dh-$fp")
+      : DataFrame =
+    s.read.parquet(publishDerived(dir, table, name, family)(
+      build.write.mode("overwrite").parquet(_)))
+
+  /** The [[cachedDerived]] publish step with a caller-chosen `write` of the
+    * temp path (partitioned, bucketed or multi-directory layouts); returns
+    * the store's path. `key` folds further content into the address —
+    * [[graft.ext.Similarity]]'s code tables pass their model fingerprint,
+    * so a table written under another model misses. One fingerprint walk
+    * per call; `write` runs only on a miss. */
+  private[graft] def publishDerived(dir: String, table: String, name: String,
+      family: Option[String] = None, key: String = "")(
+      write: String => Unit): String = {
     require(family.forall(name.startsWith),
       s"family must prefix the store name, got family=$family name=$name")
     // the '<family><digits>' contract validates BEFORE any build/publish
@@ -159,54 +171,50 @@ object Tables {
         name.substring(f.length).forall(_.isDigit) &&
           name.length > f.length),
       s"family stores must be '<family><digits>', got family=$family name=$name")
-    if (!new java.io.File(path, "_SUCCESS").isFile) {
+    val path = storePath(dir, table, name, key)
+    if (!complete(path)) {
+      val root = path.getParentFile
       val tmp = new java.io.File(root,
-        s".tmp-$name-$dh-$fp-${java.util.UUID.randomUUID}")
-      build.write.mode("overwrite").parquet(tmp.getPath)
-      if (!tmp.renameTo(path) && !new java.io.File(path, "_SUCCESS").isFile) {
-        deleteRecursively(path); tmp.renameTo(path): Unit
-      }
-      if (tmp.isDirectory) deleteRecursively(tmp)
-      // legacy entries are unreachable under the current naming — clean
-      // them up too (segment lengths disambiguate: pre-dirHash rounds wrote
-      // `<name>-<32-hex fp>`, the round-16 8-hex dir hash wrote
-      // `<name>-<8-hex dh>-<32-hex fp>`; current is 16-hex dh + 32-hex fp)
-      val legacy = s"\\Q$name\\E-(?:[0-9a-f]{8}-)?[0-9a-f]{32}".r
-      // sibling parameterizations of the same family for the SAME dir
-      // (`<family><param>-<16-hex dh>-<32-hex fp>`), plus legacy-format
-      // siblings of ANY width (pre-dirHash / 8-hex-dh names are unreachable
-      // under current naming, so deleting them regardless of dir is safe —
-      // same rationale as `legacy` above). The digits-only param segment is
-      // guaranteed by the entry require above (round-18 ADVICE #1).
-      val sibling = family.map(f =>
-        (s"\\Q$f\\E\\d+-\\Q$dh\\E-[0-9a-f]{32}" +
-          s"|\\Q$f\\E\\d+-(?:[0-9a-f]{8}-)?[0-9a-f]{32}").r)
+        s".tmp-${path.getName}-${java.util.UUID.randomUUID}")
+      try {
+        write(tmp.getPath)
+        new java.io.File(tmp, "_SUCCESS").createNewFile(): Unit
+        if (!tmp.renameTo(path) && !complete(path)) {
+          deleteRecursively(path); tmp.renameTo(path): Unit
+        }
+      } finally if (tmp.exists) deleteRecursively(tmp)
+      val dh = dirHash(dir)
+      val sibling = family.map(f => s"\\Q$f\\E\\d+-\\Q$dh\\E-[0-9a-f-]+".r)
       Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
         val n = f.getName
-        if (((n.startsWith(s"$name-$dh-") ||
-              sibling.exists(_.matches(n))) && n != s"$name-$dh-$fp") ||
-            legacy.matches(n))
+        if ((n.startsWith(s"$name-$dh-") || sibling.exists(_.matches(n))) &&
+            n != path.getName)
           deleteRecursively(f)
       }
     }
-    s.read.parquet(path.getPath)
+    path.getPath
   }
 
   /** Read-only REGISTRY PROBE of the [[cachedDerived]] store: does a
-    * COMPLETE (`_SUCCESS`-committed) derived artifact named `name` exist
-    * for the CURRENT content of `<dir>/<table>.parquet`? Never builds —
-    * the probe is the evidence side of "is this index already
-    * maintained?" routing decisions (round-19 verdict #2: the fusion
-    * router's `graphMaintained` flag was caller-asserted; a stale
-    * assertion silently served a full graph build). Content-addressed by
-    * construction: a regenerated dir changes [[tableFingerprint]], so a
-    * stale artifact answers `false`, never "fresh". */
-  def derivedExists(dir: String, table: String, name: String): Boolean = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_derived")
-    val path = new java.io.File(root,
-      s"$name-${dirHash(dir)}-${tableFingerprint(dir, table)}")
-    new java.io.File(path, "_SUCCESS").isFile
-  }
+    * COMPLETE derived artifact named `name` exist for the CURRENT content
+    * of `<dir>/<table>.parquet`? Never builds — the probe is the evidence
+    * side of "is this index already maintained?" routing decisions
+    * (round-19 verdict #2: the fusion router's `graphMaintained` flag was
+    * caller-asserted; a stale assertion silently served a full graph
+    * build). Content-addressed by construction: a regenerated dir changes
+    * [[tableFingerprint]], so a stale artifact answers `false`, never
+    * "fresh". */
+  def derivedExists(dir: String, table: String, name: String): Boolean =
+    complete(storePath(dir, table, name))
+
+  private def storePath(dir: String, table: String, name: String,
+      key: String = ""): java.io.File =
+    new java.io.File(new java.io.File(sys.props("java.io.tmpdir"), "graft_derived"),
+      s"$name-${dirHash(dir)}-${tableFingerprint(dir, table)}" +
+        (if (key.isEmpty) "" else s"-$key"))
+
+  private def complete(store: java.io.File): Boolean =
+    new java.io.File(store, "_SUCCESS").isFile
 
   /** Row count of `<dir>/<table>.parquet`, memoized per JVM on the
     * stat+footer [[tableFingerprint]] — the adaptive-banding width probes

@@ -30,9 +30,10 @@ object Dedup {
     * (d06/d07/d11/d16/c11), built AT MOST ONCE per dir (the q38 layout_s
     * discipline: Bench times the one-time build in its `sigs` section; the
     * sweeps then measure the band-join/component/argmax plans a deployment
-    * actually re-runs against the stored table). Addressed by the dir tag
-    * PLUS a stat fingerprint (name/length/mtime) of documents.parquet, so
-    * a regenerated corpus under an unchanged path gets a fresh table.
+    * actually re-runs against the stored table). Addressed by the dir's
+    * [[graft.Tables.dirHash]] PLUS the stat+footer fingerprint of
+    * documents.parquet, so a regenerated corpus under an unchanged path
+    * gets a fresh table.
     * Signatures are integers ([[DedupOps.withSimhash]]), so the table is
     * bit-identical to the inline computation (DedupOpsSpec pins pairs
     * parity) and every oracle row stays exact. */

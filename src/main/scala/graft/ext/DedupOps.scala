@@ -1516,14 +1516,15 @@ object DedupOps {
       threshold: Double, nlist: Int = 0, iters: Int = 2,
       trainSampleRows: Long = 262144L, targetClusterSize: Long = 4096L): DataFrame = {
     val embedded = df.filter(col(vecCol).isNotNull)
-    val k =
-      if (nlist > 0) nlist
-      else semanticDedupNlist(embedded.count(), targetClusterSize)
+    // one count job per call: the auto k and the training sample's rate
+    // both size from it
+    val rows = if (nlist > 0) None else Some(embedded.count())
+    val k = rows.fold(nlist)(semanticDedupNlist(_, targetClusterSize))
     // k-means trains on the deterministic hash sample (the ivfKnn/pqKnn
     // practice — centroid placement needs a density sketch, not the corpus);
     // cluster ASSIGNMENT below always runs over every row
     val centroids = Similarity.withTrainSample(embedded, idCol, vecCol,
-      trainSampleRows)(Similarity.trainCoarse(_, k, iters))
+      trainSampleRows, rows)(Similarity.trainCoarse(_, k, iters))
     val clustered = embedded
       .withColumn("__cid", Similarity.assignExpr(
         transform(col(vecCol), x => x.cast("double")), centroids))

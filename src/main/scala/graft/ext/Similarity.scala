@@ -347,13 +347,15 @@ object Similarity {
     * already smaller). Same stateless-threshold mechanism as the corpus
     * samplers — reproducible on every run and data subset, unlike
     * `df.sample`'s seed-and-partition-dependent Bernoulli. One cheap
-    * count() sizes the rate. */
-  private def trainSample(c: DataFrame, trainSampleRows: Long): DataFrame = {
+    * count() sizes the rate, unless the caller already counted the frame's
+    * rows (`rows`). */
+  private def trainSample(c: DataFrame, trainSampleRows: Long,
+      rows: Option[Long]): DataFrame = {
     // the sample bounds the Lloyd fold's per-cell member lists; without a
     // cap they would grow with the corpus
     require(trainSampleRows != Long.MaxValue,
       "trainSampleRows = Long.MaxValue would train on the whole corpus; pass a bound")
-    val n = c.count()
+    val n = rows.getOrElse(c.count())
     if (n <= trainSampleRows) c
     else {
       // threshold in the hash's FULL 60-bit range: a coarser (per-million)
@@ -378,11 +380,14 @@ object Similarity {
   /** The ANN training frame: unit vectors (__id, __v) of the corpus,
     * [[trainSample]]d to `trainSampleRows` and persisted for `fit`.
     * Assignment and search always use the FULL corpus; only centroid
-    * positions (an approximation either way) derive from the sample. */
+    * positions (an approximation either way) derive from the sample.
+    * `rows` is the corpus row count when the caller already has it (the
+    * unit-vector projection keeps every row). */
   private[graft] def withTrainSample[T](corpus: DataFrame, idCol: String,
-      vecCol: String, trainSampleRows: Long)(fit: DataFrame => T): T =
+      vecCol: String, trainSampleRows: Long, rows: Option[Long] = None)(
+      fit: DataFrame => T): T =
     withPersisted(trainSample(unitVecs(corpus, idCol, vecCol, "__id")
-      .select(col("__id"), col("__u").as("__v")), trainSampleRows))(fit)
+      .select(col("__id"), col("__u").as("__v")), trainSampleRows, rows))(fit)
 
   /** Nearest-centroid id for a unit-vector column; the centroid matrix is
     * folded into the plan as literals — no shuffle, no UDF. */
@@ -976,66 +981,27 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Content-addressed per-(tag, dir, MODEL) PERSISTED code table — the
-    * [[graft.ext.Dedup.simhashSigTable]] / q38 layout discipline applied
-    * to the ANN codes (round-13 NEXT #1): built AT MOST ONCE per
-    * (dir-content, trained-model) pair, then every s05/s08/s09 call
-    * searches the STORED table instead of re-running the literal-heavy
-    * encode projection per sweep — exactly what a deployment's steady
-    * state does against its written index. Codes are a pure projection of
-    * (model, data), so the store key folds in BOTH fingerprints: the data
-    * stat+footer hash ([[Tables.tableFingerprint]]) AND the model's raw
-    * IEEE-754 bits ([[modelFingerprint]]) — a table written under a
-    * different model (other parameters, or a changed trainer) misses the
-    * cache and re-encodes instead of serving stale codes (round-13/14
-    * ADVICE #1). The write is
-    * build-to-temp-sibling + atomic rename, so a concurrent gate/bench
-    * JVM never reads a half-written table: it either sees the completed
-    * directory or builds its own temp and loses the rename race benignly
-    * (its finished temp replaces an identical table). Superseded
-    * generations of the same tag are deleted on write — content-addressed
-    * garbage otherwise accumulates one dir per data/model generation.
-    * `listSorted` uses the [[saveIvfPqCodes]] inverted-list layout;
-    * otherwise the table range-sorts by id. */
+  /** Per-(tag, dir, MODEL) PERSISTED code table, published through
+    * [[graft.Tables.publishDerived]] (the [[graft.Tables.cachedDerived]]
+    * protocol): built AT MOST ONCE per (dir-content, trained-model) pair,
+    * then every s05/s08/s09 call searches the STORED table instead of
+    * re-running the literal-heavy encode projection per sweep — exactly
+    * what a deployment's steady state does against its written index.
+    * Codes are a pure projection of (model, data), so the address folds in
+    * the model's raw IEEE-754 bits ([[modelFingerprint]]) next to the data
+    * fingerprint — a table written under a different model (other
+    * parameters, or a changed trainer) misses and re-encodes instead of
+    * serving stale codes (round-13/14 ADVICE #1). `listSorted` writes the
+    * [[saveIvfPqCodes]] inverted-list layout; otherwise the table
+    * range-sorts by id. */
   private[graft] def cachedCodes(s: SparkSession, dir: String, tag: String,
-      model: AnyRef, listSorted: Boolean)(build: => DataFrame): DataFrame = {
-    // fold the dir hash into the on-disk name so entries for DIFFERENT data
-    // dirs coexist: tag-wide eviction otherwise let a gate JVM on sf0.001
-    // and a bench JVM on sf1 evict each other's live table mid-scan
-    // (round-15 ADVICE #1, mirrors Tables.cachedDerived)
-    val dh = graft.Tables.dirHash(dir)
-    val fp = Tables.tableFingerprint(dir, "embeddings") + "-" +
-      modelFingerprint(model)
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ann_codes")
-    val path = new java.io.File(root, s"$tag-$dh-$fp")
-    if (!new java.io.File(path, "_SUCCESS").isFile) {
-      val tmp = new java.io.File(root,
-        s".tmp-$tag-$dh-$fp-${java.util.UUID.randomUUID}")
-      if (listSorted) saveIvfPqCodes(build, tmp.getPath)
+      model: AnyRef, listSorted: Boolean)(build: => DataFrame): DataFrame =
+    s.read.parquet(Tables.publishDerived(dir, "embeddings", tag,
+        key = modelFingerprint(model)) { tmp =>
+      if (listSorted) saveIvfPqCodes(build, tmp)
       else build.repartitionByRange(col("id")).sortWithinPartitions(col("id"))
-        .write.mode("overwrite").parquet(tmp.getPath)
-      // atomic publish: rename the finished temp into place; losing the
-      // race to a concurrent identical build is benign (same content)
-      if (!tmp.renameTo(path) && !new java.io.File(path, "_SUCCESS").isFile) {
-        Tables.deleteRecursively(path); tmp.renameTo(path)
-      }
-      if (tmp.isDirectory) Tables.deleteRecursively(tmp)
-      // evict superseded generations of this tag FOR THIS DIR (stale data
-      // OR stale model fingerprints) — mirror of Tables.memoByContent.
-      // Legacy entries (`<tag>-<32hex>-<32hex>` pre-dirHash, or the
-      // round-16 8-hex dir segment) are unreachable under the current
-      // 16-hex naming — clean them up too.
-      val legacy = s"\\Q$tag\\E-(?:[0-9a-f]{8}-)?[0-9a-f]{32}-[0-9a-f]{32}".r
-      Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
-        val n = f.getName
-        if ((n.startsWith(s"$tag-$dh-") && n != s"$tag-$dh-$fp") ||
-            legacy.matches(n))
-          Tables.deleteRecursively(f)
-      }
-    }
-    s.read.parquet(path.getPath)
-  }
+        .write.mode("overwrite").parquet(tmp)
+    })
 
   /** The fixed 500-vector witness slice of s05/s08/s09/s21/s22: every SF
     * has ≥ 500 embeddings with ids dense from 0, so the slice — and every

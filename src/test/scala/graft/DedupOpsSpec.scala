@@ -1083,7 +1083,7 @@ class DedupOpsSpec extends SparkSpec {
     assert(builds == 2, "the rebuilt table serves under the perturbed key")
     // superseded generations of the tag are evicted on write: only the
     // perturbed-model directory remains
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_codes")
+    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_derived")
     val dirs = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("spec_cm-")).map(_.getName).toSeq
     assert(dirs.size == 1, s"superseded code tables must be evicted: $dirs")
@@ -1584,6 +1584,40 @@ class DedupOpsSpec extends SparkSpec {
         threshold = 0.999, nlist = 8, iters = 1)
       .select($"vec_id").as[Long].collect().toSet
     assert(keptNull.contains(200001L))
+  }
+
+  test("semanticDedup with nlist = 0 counts the embeddable rows once") {
+    // the auto k and the training sample's rate share one count job, so
+    // the auto default runs exactly the jobs of the explicit nlist it
+    // resolves to (a second count made it one job more)
+    val corpus = embs.select($"vec_id", $"embedding")
+    val k = DedupOps.semanticDedupNlist(
+      corpus.filter($"embedding".isNotNull).count(), targetClusterSize = 16L)
+    val sc = spark.sparkContext
+    def jobs(nlist: Int): Int = {
+      val group = s"semdedup-jobs-$nlist"
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet(): Unit
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group)
+      try {
+        // training runs eagerly; the returned frame is never executed
+        DedupOps.semanticDedup(corpus, "vec_id", "embedding",
+          threshold = 0.999, nlist = nlist, iters = 1, targetClusterSize = 16L)
+        drainListenerBus()
+        n.get
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    }
+    val explicit = jobs(k)
+    assert(explicit > 0, "training must run jobs")
+    assert(jobs(0) == explicit,
+      "nlist = 0 must add no job over the explicit k it resolves to")
   }
 
   test("semanticDedup default k scales with the corpus (round-12 verdict #5)") {

@@ -43,6 +43,33 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("analytics and ext publish derived stores only through Tables") {
+    // the temp-sibling / completion-mark / rename protocol lives in
+    // Tables.publishDerived; the one exception is Multimodal's fixture
+    // extraction, which copies classpath resources, not a derived table
+    val found = for {
+      sub <- Seq("analytics", "ext")
+      p <- {
+        val st = Files.walk(Paths.get("src/main/scala/graft", sub))
+        try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally st.close()
+      }
+      src = Files.readString(p)
+      idiom <- Seq("\"_SUCCESS\"", "renameTo(", "UUID.randomUUID", "java.io.tmpdir")
+      n = java.util.regex.Pattern.quote(idiom).r.findAllMatchIn(src).size
+      if n > 0
+    } yield (p.getFileName.toString, idiom, n)
+    assert(found == Seq(("Multimodal.scala", "java.io.tmpdir", 1)),
+      s"derived-store publishing outside Tables: $found")
+    val st = Files.walk(Paths.get("src/main/scala"))
+    val dirTags =
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => """def\s+dirTag\b""".r.findFirstIn(Files.readString(p)).isDefined)
+        .map(_.toString).toList
+      finally st.close()
+    assert(dirTags.isEmpty, s"path-keyed store tags are back: $dirTags")
+  }
+
   test("Similarity has one Lloyd loop: two element-wise mean folds, no twin trainers") {
     val src = Files.readString(Paths.get("src/main/scala/graft/ext/Similarity.scala"))
     // the loop's id-sorted mean fold and kmeansFitWeighted's weighted fold

@@ -14,27 +14,6 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
-  /** Deterministically drain the shared listener bus so every
-    * QueryExecutionListener event from actions already run has been
-    * DELIVERED before the assertion reads the counter (round-17 ADVICE
-    * #2: a fixed Thread.sleep races the async bus and can go flaky or
-    * silently vacuous). `listenerBus` is `private[spark]` — public at
-    * the bytecode level, so reflection reaches it without a shim class;
-    * falls back to the old fixed wait if a Spark upgrade renames it. */
-  private def drainListenerBus(): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus")
-        .get.invoke(sc)
-      val wait = bus.getClass.getMethods
-        .filter(_.getName == "waitUntilEmpty").minBy(_.getParameterCount)
-      if (wait.getParameterCount == 0) wait.invoke(bus)
-      else wait.invoke(bus, java.lang.Long.valueOf(30000L))
-      ()
-    } catch { case _: ReflectiveOperationException | _: NoSuchElementException =>
-      Thread.sleep(2000)
-    }
-
   test("q01: ship-date filter reaches the parquet scan (PushedFilters)") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate"), p)
